@@ -25,9 +25,22 @@ Layout:
     engine.py      PipelinePlan -> DataFrame chain (batch & streaming)
 """
 
-from file_d_spark.engine import Pipeline, compile_actions
-from file_d_spark.session import get_spark
-
 __all__ = ["Pipeline", "compile_actions", "get_spark"]
+
+# Resolved on first use (PEP 562), so importing a submodule such as the
+# Python worker daemon (pydaemon) loads no engine, actions or queries.
+_LAZY = {
+    "Pipeline": "file_d_spark.engine",
+    "compile_actions": "file_d_spark.engine",
+    "get_spark": "file_d_spark.session",
+}
+
+
+def __getattr__(name):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+
+    return getattr(importlib.import_module(_LAZY[name]), name)
 
 __version__ = "0.1.0"

@@ -10,12 +10,21 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+# the directory holding the file_d_spark package: Python workers import
+# the worker daemon (file_d_spark.pydaemon) from it, whatever their cwd
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "file_d_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    worker_path = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
+    worker_path = os.pathsep.join(
+        dict.fromkeys([_PKG_ROOT, *filter(None, worker_path.split(os.pathsep))])
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -56,15 +65,19 @@ def get_spark(app_name: str = "file_d_spark", cpus: int | None = None) -> SparkS
         # (long, long) pairs whose array_intersect work is seconds of
         # CPU, and the 1m floor packed it onto 1-3 tasks (measured:
         # dedup_ngram_jaccard 4.8 -> 2.3 s, rolling_zscore 0.49 ->
-        # 0.25 s, graph_pagerank -32%, 18-row sweep -24%, zero
-        # regressions at sf0.1).  16k keeps such stages at full task
-        # fan-out.  Scale behavior: the floor binds ONLY when a
-        # stage's total bytes < partitions x 1m (i.e. tiny shuffles) —
-        # at 100 TB the advisory/parallelism targets dominate and this
-        # setting is inert; on clusters where many tiny tasks are
-        # genuinely costly, raise SPARK_GRAFT_AQE_MIN_PARTITION back
-        # toward 1m (it is the guide's "busy cluster" knob, not a
-        # correctness setting — results are partitioning-invariant).
+        # 0.25 s, graph_pagerank -32%, 18-row sweep -24%).  16k keeps
+        # such stages at full task fan-out.  The full bench showed the
+        # cost, the other side of the same knob: the floor binds
+        # whenever a stage's total bytes < partitions x 1m, and then it
+        # fans byte-tiny shuffles (sketch merges, probe chains) out into
+        # near-empty tasks — at local[32] sketch_overlap went 0.60 ->
+        # 3.07 s and bpe_fertility 1.27 -> 4.03 s, and on a cluster
+        # every such stage schedules one near-empty task per shuffle
+        # partition.  Large stages are unaffected (the advisory size
+        # dominates).  Sizing fan-out to the data instead of the core
+        # count is open work; until then SPARK_GRAFT_AQE_MIN_PARTITION
+        # raises the floor back toward 1m (results are
+        # partitioning-invariant; only speed changes).
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "16k"),
@@ -80,6 +93,11 @@ def get_spark(app_name: str = "file_d_spark", cpus: int | None = None) -> SparkS
         # noise (bucketed_enrich +0.15 s).  AQE skew splitting applies
         # to shuffled-hash joins the same as sort-merge.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        # every Python worker forks from file_d_spark.pydaemon, which
+        # stops each task from re-reading pyspark.zip and the spark-core
+        # jar (see that module)
+        .config("spark.python.daemon.module", "file_d_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

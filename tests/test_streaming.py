@@ -17,7 +17,15 @@ def _write_jsonl(tmpdir, name, rows):
     return path
 
 
-def _run_stream(out_df, query_name, want_rows=None, timeout=120):
+def _count_rows(spark, query_name):
+    return spark.sql(f"SELECT count(*) AS n FROM {query_name}").collect()[0].n
+
+
+def _batch_id(q):
+    return (q.lastProgress or {}).get("batchId", -1)
+
+
+def _run_stream(out_df, query_name, want_rows=None, timeout=120, quiesce=False):
     """Drive a stream and wait for ``want_rows`` rows in the memory
     table, then stop it.  Timer-driven stateful streams
     (applyInPandasWithState with processing-time timeouts) NEVER
@@ -28,7 +36,14 @@ def _run_stream(out_df, query_name, want_rows=None, timeout=120):
     the expectation is safe; rows emitted by LATER timer-flush batches
     need the exact final count.  Falls back to the full timeout (same
     behavior as before) when ``want_rows`` never arrives — the
-    assertions that follow then fail with the real row set."""
+    assertions that follow then fail with the real row set.
+
+    ``quiesce=True`` then lets one more whole trigger commit before the
+    stop and asserts it emitted no rows: polling stops at the expected
+    count, so over-emission in a later batch would otherwise go unseen.
+    The batch that emitted the rows may still be reporting progress when
+    they become visible, so "one more" is two batch ids past the last
+    reported one."""
     spark = out_df.sparkSession
     q = (
         out_df.writeStream.format("memory")
@@ -42,11 +57,16 @@ def _run_stream(out_df, query_name, want_rows=None, timeout=120):
         if q.awaitTermination(1):
             return q  # self-terminated (no pending timers)
         if want_rows is not None:
-            n = spark.sql(
-                f"SELECT count(*) AS n FROM {query_name}"
-            ).collect()[0].n
+            n = _count_rows(spark, query_name)
             if n >= want_rows:
                 break
+    if quiesce and n >= want_rows:
+        last = _batch_id(q)
+        while _batch_id(q) < last + 2 and time.time() < deadline:
+            if q.awaitTermination(0.2):
+                break
+        assert _batch_id(q) >= last + 2 or not q.isActive, "no later trigger ran"
+        assert _count_rows(spark, query_name) == n, "a later trigger emitted rows"
     q.stop()
     q.awaitTermination(30)
     return q
@@ -108,7 +128,7 @@ def test_throttle_stream(spark, stream_reader):
     out = throttle_stream(
         df, key_col="k", ts_col="ts", bucket_interval_s=60, buckets_count=10, limit=3
     )
-    _run_stream(out, "thr", want_rows=4)
+    _run_stream(out, "thr", want_rows=4, quiesce=True)
     got = spark.sql("SELECT k, count(*) c FROM thr GROUP BY k").collect()
     counts = {r.k: r.c for r in got}
     assert counts == {"x": 3, "y": 1}
@@ -329,7 +349,7 @@ def test_throttle_stream_rules(spark, stream_reader):
         }
     )
     out = act.apply(df)
-    _run_stream(out, "thr_rules", want_rows=4)
+    _run_stream(out, "thr_rules", want_rows=4, quiesce=True)
     got = spark.sql(
         "SELECT level, count(*) c FROM thr_rules GROUP BY level"
     ).collect()

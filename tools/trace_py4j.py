@@ -65,14 +65,17 @@ def main():
         release_caches()
 
     cs.ClientServerConnection.send_command = attributing
-    for name in names:
-        CURRENT["q"] = name
-        df = QUERIES[name](spark, sf_dir)
-        df.schema
+    try:
+        for name in names:
+            CURRENT["q"] = name
+            df = QUERIES[name](spark, sf_dir)
+            df.schema
+            CURRENT["q"] = None
+            spark.catalog.clearCache()
+            release_caches()
+    finally:
+        cs.ClientServerConnection.send_command = orig
         CURRENT["q"] = None
-        spark.catalog.clearCache()
-        release_caches()
-    cs.ClientServerConnection.send_command = orig
 
     total = sum(SITES.values())
     print(f"TOTAL attributed trips: {total}", file=sys.stderr)
