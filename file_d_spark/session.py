@@ -98,6 +98,24 @@ def get_spark(app_name: str = "file_d_spark", cpus: int | None = None) -> SparkS
         # jar (see that module)
         .config("spark.python.daemon.module", "file_d_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", worker_path)
+        # streaming checkpoints (offset/commit/source/sink logs,
+        # state-store deltas and their checksums) go through Hadoop's
+        # FileSystem API, not Spark's FileContext default.  Without
+        # native libhadoop, FileContext's local rename shells out via
+        # getFileLinkStatus: 20 forked processes and ~34 ms per
+        # checkpoint file, against 4 and ~11 ms here.  Safe wherever
+        # FileSystem.rename is atomic (POSIX disks, HDFS); Spark falls
+        # back to this manager itself.  A log entry that exists is never
+        # replaced (two runs cannot commit one batch id); a state
+        # version a re-executed batch writes again keeps its first
+        # complete copy, which the manager contract allows.  The files
+        # are the same (.crc sidecars included), so checkpoints written
+        # under the default restart unchanged.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

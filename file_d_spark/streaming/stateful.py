@@ -20,6 +20,14 @@ function (~0.04 s per task for the multiline join).  The worker daemon
 part of that set-up: a 0.2-0.45 s re-read of pyspark.zip and the
 spark-core jar in every task.
 
+Each micro-batch also writes its checkpoint: one offset-log, one
+commit-log, one file-source-log and one file-sink-log entry, plus one
+delta and one checksum file per state partition.  ``get_spark`` writes
+them through Spark's FileSystem-based checkpoint manager: ~11 ms and 4
+forked ``chmod`` processes per file on a local disk without native
+libhadoop, against ~34 ms and 20 forks under Spark's FileContext
+default (4-core host).
+
 Reference semantics:
   join         /root/reference/plugin/action/join/join.go:152-218
                (+ stream timeout flush: pipeline/streamer.go:148-166)

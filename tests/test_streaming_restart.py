@@ -65,7 +65,19 @@ def _inputs_processed(q, n):
     return sum(p["numInputRows"] for p in q.recentProgress) >= n
 
 
-def test_throttle_state_survives_restart(spark, tmp_path):
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+@pytest.mark.parametrize(
+    "first_manager",
+    [None, _CKPT_PKG + "FileContextBasedCheckpointFileManager"],
+    ids=["default", "from_filecontext"],
+)
+def test_throttle_state_survives_restart(spark, tmp_path, first_manager):
+    """from_filecontext: the first leg writes its checkpoint through
+    Spark's FileContext-based manager (Spark's own default), the
+    restart resumes it under the session's manager — no migration."""
     from file_d_spark.streaming import throttle_stream
 
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
@@ -83,10 +95,16 @@ def test_throttle_state_survives_restart(spark, tmp_path):
         {"k": "x", "ts": f"2024-01-01T00:00:0{i}.000Z", "i": i}
         for i in range(3)
     ])
-    _drive(
-        make_query(), out_dir, ckpt,
-        lambda q: len(_read_out(spark, out_dir, schema)) >= 3,
-    )
+    session_manager = spark.conf.get(_CKPT_MANAGER_CONF)
+    if first_manager:
+        spark.conf.set(_CKPT_MANAGER_CONF, first_manager)
+    try:
+        _drive(
+            make_query(), out_dir, ckpt,
+            lambda q: len(_read_out(spark, out_dir, schema)) >= 3,
+        )
+    finally:
+        spark.conf.set(_CKPT_MANAGER_CONF, session_manager)
 
     # batch 2: same bucket.  Survived state -> all 3 dropped;
     # reset state -> all 3 admitted.
@@ -108,6 +126,61 @@ def test_throttle_state_survives_restart(spark, tmp_path):
         f"throttle ring reset across restart: admitted {by_key['x']}"
     )
     assert by_key["y"] == [999]  # the restarted query does admit fresh keys
+
+
+def test_checkpoint_manager_atomic_contract(spark, tmp_path):
+    """The session's checkpoint manager is the FileSystem-based one and
+    keeps the CheckpointFileManager contract restarts rely on:
+    - a write publishes complete bytes and leaves no temp file;
+    - createAtomic without overwrite (every log: offsets, commits,
+      source, sink) refuses an existing file and leaves its bytes
+      alone, so two query instances cannot both commit one batch id;
+    - with overwrite (state-store version files a re-executed batch
+      writes again) it does not raise and the file holds one complete
+      copy — best effort, as the contract allows: on a local disk
+      FileSystem.rename keeps the existing file.
+    Temp files a refused or kept write leaves behind are hidden
+    (dot-prefixed), which log and state-store listings skip."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    fs_pkg = jvm.org.apache.hadoop.fs
+    ckpt_pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = ckpt_pkg.CheckpointFileManager.create(
+        fs_pkg.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getName() == (
+        _CKPT_PKG + "FileSystemBasedCheckpointFileManager"
+    )
+
+    def write(name, data, overwrite):
+        out = mgr.createAtomic(fs_pkg.Path(str(tmp_path / name)), overwrite)
+        out.write(bytearray(data))
+        out.close()
+
+    def temp_files():
+        return [n for n in os.listdir(tmp_path) if ".tmp" in n]
+
+    write("0", b"log entry", False)
+    write("1.delta", b"state v1", True)
+    assert (tmp_path / "0").read_bytes() == b"log entry"
+    assert (tmp_path / "1.delta").read_bytes() == b"state v1"
+    assert temp_files() == []
+
+    with pytest.raises(Py4JJavaError) as err:
+        write("0", b"second writer", False)
+    # Spark raises SparkFileAlreadyExistsException, a subclass
+    assert jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    ).isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == b"log entry"
+
+    write("1.delta", b"state v1 again", True)
+    assert (tmp_path / "1.delta").read_bytes() in (
+        b"state v1", b"state v1 again",
+    )
+    assert all(n.startswith(".") for n in temp_files()), temp_files()
 
 
 def test_cardinality_state_survives_restart(spark, tmp_path):

@@ -5,8 +5,10 @@ is called from 30 queries is a bigger target than a 500-trip site used
 once.
 
 For each trip, walks the Python stack to the innermost frame inside
-the repo (file_d_spark/ or tools/ excluded py4j+pyspark), and counts
-(file:line). Prints the top sites with their per-query spread.
+the repo that is not this script's own (so py4j and pyspark frames,
+which live outside the repo, are skipped; other tools/ modules and
+bench.py count as sites), and counts (file:line). Prints the top sites
+with their per-query spread.
 
 Usage: python tools/trace_py4j.py [sf_dir] [names...]
 """
