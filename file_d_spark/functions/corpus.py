@@ -1543,16 +1543,15 @@ def quantile_thresholds(
     score_col: str,
     quantiles: list | None = None,
 ) -> DataFrame:
-    """Per-group exact quantile thresholds in long format — the batch
-    pair of ``streaming.stateful.quantile_stream`` (one row per
-    (group, quantile) with the integer-rule threshold), and the
+    """Per-group exact quantile thresholds in long format (one row per
+    (group, quantile) with the integer-rule threshold) — the
     multi-quantile generalization of the single-threshold derivation
     inside :func:`adaptive_quality_filter`.
 
     Each threshold is the smallest score s with
     ``den·count(score ≤ s) ≥ num·count(*)`` (quantile = num/den) —
-    exact integer arithmetic, so Spark, DuckDB and the streaming twin
-    agree bit-for-bit over the same rows.
+    exact integer arithmetic, so Spark and DuckDB agree bit-for-bit
+    over the same rows.
 
     Scale shape (the adaptive_quality_filter doctrine): the (group,
     score) groupBy condenses the distribution FIRST — map-side partial
@@ -1561,7 +1560,7 @@ def quantile_thresholds(
     multiplies that bounded frame by len(quantiles), never the corpus.
 
     Returns (group_col, num, den, n_rows, threshold), all metric
-    columns BIGINT.  Null scores are dropped (the twin's rule).
+    columns BIGINT.  Null scores are dropped.
     """
     if quantiles is None:
         quantiles = [(1, 4), (1, 2), (9, 10)]
@@ -1802,9 +1801,8 @@ def assoc_audit(df: DataFrame, cols: list[str]) -> DataFrame:
 
 
 def _assoc_cells(df: DataFrame, cols: list[str]) -> DataFrame:
-    """The tagged (pair, va, vb) cell projection shared by
-    :func:`assoc_audit` and its streaming twin — identical
-    expressions so stream and batch stay bit-identical."""
+    """The tagged (pair, va, vb) cell projection of
+    :func:`assoc_audit`."""
     if len(set(cols)) != len(cols):
         # a repeated column would yield a degenerate self-pair row
         # reporting V = 1 — a spurious "perfect leakage" signal in
@@ -1844,8 +1842,7 @@ def _assoc_cells(df: DataFrame, cols: list[str]) -> DataFrame:
 
 def _assoc_finalize(hist: DataFrame) -> DataFrame:
     """chi-square / Cramér's V from a (pair, va, vb, n_ab double)
-    histogram — shared by batch and the streaming readout so the
-    fixed-point algebra is the same expression tree on both sides."""
+    histogram."""
     w_a = Window.partitionBy("pair", "va")
     w_b = Window.partitionBy("pair", "vb")
     w_p = Window.partitionBy("pair")

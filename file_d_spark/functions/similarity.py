@@ -2124,9 +2124,7 @@ def embedding_stats(
     the merged result is bit-identical to the unsharded algebra and
     independent of the (nondeterministic) shard assignment.  Sharded
     output carries ``sum_fp``/``sumsq_fp`` as DECIMAL(38,0) instead
-    of BIGINT; every derived column is unchanged.  (The streaming
-    twin needs neither: its Python state holds arbitrary-precision
-    ints.)
+    of BIGINT; every derived column is unchanged.
 
     Scale shape: one posexplode (dim fan-out is the vector width, not
     the corpus) into ONE partially-aggregated groupBy on the tiny
@@ -2218,10 +2216,9 @@ def embedding_stats(
 
 
 def _embedding_stats_cells(df: DataFrame, vec_col: str) -> DataFrame:
-    """The per-cell projection shared by :func:`embedding_stats` and
-    its streaming twin: (dim, fin, v_fp, cl) with the finite test,
-    the ±8 clamp and the 2^20 fixed point — identical expressions so
-    stream and batch stay bit-identical."""
+    """The per-cell projection of :func:`embedding_stats`: (dim, fin,
+    v_fp, cl) with the finite test, the ±8 clamp and the 2^20 fixed
+    point."""
     v = F.col("v").cast("double")
     # a NULL cell is a broken input too: the raw predicate yields NULL
     # for it, which would count it in n but in NEITHER n_nonfinite nor
@@ -2251,8 +2248,8 @@ def _embedding_stats_finalize(
     agg: DataFrame, extra_cols: tuple = ()
 ) -> DataFrame:
     """Derive mean/std from the exact integer aggregates — shared by
-    batch and stream so the IEEE derivation is the same expression
-    tree on both sides."""
+    the sharded and unsharded paths so the IEEE derivation is the
+    same expression tree on both."""
     scale = F.lit(1048576.0)
     nf = (F.col("n") - F.col("n_nonfinite")).cast("double")
     mean = F.when(

@@ -102,9 +102,8 @@ def hll_distinct(
 
 
 def hll_prep(df: DataFrame, group_col: str, value_col: str, b: int) -> DataFrame:
-    """(g, bucket, rank) triples — the shared front half of the batch
-    operator and its streaming twin, so both sides hash and rank with
-    the same Spark expressions."""
+    """(g, bucket, rank) triples — the front half of
+    :func:`hll_distinct`."""
     m = 1 << b
     rem = HASH_BITS - b
     h = _h32(F.col(value_col))
@@ -113,9 +112,9 @@ def hll_prep(df: DataFrame, group_col: str, value_col: str, b: int) -> DataFrame
         F.lit(rem) - F.length(F.bin(w)) + 1
     )
     # null values hash to a null bucket row that would inflate
-    # count(*) (so `zeros` undercounts) and crash the streaming twin's
-    # register indexing — a null contributes nothing to a distinct
-    # count, so drop it here, mirrored by the oracle's WHERE
+    # count(*) (so `zeros` undercounts) — a null contributes nothing
+    # to a distinct count, so drop it here, mirrored by the oracle's
+    # WHERE
     df = df.where(F.col(value_col).isNotNull())
     return df.select(
         F.col(group_col).alias("g"),
@@ -127,7 +126,7 @@ def hll_prep(df: DataFrame, group_col: str, value_col: str, b: int) -> DataFrame
 def hll_estimate_col(b: int):
     """The estimator over (zeros, sum_fp) columns — one double
     division (or the linear-counting branch), shared by the batch
-    operator, the streaming twin, and (textually) the oracle."""
+    operator and (textually) the oracle."""
     m = 1 << b
     coef = hll_alpha(m) * m * m * float(1 << 40)
     raw = F.lit(coef) / F.col("sum_fp").cast("double")

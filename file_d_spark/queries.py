@@ -1349,8 +1349,7 @@ def q_rolling_zscore(spark, sf_dir):
     event_type) — (users x types) cardinality distributes; a per-type-
     only baseline would concentrate 100 TB into a handful of
     partitions.  The frame is bounded (20 rows), so state per key is
-    O(1); the streaming twin is a sliding-window agg over the same
-    keys."""
+    O(1)."""
     e = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id", "event_type")
@@ -5304,12 +5303,10 @@ _QUANTILE_THRESHOLDS_ORACLE = """
 @query("quantile_thresholds", _QUANTILE_THRESHOLDS_ORACLE)
 def q_quantile_thresholds(spark, sf_dir):
     """Per-language exact quantile thresholds of n_chars (1/4, 1/2,
-    9/10) in long format — the filtering-threshold calibration pass,
-    and the batch pair of the ``quantile_stream`` streaming twin
-    (bit-parity asserted in tests/test_streaming.py).  Histogram-then-
-    cumsum over (lang, n_chars) — the shuffle carries one row per
-    DISTINCT value per group, not per document.  Promoted from the
-    staged pool at r13 (staged r10)."""
+    9/10) in long format — the filtering-threshold calibration pass.
+    Histogram-then-cumsum over (lang, n_chars) — the shuffle carries
+    one row per DISTINCT value per group, not per document.  Promoted
+    from the staged pool at r13 (staged r10)."""
     d = load_table(spark, sf_dir, "documents")
     return corpus.quantile_thresholds(d, "lang", "n_chars")
 

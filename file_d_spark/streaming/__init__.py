@@ -1,52 +1,18 @@
-"""Structured Streaming layer: stateful + stateless operators and the
-stream runner."""
+"""Structured Streaming layer: the stateful quartet (multiline join,
+throttle, cardinality, antispam) that the ``join``/``join_template``,
+``throttle``, ``cardinality`` and ``antispam`` actions run on a
+streaming frame."""
 
-from file_d_spark.streaming.stateless import decontaminate_stream
 from file_d_spark.streaming.stateful import (
     antispam_stream,
-    assoc_audit_stream,
-    assoc_readout,
-    bloom_dedup_stream,
-    bpe_apply_stream,
     cardinality_stream,
-    cms_point_query,
-    cms_readout,
-    cms_stream,
-    dedup_stream,
-    embedding_stats_stream,
-    f2_readout,
-    f2_stream,
     multiline_join_stream,
-    hll_distinct_stream,
-    quantile_stream,
-    kmv_distinct_stream,
-    rolling_zscore_stream,
-    weighted_sample_stream,
-    sessionize_stream,
     throttle_stream,
 )
 
 __all__ = [
     "antispam_stream",
-    "assoc_audit_stream",
-    "assoc_readout",
-    "decontaminate_stream",
-    "bloom_dedup_stream",
-    "bpe_apply_stream",
     "cardinality_stream",
-    "cms_point_query",
-    "cms_readout",
-    "cms_stream",
-    "dedup_stream",
-    "embedding_stats_stream",
-    "f2_readout",
-    "f2_stream",
     "multiline_join_stream",
-    "hll_distinct_stream",
-    "quantile_stream",
-    "kmv_distinct_stream",
-    "rolling_zscore_stream",
-    "weighted_sample_stream",
-    "sessionize_stream",
     "throttle_stream",
 ]

@@ -879,10 +879,9 @@ def test_cohort_retention_no_windows(spark):
 
 
 def test_quantile_thresholds_matches_adaptive_filter(spark):
-    """quantile_thresholds (long-format, multi-quantile — the batch
-    pair of the quantile_stream twin) must produce the SAME integer
-    thresholds adaptive_quality_filter derives one quantile at a time,
-    and count rows exactly (nulls dropped, the twin's rule)."""
+    """quantile_thresholds (long-format, multi-quantile) must produce
+    the SAME integer thresholds adaptive_quality_filter derives one
+    quantile at a time, and count rows exactly (nulls dropped)."""
     import random
 
     rng = random.Random(0xA1)

@@ -111,8 +111,7 @@ def test_null_values_dropped_everywhere(spark):
     """ADVICE r9: a null value contributes nothing to a distinct
     count.  Every sketch must produce the SAME output with null rows
     injected — previously a null hashed to a null bucket/hash row that
-    skewed zeros (HLL), stole a NULLS-FIRST k-slot (KMV/overlap), and
-    crashed the streaming twins."""
+    skewed zeros (HLL) and stole a NULLS-FIRST k-slot (KMV/overlap)."""
     clean = _vals(spark, 300)
     nulled = clean.union(
         spark.range(3).select(

@@ -604,25 +604,6 @@ def test_multiline_stream_max_event_size_and_missing_source(spark, stream_reader
     assert "source_id" not in cols  # synthetic key dropped from output
 
 
-def test_bloom_dedup_stream_drops_null_content(spark, stream_reader):
-    """Batch parity: bloom_dedup's ~might_contain is NULL for null
-    content and drops the row; the stream must not admit a null as the
-    string 'None' (which would also collide with real \"None\" text)."""
-    from file_d_spark.streaming import bloom_dedup_stream
-
-    rows = [
-        {"c": None, "i": 0},
-        {"c": "None", "i": 1},   # REAL text "None" — must be admitted
-        {"c": None, "i": 2},
-        {"c": "x", "i": 3},
-    ]
-    df = stream_reader(rows, "c string, i long")
-    out = bloom_dedup_stream(df, "c")
-    _run_stream(out, "bloom_null", want_rows=2)
-    got = sorted(r.i for r in spark.sql("SELECT i FROM bloom_null").collect())
-    assert got == [1, 3], got
-
-
 def test_cardinality_batch_stream_parity(spark, stream_reader):
     """With the r10 check-before-insert fix the streaming cardinality
     admission equals the batch SEQUENTIAL path (order_fields) over the
@@ -660,3 +641,25 @@ def test_cardinality_batch_stream_parity(spark, stream_reader):
         r.i for r in spark.sql("SELECT i FROM card_parity").collect()
     )
     assert stream_out == batch_out, (stream_out, batch_out)
+
+
+def test_streaming_exports_only_what_actions_import():
+    """The streaming package exports exactly the operators a pipeline
+    config reaches: the names ``file_d_spark/actions/*.py`` import from
+    ``file_d_spark.streaming``.  An operator no action runs is dead
+    code with a restart surface of its own."""
+    import ast
+    import pathlib
+
+    import file_d_spark.streaming as streaming
+
+    actions = pathlib.Path(streaming.__file__).parents[1] / "actions"
+    imported = set()
+    for path in actions.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "file_d_spark.streaming"
+            ):
+                imported.update(alias.name for alias in node.names)
+    assert sorted(streaming.__all__) == sorted(imported)
