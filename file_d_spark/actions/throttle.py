@@ -20,12 +20,12 @@ Batch semantics:
                (key, bucket), which AQE splits if a key is skewed;
                limit_distribution configs switch to an exact
                sequential replay per (key, bucket, rule) because
-               default-reserve stealing is order-dependent — since
-               r13 a JVM-side generated ``aggregate()`` fold (no
-               Python in the plan); an Arrow applyInPandas replay
-               remains as the fallback for schemas with unorderable
-               column types (maps, variants, …) and as the A/B
-               parity harness (``exact_backend: arrow``).
+               default-reserve stealing is order-dependent: a
+               JVM-side generated ``aggregate()`` fold over the
+               group's sorted events, with no Python in the plan for
+               any schema (maps and variants included).
+               ``limiter_backend`` accepts only ``memory``: limits
+               are enforced by this application's own limiter.
   cardinality  per-key distinct count of a field; keys over ``limit``
                either drop their events, lose the field, or pass.
   antispam     per-(source, maintenance-window) counts; sources over
@@ -97,13 +97,14 @@ def _rule_dlims(spec: dict) -> list[int] | None:
 
 def _type_unorderable(dt) -> bool:
     """True if the type tree contains a type Catalyst can't order —
-    structs with such fields can't go through array_sort, so the JVM
-    exact-replay path cannot be planned and the Arrow replay must
-    take over.  A WHITELIST mirroring RowOrdering.isOrderable
-    (atomic/null orderable; struct/array/UDT recurse; everything
-    else — map, variant, calendar-interval, future types — fails
-    CLOSED to the Arrow route) rather than a blacklist that each new
-    unorderable type would slip past."""
+    structs with such fields can't go through a plain array_sort, so
+    the distribution fold sorts their events with a comparator over
+    the order keys instead (``_event_sort_sql``).  A WHITELIST
+    mirroring RowOrdering.isOrderable (atomic/null orderable;
+    struct/array/UDT recurse; everything else — map, variant,
+    calendar-interval, future types — fails CLOSED to the
+    comparator) rather than a blacklist that each new unorderable
+    type would slip past."""
     from pyspark.sql import types as T
 
     if isinstance(dt, T.StructType):
@@ -123,9 +124,8 @@ def _type_unorderable(dt) -> bool:
 def _didx_expr(specs: list[dict], schema) -> Column:
     """Per-row distribution index: 0 = the matched rule's default
     group, j+1 = its ratios[j] (idxByKey semantics), -1 for rules
-    without a distribution — ONE definition shared by the Arrow
-    replay, the JVM fold, and the streaming state path so the three
-    backends cannot desynchronize."""
+    without a distribution — ONE definition shared by the batch fold
+    and the streaming state path so the two cannot desynchronize."""
     didx = F.lit(-1)
     for i, s in enumerate(specs):
         d = s["dist"]
@@ -145,7 +145,7 @@ def _didx_expr(specs: list[dict], schema) -> Column:
 
 def _counted_expr(specs: list[dict], size_col: Column) -> Column:
     """Per-row counted value: 1 for count-kind rules, the size column
-    for size-kind ones — shared by all three admission backends."""
+    for size-kind ones — shared by every admission path."""
     counted = F.lit(1)
     for i, s in enumerate(specs):
         if s["kind"] == "size":
@@ -156,11 +156,11 @@ def _counted_expr(specs: list[dict], size_col: Column) -> Column:
 
 
 def _dist_fold_sql(spec: dict, evs: str = "__evs__") -> str:
-    """One rule's sequential-admission replay as a Spark SQL
-    ``aggregate()`` fold over the sorted event array — the JVM twin of
-    ``_admit_exact``'s Python loop (in_memory_limiter.go isAllowed +
-    getDistrData), generated as SQL text (the product_quantize
-    pattern: one expr, no py4j Column-building per step).
+    """One rule's sequential-admission replay (in_memory_limiter.go
+    isAllowed + getDistrData) as a Spark SQL ``aggregate()`` fold over
+    the sorted event array, generated as SQL text (the
+    product_quantize pattern: one expr, no py4j Column-building per
+    step).
 
     Accumulator: (occ array<bigint> — per-distribution bucket
     occupancy, charged by EVERY counted event, admitted or not, like
@@ -176,8 +176,7 @@ def _dist_fold_sql(spec: dict, evs: str = "__evs__") -> str:
     which is 0 for an empty-string field, and zero-cost events admit
     without consuming budget, so a group flooded with empty-field
     events degrades the kept copy to quadratic (admission results
-    stay correct and Arrow-identical; only the linearity bound
-    weakens — the Arrow backend is the escape hatch for that shape)."""
+    stay correct; only the linearity bound weakens)."""
     lim = int(spec["limit"])
     if lim < 0:
         return evs  # negative limit = unlimited: every event admitted
@@ -223,6 +222,48 @@ def _dist_fold_sql(spec: dict, evs: str = "__evs__") -> str:
     return f"aggregate({evs}, {init}, (acc, e) -> {merge}, acc -> acc.kept)"
 
 
+def _event_sort_sql(n_order: int, unorderable: bool) -> str:
+    """Sort of one group's collected events (``__evs__``, structs of
+    ``t``, ``o0..``, ``d``, ``c`` and payload ``p``) into arrival
+    order.  Orderable schemas take Catalyst's total struct order,
+    whose payload tiebreak makes ties deterministic.  A payload
+    Catalyst can't order (maps, variants) is sorted by a comparator
+    over the order keys alone — nulls first, as in the struct order —
+    and, the sort being stable, keeps ties in collected order."""
+    if not unorderable:
+        return "array_sort(__evs__)"
+    keys = ["t"] + [f"o{i}" for i in range(n_order)] + ["d", "c"]
+    whens = " ".join(
+        f"WHEN l.{k} IS NULL AND r.{k} IS NOT NULL THEN -1 "
+        f"WHEN l.{k} IS NOT NULL AND r.{k} IS NULL THEN 1 "
+        f"WHEN l.{k} < r.{k} THEN -1 WHEN l.{k} > r.{k} THEN 1"
+        for k in keys
+    )
+    return f"array_sort(__evs__, (l, r) -> CASE {whens} ELSE 0 END)"
+
+
+def _check_limiter_backend(backend) -> None:
+    """``limiter_backend`` (throttle.go:97-102) selects where limiter
+    state lives.  Only ``memory`` is supported: inside one Spark
+    application the limiter state is already shared across the
+    cluster (the batch window, the streaming state store), and a
+    redis backend that only fetched central limits, without
+    publishing consumption, would let separate applications overrun
+    one shared budget.  The older dict form carried redis options."""
+    if isinstance(backend, dict):
+        backend = "redis" if backend else None
+    if backend == "redis":
+        raise ValueError(
+            "throttle: limiter_backend 'redis' is not supported; limits "
+            "are enforced by this application's in-memory limiter (use "
+            "limiter_backend: memory or drop the key)"
+        )
+    if backend not in (None, "memory"):
+        raise ValueError(
+            f"limiter_backend must be memory|redis, got {backend!r}"
+        )
+
+
 def _require_ungated_stream(pred: Column | None, name: str) -> None:
     """Streaming statefuls run through applyInPandasWithState keyed on
     the op's own key — a do_if gate would need a second keyed state
@@ -240,79 +281,19 @@ def _require_ungated_stream(pred: Column | None, name: str) -> None:
 @register("throttle")
 class Throttle(Action):
     def apply_impl(self, df: DataFrame, pred: Column | None) -> DataFrame:
+        _check_limiter_backend(self.params.get("limiter_backend"))
+        specs, rule_idx, size_col, ts = self._rules(df)
         if df.isStreaming:
-            return self._apply_stream(df, pred)
+            return self._apply_stream(df, pred, specs, rule_idx, size_col, ts)
         key_field = self.params.get("throttle_field", "")
-        time_field = self.params.get("time_field", "time")
-        time_fmt = self.params.get("time_field_format", "rfc3339nano")
         bucket_s = _parse_duration_seconds(self.params.get("bucket_interval"), 60.0)
         buckets_count = int(self.params.get("buckets_count", 60))
-        limit = int(self.params.get("default_limit", 5000))
-        limit_kind = self.params.get("limit_kind", "count")
-        size_field = self.params.get("limit_size_field", "")
-
-        # rule list: config rules in order, then the implicit default
-        # rule (matches everything) — first match wins, and each rule
-        # owns its own limiters (throttle.go:117-125,467-475: limiter
-        # key embeds the rule index, so counting is per (rule, key))
-        specs = []
-        for rcfg in self.params.get("rules") or []:
-            specs.append(
-                {
-                    "limit": int(rcfg.get("limit", limit)),
-                    "kind": rcfg.get("limit_kind", "count"),
-                    "conditions": rcfg.get("conditions") or {},
-                    "dist": rcfg.get("limit_distribution") or {},
-                }
-            )
-        specs.append(
-            {
-                "limit": limit,
-                "kind": limit_kind,
-                "conditions": {},
-                "dist": self.params.get("limit_distribution") or {},
-            }
-        )
-        for s in specs:
-            if s["dist"].get("field") or s["dist"].get("ratios"):
-                _validate_distribution(s["dist"])
 
         key = (
             get_col_safe(parse_selector(key_field), df.schema).cast("string")
             if key_field
             else F.lit("")
         )
-        tcol = get_col_safe(parse_selector(time_field), df.schema)
-        from pyspark.sql import types as T
-
-        t = df.schema[time_field].dataType if time_field in df.columns else None
-        # loud on un-timestampable types; parse failures -> null bucket
-        # (never backfill wall clock — see round-2 postmortem)
-        ts = xtime.ensure_timestamp(tcol, t, time_fmt, context="throttle time_field")
-
-        # first matching rule index (conditions are an AND field map,
-        # rule.go:50-59: string equality per field)
-        def rule_cond(conditions: dict) -> Column:
-            cond = F.lit(True)
-            for fld, val in conditions.items():
-                col = get_col_safe(parse_selector(str(fld)), df.schema)
-                cond = cond & (col.cast("string") == F.lit(str(val)))
-            return cond
-
-        rule_idx = F.lit(len(specs) - 1)
-        for i in reversed(range(len(specs) - 1)):
-            rule_idx = F.when(rule_cond(specs[i]["conditions"]), F.lit(i)).otherwise(
-                rule_idx
-            )
-
-        size_col = (
-            F.octet_length(
-                get_col_safe(parse_selector(size_field), df.schema).cast("string")
-            )
-            if size_field
-            else F.lit(1)
-        )
-
         # micros-based buckets so sub-second intervals (100ms in the
         # reference tests) don't truncate to a zero-width bucket
         bucket_us = max(1, int(bucket_s * 1e6))
@@ -352,235 +333,38 @@ class Throttle(Action):
                 max_bucket,
             ).otherwise(F.col("__fd_bucket__")),
         )
-        # arrival order within a bucket; extra order_fields give a
-        # deterministic tiebreak for equal timestamps (batch mode)
-        order_cols = [F.col("__fd_ts__")] + [
-            F.col(c) for c in self.params.get("order_fields", [])
-        ]
 
         helper_cols = [
             "__fd_key__", "__fd_bucket__", "__fd_ts__",
             "__fd_m__", "__fd_hmax__", "__fd_rule__",
         ]
-        any_dist = any(
-            s["dist"].get("field") and s["dist"].get("ratios") for s in specs
-        )
-        if any_dist:
+        order_fields = list(self.params.get("order_fields", []))
+        if any(_rule_dlims(s) is not None for s in specs):
             # distributions have sequential semantics — a default-group
             # event over its reserve STEALS from the most-free
             # distribution at that instant (in_memory_limiter.go
             # getDistrData) — which no window expression can replay.
             # Exact replay per (key, bucket, rule) group; parallelism
             # across groups, faithful sequential replay within one.
-            # Default backend is a JVM-side aggregate() fold (r13 —
-            # no Python in the plan); the Arrow applyInPandas replay
-            # stays as the fallback for schemas the fold's struct
-            # array_sort can't order (maps, variants) and as the A/B
-            # parity harness (exact_backend: arrow).
-            backend = self.params.get("exact_backend") or (
-                "arrow" if _type_unorderable(df.schema) else "jvm"
-            )
-            admit = (
-                self._admit_exact_jvm if backend == "jvm" else self._admit_exact
-            )
-            return admit(
-                df,
-                specs,
-                size_col,
-                list(self.params.get("order_fields", [])),
-                helper_cols,
+            return self._admit_exact(
+                df, specs, size_col, order_fields, helper_cols
             )
 
         # per-row (counted value, limit) from the matched rule — the
         # counted value through the SAME shared projection the
-        # dist/stream/Arrow backends use (one definition, no drift)
+        # dist/stream paths use (one definition, no drift)
         counted = _counted_expr(specs, size_col)
-        limit_col = F.lit(limit)
+        limit_col = F.lit(specs[-1]["limit"])
         for i, spec in enumerate(specs):
             limit_col = F.when(
                 F.col("__fd_rule__") == i, F.lit(spec["limit"])
             ).otherwise(limit_col)
 
-        # shared (cross-pipeline) limits: central overrides fetched at
-        # plan-build time — the batch analogue of the reference's
-        # periodic updateKeyLimit tick (redis_limiter.go:242-277);
-        # bounded driver model (<= max_tracked_values entries), applied
-        # as a literal-map lookup so the plan stays a pure projection
-        backend_cfg = self.params.get("limiter_backend")
-        if isinstance(backend_cfg, str):
-            # reference config shape (throttle.go:97-102):
-            # limiter_backend selects memory|redis and the options live
-            # under redis_backend_config; the dict-valued form of
-            # limiter_backend is kept for back-compat
-            if backend_cfg not in ("memory", "redis"):
-                raise ValueError(
-                    f"limiter_backend must be memory|redis, got {backend_cfg!r}"
-                )
-            backend_cfg = (
-                dict(self.params.get("redis_backend_config") or {})
-                if backend_cfg == "redis"
-                else None
-            )
-        if backend_cfg:
-            from file_d_spark.actions.redis_limiter import fetch_limit_overrides
-
-            # limiter_key_field (throttle.go:246,543-545): the event
-            # field's VALUE becomes the redis limit key, overriding the
-            # <pipeline>_<field>_<value>_limit naming pattern.  The
-            # reference's limitersMap.getOrAdd keys the limiter by
-            # (rule, throttleKey) alone (limiters_map.go:266-290), so
-            # the FIRST event's override sticks for that key — the
-            # lookup below therefore resolves each (key, rule) group to
-            # the lkey of its first GATE-MATCHED event (by the same
-            # arrival order the admission window uses, with the lkey
-            # value itself as a final deterministic tiebreak: when
-            # timestamps tie and no order_fields are set, there is no
-            # defined arrival order, and without the tiebreak which
-            # matched event donates its lkey would vary run to run),
-            # not to each event's own — gated-out rows never reach
-            # getOrAdd in the reference (processor.go skips the action
-            # entirely), so they must not donate the override either.
-            # The struct wrap keeps a matched-but-null lkey (field
-            # absent) as the governing first: the reference then passes
-            # keyLimitOverride="" and the limiter falls back to the
-            # <pipeline>_<field>_<value>_limit NAMING-PATTERN fetch
-            # keyed by the throttle key (redis_limiter.go keyLimit
-            # construction) — mirrored below by the second override map.
-            lkf = str(backend_cfg.get("limiter_key_field", "") or "")
-
-            def _lit_map(d: dict):
-                return F.create_map(
-                    *[
-                        x
-                        for kv in sorted(d.items())
-                        for x in (F.lit(kv[0]), F.lit(kv[1]))
-                    ]
-                )
-
-            if lkf:
-                df = df.withColumn(
-                    "__fd_lkey__",
-                    get_col_safe(parse_selector(lkf), df.schema).cast("string"),
-                )
-                helper_cols.append("__fd_lkey__")
-                w_lim = Window.partitionBy(
-                    "__fd_key__", "__fd_rule__"
-                ).orderBy(*order_cols, F.col("__fd_lkey__").asc_nulls_last())
-                lookup = F.first(
-                    F.when(
-                        F.col("__fd_m__"),
-                        F.struct(F.col("__fd_lkey__").alias("v")),
-                    ),
-                    ignorenulls=True,
-                ).over(w_lim).getField("v")
-                # ONE plan-build Spark job feeds both fetches: the
-                # per-COLUMN distincts ride a union tagged by side, so
-                # each column keeps its own max_tracked_values cap —
-                # a (key, lkey) PAIR distinct would let combinatorial
-                # mixes evict a rare key whose own column is well
-                # under the cap (review finding, r12).  Each side is
-                # capped BEFORE collection by orderBy+limit (a top-k
-                # TakeOrdered, bounded per-partition then merged) —
-                # never an unbounded collect_set buffer — and asc
-                # order keeps the kept set deterministic: the
-                # lexicographically smallest cap values, exactly what
-                # the previous sort-then-slice produced.  A
-                # user-configured `values` list keeps its documented
-                # meaning (lkey values, the keys_are_limit_keys
-                # semantic); throttle keys always come from the frame.
-                cap = int(backend_cfg.get("max_tracked_values", 10000))
-
-                def _side(col, tag: str):
-                    return (
-                        df.select(col.cast("string").alias("v"))
-                        .where(F.col("v").isNotNull())
-                        .distinct()
-                        .orderBy("v")
-                        .limit(cap)
-                        .select(F.lit(tag).alias("side"), "v")
-                    )
-
-                both_rows = (
-                    _side(F.col("__fd_key__"), "k")
-                    .unionByName(_side(F.col("__fd_lkey__"), "l"))
-                    .collect()
-                )
-                both = {
-                    "ks": sorted(
-                        r["v"] for r in both_rows if r["side"] == "k"
-                    ),
-                    "ls": sorted(
-                        r["v"] for r in both_rows if r["side"] == "l"
-                    ),
-                }
-                user_values = backend_cfg.get("values")
-                # "" is the reference's keyLimitOverride-absent marker,
-                # never a redis limit key — exclude it from the fetch
-                # (a user-supplied list is scrubbed the same way;
-                # collect_set already drops nulls)
-                lkeys = sorted(
-                    (
-                        set(user_values)
-                        if user_values is not None
-                        else set(both["ls"])
-                    )
-                    - {None, ""}
-                )[:cap]
-                keys = list(both["ks"])
-                lk_cfg = {**backend_cfg, "values": lkeys}
-                # both fetches keep limits_file persistence; the
-                # fallback namespaces its snapshot rows (rule_letter
-                # suffixed ':np' for the naming-pattern map) so an
-                # lkey-keyed row can't masquerade as a throttle key's
-                # central limit across a redis outage — and vice versa
-                fb_cfg = dict(backend_cfg)
-                fb_cfg["rule_letter"] = (
-                    f"{backend_cfg.get('rule_letter', 'a')}:np"
-                )
-                fb_cfg["values"] = keys
-                overrides = fetch_limit_overrides(
-                    df.select("__fd_lkey__"), "__fd_lkey__", key_field,
-                    lk_cfg, limit, bucket_s,
-                    keys_are_limit_keys=True,
-                )
-                fallback = fetch_limit_overrides(
-                    df.select(F.col("__fd_key__")), "__fd_key__", key_field,
-                    fb_cfg, limit, bucket_s,
-                )
-                if overrides or fallback:
-                    lk_val = (
-                        _lit_map(overrides)[lookup]
-                        if overrides
-                        else F.lit(None).cast("bigint")
-                    )
-                    key_val = (
-                        _lit_map(fallback)[F.col("__fd_key__")]
-                        if fallback
-                        else F.lit(None).cast("bigint")
-                    )
-                    # an EMPTY lkey is the reference's "no override"
-                    # exactly like an absent field (keyLimitOverride
-                    # == ""): both take the naming-pattern branch
-                    limit_col = F.coalesce(
-                        F.when(
-                            lookup.isNotNull() & (lookup != F.lit("")),
-                            lk_val,
-                        ).otherwise(key_val),
-                        limit_col,
-                    )
-            else:
-                overrides = fetch_limit_overrides(
-                    df.select(F.col("__fd_key__")), "__fd_key__", key_field,
-                    backend_cfg, limit, bucket_s,
-                )
-                if overrides:
-                    limit_col = F.coalesce(
-                        _lit_map(overrides)[F.col("__fd_key__")], limit_col
-                    )
-
+        # arrival order within a bucket; extra order_fields give a
+        # deterministic tiebreak for equal timestamps (batch mode)
         w = Window.partitionBy(
             "__fd_key__", "__fd_bucket__", "__fd_rule__"
-        ).orderBy(*order_cols)
+        ).orderBy(F.col("__fd_ts__"), *[F.col(c) for c in order_fields])
         running = F.sum(
             F.when(F.col("__fd_m__"), counted).otherwise(F.lit(0))
         ).over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -594,32 +378,29 @@ class Throttle(Action):
         )
         return out.drop("__fd_keep__", *helper_cols)
 
-    def _apply_stream(self, df: DataFrame, pred: Column | None) -> DataFrame:
-        """Streaming throttle with full rule parity: the same specs /
-        rule-index / counted-value / distribution-index columns as the
-        batch path feed the keyed state function, which owns one bucket
-        ring per (key, rule) and replays distribution stealing
-        sequentially (the reference's limiter lock scope)."""
-        _require_ungated_stream(pred, "throttle")
-        from file_d_spark.streaming import throttle_stream
+    def _rules(self, df: DataFrame):
+        """What the batch and streaming paths share: the rule specs,
+        the first-matching-rule index, the size column size-kind rules
+        count, and the parsed event time.
 
+        Rules are the config rules in order, then the implicit default
+        rule (matches everything) — first match wins, and each rule
+        owns its own limiters (throttle.go:117-125,467-475: limiter
+        key embeds the rule index, so counting is per (rule, key))."""
         limit = int(self.params.get("default_limit", 5000))
-        limit_kind = self.params.get("limit_kind", "count")
-        size_field = self.params.get("limit_size_field", "")
-        specs = []
-        for rcfg in self.params.get("rules") or []:
-            specs.append(
-                {
-                    "limit": int(rcfg.get("limit", limit)),
-                    "kind": rcfg.get("limit_kind", "count"),
-                    "conditions": rcfg.get("conditions") or {},
-                    "dist": rcfg.get("limit_distribution") or {},
-                }
-            )
+        specs = [
+            {
+                "limit": int(rcfg.get("limit", limit)),
+                "kind": rcfg.get("limit_kind", "count"),
+                "conditions": rcfg.get("conditions") or {},
+                "dist": rcfg.get("limit_distribution") or {},
+            }
+            for rcfg in self.params.get("rules") or []
+        ]
         specs.append(
             {
                 "limit": limit,
-                "kind": limit_kind,
+                "kind": self.params.get("limit_kind", "count"),
                 "conditions": {},
                 "dist": self.params.get("limit_distribution") or {},
             }
@@ -627,9 +408,9 @@ class Throttle(Action):
         for s in specs:
             if s["dist"].get("field") or s["dist"].get("ratios"):
                 _validate_distribution(s["dist"])
-        if len(specs) == 1 and limit < 0:
-            return df  # negative limit = unlimited (throttle_test.go:153-181)
 
+        # conditions are an AND field map (rule.go:50-59: string
+        # equality per field)
         def rule_cond(conditions: dict) -> Column:
             cond = F.lit(True)
             for fld, val in conditions.items():
@@ -642,6 +423,8 @@ class Throttle(Action):
             rule_idx = F.when(rule_cond(specs[i]["conditions"]), F.lit(i)).otherwise(
                 rule_idx
             )
+
+        size_field = self.params.get("limit_size_field", "")
         size_col = (
             F.octet_length(
                 get_col_safe(parse_selector(size_field), df.schema).cast("string")
@@ -649,31 +432,39 @@ class Throttle(Action):
             if size_field
             else F.lit(1)
         )
-        counted = _counted_expr(specs, size_col)
-        didx = _didx_expr(specs, df.schema)
 
-        rule_cfgs = [
-            {"limit": int(s["limit"]), "dlims": _rule_dlims(s)}
-            for s in specs
-        ]
-
-        # batch parity for timestamps: parse time_field through the
-        # same Go-layout machinery (time_field_format, numeric-epoch
-        # handling) BEFORE the state function — raw pd.to_datetime in
-        # the executor read numeric epoch-seconds as nanoseconds and
-        # sorted on unparsed values
+        # loud on un-timestampable types; parse failures -> null bucket
+        # (never backfill wall clock — see round-2 postmortem).  The
+        # stream parses through the same Go-layout machinery
+        # (time_field_format, numeric epochs) before its state function.
         time_field = self.params.get("time_field", "time")
-        time_fmt = self.params.get("time_field_format", "rfc3339nano")
         tcol = get_col_safe(parse_selector(time_field), df.schema)
         t = df.schema[time_field].dataType if time_field in df.columns else None
-        parsed_ts = xtime.ensure_timestamp(
-            tcol, t, time_fmt, context="throttle time_field"
+        ts = xtime.ensure_timestamp(
+            tcol,
+            t,
+            self.params.get("time_field_format", "rfc3339nano"),
+            context="throttle time_field",
         )
+        return specs, rule_idx, size_col, ts
+
+    def _apply_stream(self, df, pred, specs, rule_idx, size_col, ts):
+        """Streaming throttle with full rule parity: the same specs /
+        rule-index / counted-value / distribution-index columns as the
+        batch path feed the keyed state function, which owns one bucket
+        ring per (key, rule) and replays distribution stealing
+        sequentially (the reference's limiter lock scope)."""
+        _require_ungated_stream(pred, "throttle")
+        from file_d_spark.streaming import throttle_stream
+
+        limit = specs[-1]["limit"]
+        if len(specs) == 1 and limit < 0:
+            return df  # negative limit = unlimited (throttle_test.go:153-181)
         staged = (
             df.withColumn("__fd_rule__", rule_idx)
-            .withColumn("__fd_cnt__", counted)
-            .withColumn("__fd_didx__", didx)
-            .withColumn("__fd_ts__", parsed_ts)
+            .withColumn("__fd_cnt__", _counted_expr(specs, size_col))
+            .withColumn("__fd_didx__", _didx_expr(specs, df.schema))
+            .withColumn("__fd_ts__", ts)
         )
         return throttle_stream(
             staged,
@@ -688,93 +479,32 @@ class Throttle(Action):
                 _parse_duration_seconds(self.params.get("limiter_expiration"), 1800.0)
                 * 1000
             ),
-            rule_cfgs=rule_cfgs,
+            rule_cfgs=[
+                {"limit": int(s["limit"]), "dlims": _rule_dlims(s)}
+                for s in specs
+            ],
             rule_col="__fd_rule__",
             cnt_col="__fd_cnt__",
             didx_col="__fd_didx__",
         )
 
     def _admit_exact(self, df, specs, size_col, order_fields, helper_cols):
-        """Sequential replay of in_memory_limiter.isAllowed per
-        (key, bucket, rule) group, including default-distribution
-        stealing (getDistrData).  Arrow-batched; the group key carries
-        all the state the reference's limiter map keys on, so this
-        shards exactly like the reference's per-limiter locks."""
-        import pandas as pd
+        """Exact distribution replay: the sequential admission of
+        in_memory_limiter.isAllowed per (key, bucket, rule) group,
+        default-distribution stealing included (getDistrData),
+        expressed as ONE generated ``aggregate()`` fold per rule over
+        the group's sorted event array — no Python in the plan.
 
-        from pyspark.sql import functions as F
-
-        # per-rule static config for the closure
-        rule_cfgs = [
-            {"limit": int(s["limit"]), "kind": s["kind"],
-             "dlims": _rule_dlims(s)}
-            for s in specs
-        ]
-
-        df = df.withColumn(
-            "__fd_didx__", _didx_expr(specs, df.schema)
-        ).withColumn("__fd_cnt__", _counted_expr(specs, size_col))
-        order_names = ["__fd_ts__"] + [str(c) for c in order_fields]
-        out_schema = df.drop("__fd_didx__", "__fd_cnt__").schema
-
-        def admit(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order_names, kind="mergesort")
-            cfg = rule_cfgs[int(pdf["__fd_rule__"].iloc[0])]
-            dlims = cfg["dlims"]
-            buckets: dict[int, int] = {}
-            keep = []
-            for m, cnt, di in zip(
-                pdf["__fd_m__"], pdf["__fd_cnt__"], pdf["__fd_didx__"]
-            ):
-                if not m:
-                    keep.append(True)  # gate bypass: never counted
-                    continue
-                if cfg["limit"] < 0:
-                    keep.append(True)  # negative limit = unlimited
-                    continue
-                cnt = int(cnt)
-                if dlims is None:
-                    buckets[0] = buckets.get(0, 0) + cnt
-                    keep.append(buckets[0] <= cfg["limit"])
-                    continue
-                idx, lim = int(di), dlims[int(di)]
-                if idx == 0 and buckets.get(0, 0) + cnt > lim:
-                    # steal reserve from the most-free distribution
-                    maxdiff = -1
-                    for i in range(1, len(dlims)):
-                        diff = dlims[i] - (buckets.get(i, 0) + cnt)
-                        if diff > maxdiff:
-                            maxdiff, idx, lim = diff, i, dlims[i]
-                buckets[idx] = buckets.get(idx, 0) + cnt
-                keep.append(buckets[idx] <= lim)
-            return pdf[pd.Series(keep, index=pdf.index)].drop(
-                columns=["__fd_didx__", "__fd_cnt__"]
-            )
-
-        out = df.groupBy("__fd_key__", "__fd_bucket__", "__fd_rule__").applyInPandas(
-            admit, schema=out_schema
-        )
-        return out.drop(*helper_cols)
-
-    def _admit_exact_jvm(self, df, specs, size_col, order_fields, helper_cols):
-        """JVM-side exact distribution replay (r13, VERDICT r12 #4):
-        the same sequential admission ``_admit_exact`` replays in
-        Python, expressed as ONE generated ``aggregate()`` fold per
-        rule over the sorted per-(key, bucket, rule) event array — no
-        Python in the plan, no Arrow round trip.
-
-        Scale shape: one shuffle (the groupBy that also bounds the
-        Arrow path), then a linear interpreted fold per group.  Gated
-        rows (do_if mismatch) never enter the fold — they bypass the
-        action uncounted (processor.go:190-243) and union back at the
-        end — and the fold's kept-array growth is config-bounded
-        (≈ sum of the rule's distributed limits per group), so the
-        per-step array copy never goes quadratic in group size.  The
-        event sort key is (ts, *order_fields, didx, cnt, payload) —
-        a TOTAL deterministic order, strictly stronger than the Arrow
-        path's stable-mergesort-on-arrival tiebreak."""
-        didx = _didx_expr(specs, df.schema)
-        counted = _counted_expr(specs, size_col)
+        Scale shape: one shuffle (the groupBy), then a linear
+        interpreted fold per group.  Gated rows (do_if mismatch) never
+        enter the fold — they bypass the action uncounted
+        (processor.go:190-243) and union back at the end — and the
+        fold's kept-array growth is config-bounded (≈ sum of the
+        rule's distributed limits per group), so the per-step array
+        copy never goes quadratic in group size.  The event sort key
+        is (ts, *order_fields, didx, cnt) and then the payload, or
+        collected order where the payload has no ordering
+        (``_event_sort_sql``)."""
         payload_cols = list(df.columns)
         ev = F.struct(
             F.col("__fd_ts__").alias("t"),
@@ -782,15 +512,23 @@ class Throttle(Action):
                 get_col_safe(parse_selector(str(c)), df.schema).alias(f"o{i}")
                 for i, c in enumerate(order_fields)
             ],
-            didx.cast("int").alias("d"),
-            counted.cast("bigint").alias("c"),
+            _didx_expr(specs, df.schema).cast("int").alias("d"),
+            _counted_expr(specs, size_col).cast("bigint").alias("c"),
             F.struct(*[F.col(c) for c in payload_cols]).alias("p"),
         )
         gated = df.filter(~F.col("__fd_m__")).select(*payload_cols)
         grouped = (
             df.filter(F.col("__fd_m__"))
             .groupBy("__fd_key__", "__fd_bucket__", "__fd_rule__")
-            .agg(F.array_sort(F.collect_list(ev)).alias("__evs__"))
+            .agg(F.collect_list(ev).alias("__evs__"))
+            .withColumn(
+                "__evs__",
+                F.expr(
+                    _event_sort_sql(
+                        len(order_fields), _type_unorderable(df.schema)
+                    )
+                ),
+            )
         )
         branches = " ".join(
             f"WHEN __fd_rule__ = {i} THEN ({_dist_fold_sql(s)})"

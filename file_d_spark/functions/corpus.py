@@ -261,56 +261,6 @@ def stratified_sample(
     return df.filter(frac < rate)
 
 
-def weighted_sample(
-    df: DataFrame,
-    group_col: str,
-    weight_col: str,
-    id_col: str,
-    k: int = 5,
-    salt: str = "",
-) -> DataFrame:
-    """Weighted sampling WITHOUT replacement, k per group — the
-    Efraimidis-Spirakis A-ES one-pass scheme with the repo's
-    deterministic-hash uniform instead of an RNG: each row draws
-    ``u in (0, 1]`` from its id's md5 and races with the exponential
-    key ``-ln(u) / w``; the k SMALLEST keys per group are exactly a
-    weight-proportional sample without replacement.  Deterministic
-    across runs, partitionings and engines — re-running a mixture
-    build never migrates documents.
-
-    Scale shape: one narrow projection (hash + log) and one per-group
-    top-k window — the same shuffle budget as any keyed top-k; no
-    global sort, no RNG state, no driver participation.  Rows with
-    non-positive weight are excluded (a zero-weight doc can never be
-    sampled; a negative weight is a config error upstream)."""
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(float(1 << 32))
-    w = F.col(weight_col).cast("double")
-    keyed = df.filter(w > 0).withColumn("es_key", -F.log(u) / w)
-    win = Window.partitionBy(group_col).orderBy("es_key", id_col)
-    return (
-        keyed.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select(
-            group_col,
-            id_col,
-            F.col(weight_col).alias("weight"),
-            F.round("es_key", 6).alias("es_key"),
-            "rank",
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # PII redaction
 # --------------------------------------------------------------------------
@@ -1794,15 +1744,6 @@ def assoc_audit(df: DataFrame, cols: list[str]) -> DataFrame:
     to 6 (derived from chi2_fp — the exact integer is the
     engine-parity anchor).
     """
-    hist = _assoc_cells(df, cols).groupBy("pair", "va", "vb").agg(
-        F.count(F.lit(1)).cast("double").alias("n_ab")
-    )
-    return _assoc_finalize(hist)
-
-
-def _assoc_cells(df: DataFrame, cols: list[str]) -> DataFrame:
-    """The tagged (pair, va, vb) cell projection of
-    :func:`assoc_audit`."""
     if len(set(cols)) != len(cols):
         # a repeated column would yield a degenerate self-pair row
         # reporting V = 1 — a spurious "perfect leakage" signal in
@@ -1822,27 +1763,27 @@ def _assoc_cells(df: DataFrame, cols: list[str]) -> DataFrame:
     ]
     if not pairs:
         raise ValueError("assoc_audit needs at least two columns")
-    return df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f"{a}|{b}").alias("pair"),
-                        F.coalesce(F.col(a).cast("string"), F.lit(""))
-                        .alias("va"),
-                        F.coalesce(F.col(b).cast("string"), F.lit(""))
-                        .alias("vb"),
-                    )
-                    for a, b in pairs
-                ]
-            )
-        ).alias("c")
-    ).select("c.pair", "c.va", "c.vb")
-
-
-def _assoc_finalize(hist: DataFrame) -> DataFrame:
-    """chi-square / Cramér's V from a (pair, va, vb, n_ab double)
-    histogram."""
+    hist = (
+        df.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(f"{a}|{b}").alias("pair"),
+                            F.coalesce(F.col(a).cast("string"), F.lit(""))
+                            .alias("va"),
+                            F.coalesce(F.col(b).cast("string"), F.lit(""))
+                            .alias("vb"),
+                        )
+                        for a, b in pairs
+                    ]
+                )
+            ).alias("c")
+        )
+        .select("c.pair", "c.va", "c.vb")
+        .groupBy("pair", "va", "vb")
+        .agg(F.count(F.lit(1)).cast("double").alias("n_ab"))
+    )
     w_a = Window.partitionBy("pair", "va")
     w_b = Window.partitionBy("pair", "vb")
     w_p = Window.partitionBy("pair")

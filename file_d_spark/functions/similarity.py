@@ -2131,7 +2131,31 @@ def embedding_stats(
     ``dim`` key — map-side combine reduces each task to ``dim`` rows
     before the shuffle; no window, no join, no Python.
     """
-    cell = _embedding_stats_cells(df, vec_col)
+    v = F.col("v").cast("double")
+    # a NULL cell is a broken input too: the raw predicate yields NULL
+    # for it, which would count it in n but in NEITHER n_nonfinite nor
+    # the moments — silently diluting the mean/std denominator.
+    # coalesce pins NULL -> not-finite so it lands in n_nonfinite.
+    finite = F.coalesce(
+        ~(
+            F.isnan(v)
+            | (v == F.lit(float("inf")))
+            | (v == F.lit(float("-inf")))
+        ),
+        F.lit(False),
+    )
+    clamped = F.least(F.greatest(v, F.lit(-8.0)), F.lit(8.0))
+    # per cell: (dim, fin, v_fp, cl) — the finite test, the ±8 clamp
+    # and the 2^20 fixed point
+    cell = df.select(F.posexplode(F.col(vec_col)).alias("d0", "v")).select(
+        (F.col("d0") + 1).alias("dim"),
+        finite.alias("fin"),
+        F.when(
+            finite,
+            F.floor(clamped * F.lit(1048576.0)).cast("long"),
+        ).alias("v_fp"),
+        (finite & (F.abs(v) > F.lit(8.0))).alias("cl"),
+    )
     exact_aggs = [
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.when(~F.col("fin"), 1).otherwise(0))
@@ -2213,35 +2237,6 @@ def embedding_stats(
         return _embedding_stats_finalize(agg)
     agg = _guard(cell.groupBy("dim").agg(*exact_aggs), "dim group")
     return _embedding_stats_finalize(agg)
-
-
-def _embedding_stats_cells(df: DataFrame, vec_col: str) -> DataFrame:
-    """The per-cell projection of :func:`embedding_stats`: (dim, fin,
-    v_fp, cl) with the finite test, the ±8 clamp and the 2^20 fixed
-    point."""
-    v = F.col("v").cast("double")
-    # a NULL cell is a broken input too: the raw predicate yields NULL
-    # for it, which would count it in n but in NEITHER n_nonfinite nor
-    # the moments — silently diluting the mean/std denominator.
-    # coalesce pins NULL -> not-finite so it lands in n_nonfinite.
-    finite = F.coalesce(
-        ~(
-            F.isnan(v)
-            | (v == F.lit(float("inf")))
-            | (v == F.lit(float("-inf")))
-        ),
-        F.lit(False),
-    )
-    clamped = F.least(F.greatest(v, F.lit(-8.0)), F.lit(8.0))
-    return df.select(F.posexplode(F.col(vec_col)).alias("d0", "v")).select(
-        (F.col("d0") + 1).alias("dim"),
-        finite.alias("fin"),
-        F.when(
-            finite,
-            F.floor(clamped * F.lit(1048576.0)).cast("long"),
-        ).alias("v_fp"),
-        (finite & (F.abs(v) > F.lit(8.0))).alias("cl"),
-    )
 
 
 def _embedding_stats_finalize(

@@ -79,31 +79,6 @@ def hll_distinct(
 
     Columns: (group, zeros, sum_fp, estimate).
     """
-    folded = (
-        hll_prep(df, group_col, value_col, b)
-        .groupBy("g", "bucket")
-        .agg(F.max("r").alias("mj"))
-        .groupBy("g")
-        .agg(
-            (F.lit(1 << b) - F.count(F.lit(1))).cast("long").alias("zeros"),
-            (
-                F.sum(F.expr("shiftleft(cast(1 as bigint), 40 - mj)"))
-                + (F.lit(1 << b) - F.count(F.lit(1)))
-                * F.lit(1 << 40).cast("long")
-            ).cast("long").alias("sum_fp"),
-        )
-    )
-    return folded.select(
-        F.col("g").alias(group_col),
-        "zeros",
-        "sum_fp",
-        hll_estimate_col(b).alias("estimate"),
-    )
-
-
-def hll_prep(df: DataFrame, group_col: str, value_col: str, b: int) -> DataFrame:
-    """(g, bucket, rank) triples — the front half of
-    :func:`hll_distinct`."""
     m = 1 << b
     rem = HASH_BITS - b
     h = _h32(F.col(value_col))
@@ -115,19 +90,27 @@ def hll_prep(df: DataFrame, group_col: str, value_col: str, b: int) -> DataFrame
     # count(*) (so `zeros` undercounts) — a null contributes nothing
     # to a distinct count, so drop it here, mirrored by the oracle's
     # WHERE
-    df = df.where(F.col(value_col).isNotNull())
-    return df.select(
-        F.col(group_col).alias("g"),
-        h.bitwiseAND(F.lit(m - 1)).alias("bucket"),
-        rank.alias("r"),
+    folded = (
+        df.where(F.col(value_col).isNotNull())
+        .select(
+            F.col(group_col).alias("g"),
+            h.bitwiseAND(F.lit(m - 1)).alias("bucket"),
+            rank.alias("r"),
+        )
+        .groupBy("g", "bucket")
+        .agg(F.max("r").alias("mj"))
+        .groupBy("g")
+        .agg(
+            (F.lit(m) - F.count(F.lit(1))).cast("long").alias("zeros"),
+            (
+                F.sum(F.expr("shiftleft(cast(1 as bigint), 40 - mj)"))
+                + (F.lit(m) - F.count(F.lit(1)))
+                * F.lit(1 << 40).cast("long")
+            ).cast("long").alias("sum_fp"),
+        )
     )
-
-
-def hll_estimate_col(b: int):
-    """The estimator over (zeros, sum_fp) columns — one double
-    division (or the linear-counting branch), shared by the batch
-    operator and (textually) the oracle."""
-    m = 1 << b
+    # the estimator: one double division (or the linear-counting
+    # branch), mirrored textually by hll_oracle_sql
     coef = hll_alpha(m) * m * m * float(1 << 40)
     raw = F.lit(coef) / F.col("sum_fp").cast("double")
     lc = F.lit(float(m)) * F.log(
@@ -136,7 +119,12 @@ def hll_estimate_col(b: int):
     est = F.when(
         (raw <= F.lit(2.5 * m)) & (F.col("zeros") > 0), lc
     ).otherwise(raw)
-    return F.round(est, 4)
+    return folded.select(
+        F.col("g").alias(group_col),
+        "zeros",
+        "sum_fp",
+        F.round(est, 4).alias("estimate"),
+    )
 
 
 def hll_oracle_sql(

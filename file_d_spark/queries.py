@@ -4207,8 +4207,9 @@ def q_tpch_q5(spark, sf_dir):
 
 
 # ===========================================================================
-# Round-8 registrations (promoted from queries_staged.py after a full
-# round of continuous DuckDB validation at sf0.001 + sf0.01).
+# Round-8 registrations (promoted from the since-deleted staged pool
+# after a full round of continuous DuckDB validation at sf0.001 +
+# sf0.01).
 # ===========================================================================
 
 
@@ -4747,7 +4748,7 @@ def q_sketch_hll(spark, sf_dir):
     shuffle to bounded per-group registers (map-side partial max), the
     registers fold to ONE exact BIGINT before the single float
     division, so the estimate is bit-identical cross-engine.  Promoted
-    from the r9 staged pool (queries_staged.py)."""
+    from the r9 staged pool (since deleted)."""
     return sketch.hll_distinct(
         _sketch_words(spark, sf_dir).select("lang", "w"), "lang", "w", b=9
     )
@@ -5148,9 +5149,9 @@ def q_mmr_diversify(spark, sf_dir):
 
 
 # --- r13 registrations: the staged sketch-family fold + two spares
-# (promotion plan written at r12 in queries_staged.py; every pair
-# oracle-checked at sf0.001 AND sf0.01 before this move — the r12
-# mmr lesson) ---
+# (promotion plan written at r12 in the since-deleted staged pool;
+# every pair oracle-checked at sf0.001 AND sf0.01 before this move —
+# the r12 mmr lesson) ---
 
 
 def q_sketch_kmv_leg(spark, sf_dir):

@@ -16,9 +16,12 @@ import pytest
 from file_d_spark.queries import QUERIES
 
 
-def plan_of(spark, sf_dir, name: str) -> str:
-    df = QUERIES[name](spark, sf_dir)
+def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_of(spark, sf_dir, name: str) -> str:
+    return executed_plan(QUERIES[name](spark, sf_dir))
 
 
 # Arrow-vectorized Python is sanctioned only where Column expressions
@@ -27,11 +30,9 @@ ARROW_PY_ALLOWED = {
     "kitchen_sink_actions",   # convert_utf8_bytes pandas UDF
     "convert_suite",          # same UDF via its folded utf8 leg (r12)
     "multimodal_meta",        # mapInPandas decode plumbing
-    # throttle's exact limit_distribution is JVM-side since r13 (a
-    # generated aggregate() fold), so the throttle_modes dist leg runs
-    # under the strict no-Python bar above; the Arrow replay survives
-    # only as the map-schema fallback (exact_backend: arrow), parity-
-    # tested in test_throttle_dist
+    # throttle's exact limit_distribution is a JVM-side generated
+    # aggregate() fold for every schema, so the throttle_modes dist leg
+    # runs under the strict no-Python bar above
 }
 
 
@@ -152,30 +153,6 @@ def test_action_chain_fuses_into_few_projections(spark, sf_dir):
     assert re.search(r"\*\(\d+\) Project", plan), "projection left codegen"
 
 
-def staged_plan_of(spark, sf_dir, name: str) -> str:
-    from file_d_spark.queries_staged import STAGED
-
-    df = STAGED[name][0](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_staged_queries_stay_jvm_side(spark, sf_dir):
-    """The staged pool is held to the same no-Python bar as the
-    registry — a staged op that regresses to row-UDFs would carry the
-    regression into the registry at promotion time."""
-    from file_d_spark.queries_staged import STAGED
-
-    # (convert_suite and its single sanctioned Arrow leg registered at
-    # r12 — the registered guard's ARROW_PY_ALLOWED covers it now; the
-    # staged pool is back to a strict zero-Python bar)
-    for name in sorted(STAGED):
-        plan = staged_plan_of(spark, sf_dir, name)
-        assert "BatchEvalPython" not in plan, f"{name} fell back to row-UDF"
-        assert not re.search(
-            r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas", plan
-        ), f"{name} unexpectedly runs Python"
-
-
 def test_hll_sketch_shuffles_registers_only(spark, sf_dir):
     """HLL's two exchanges must both be partial-aggregated register
     shuffles — map-side HashAggregate below each Exchange — never a
@@ -212,7 +189,11 @@ def test_staged_vocab_coverage_distributed_topk(spark, sf_dir):
     TakeOrderedAndProject (vocab-sized distributed heap) and join the
     vocab broadcast — a global Sort of the word histogram or a
     shuffled join would be the 100 TB failure modes."""
-    plan = staged_plan_of(spark, sf_dir, "vocab_coverage")
+    from file_d_spark.functions import corpus
+    from file_d_spark.tables import load_table
+
+    d = load_table(spark, sf_dir, "documents")
+    plan = executed_plan(corpus.vocab_coverage(d, "lang", "text", vocab_size=500))
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
@@ -235,7 +216,18 @@ def test_staged_decontaminate_broadcasts_eval(spark, sf_dir):
     the semi-join (the corpus side never enters a wide dependency) and
     must not plan any count window — the within-corpus cut's shuffle
     shape is exactly what this operator avoids."""
-    plan = staged_plan_of(spark, sf_dir, "decontaminate_spans")
+    from pyspark.sql import functions as F
+
+    from file_d_spark.functions import corpus
+    from file_d_spark.tables import load_table
+
+    d = load_table(spark, sf_dir, "documents")
+    is_eval = F.col("doc_id") % 10 == 0
+    plan = executed_plan(
+        corpus.decontaminate_spans(
+            d.filter(~is_eval), d.filter(is_eval), "doc_id", "text", n=8
+        )
+    )
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     assert "Window" not in plan
     assert "CartesianProduct" not in plan

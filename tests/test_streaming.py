@@ -357,6 +357,45 @@ def test_throttle_stream_rules(spark, stream_reader):
     assert counts == {"error": 1, "info": 3}
 
 
+def test_throttle_limiter_backend_redis_rejected(spark, stream_reader):
+    """``limiter_backend: redis`` is refused on a batch frame AND on a
+    streaming frame, never run silently on the config limits;
+    ``memory`` builds on both and, on a batch frame, admits exactly
+    what an absent key admits."""
+    from file_d_spark.actions import build_action
+
+    rows = [{"k": "x", "ts": f"2024-01-01T00:00:{i:02d}.000Z"} for i in range(5)]
+    stream = stream_reader(rows, "k string, ts timestamp")
+    batch = spark.createDataFrame(
+        [(r["k"], r["ts"]) for r in rows], "k string, ts string"
+    )
+
+    def throttle(**extra):
+        return build_action(
+            {
+                "type": "throttle",
+                "throttle_field": "k",
+                "time_field": "ts",
+                "bucket_interval": "1m",
+                "buckets_count": 10,
+                "default_limit": 3,
+                **extra,
+            }
+        )
+
+    for frame in (batch, stream):
+        with pytest.raises(ValueError, match="'redis' is not supported"):
+            throttle(limiter_backend="redis").apply(frame)
+        with pytest.raises(ValueError, match=r"must be memory\|redis"):
+            throttle(limiter_backend="etcd").apply(frame)
+    assert throttle(limiter_backend="memory").apply(stream).isStreaming
+    assert (
+        throttle(limiter_backend="memory").apply(batch).count()
+        == throttle().apply(batch).count()
+        == 3
+    )
+
+
 def test_throttle_stream_distribution_steal(spark, stream_reader):
     """Streaming limit_distribution with default-reserve stealing:
     ratios reserve 0.5 for errors (limit 6 -> 3), default gets 3; a

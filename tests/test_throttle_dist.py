@@ -1,6 +1,8 @@
 """throttle limit_distribution: per-value ratio shares of the limit
 (F5 fixture family)."""
 
+import re
+
 from file_d_spark import Pipeline
 
 
@@ -160,16 +162,102 @@ def test_distribution_config_validation(spark):
     assert run_dist([{"ratio": 0.5, "values": ["error"]}]) == 1
 
 
-def test_throttle_dist_backends_bit_parity(spark):
-    """The r13 JVM aggregate()-fold replay and the Arrow applyInPandas
-    replay are the SAME sequential admission (in_memory_limiter.go) —
-    assert bit-equal survivors over a seeded adversarial corpus:
-    multiple keys/buckets, a dist rule + a no-dist rule + a dist
-    default, size kind on one rule, steal pressure, and a do_if gate
-    (gated rows bypass both paths uncounted)."""
-    import random
+def _oracle_survivors(rows: list[dict], cfg: dict, gate) -> list[int]:
+    """Plain-Python sequential admission (in_memory_limiter.go
+    isAllowed + getDistrData) over collected rows: the reference the
+    JVM fold is checked against.  Covers the shapes these corpora use:
+    a 1m bucket with no ring clamp, rfc3339 times that sort as text,
+    ``n`` as the arrival order, rules with equality conditions, count
+    or size kind (sized by the top-level ``limit_size_field``, else
+    1), and distributions over one field; ``gate(row)``
+    stands for the do_if (gated rows bypass uncounted)."""
+    assert cfg["bucket_interval"] == "1m" and cfg["buckets_count"] >= 100000
+    default = {**cfg, "conditions": {}, "limit": cfg["default_limit"]}
+    specs = []
+    for rc in cfg.get("rules", []) + [default]:
+        dist = rc.get("limit_distribution") or {}
+        limit = rc.get("limit", cfg["default_limit"])
+        dlims = None
+        if dist.get("ratios"):
+            ratios = [float(r["ratio"]) for r in dist["ratios"]]
+            dlims = [round(round(1 - sum(ratios), 2) * limit)]
+            dlims += [round(r * limit) for r in ratios]
+        specs.append((rc, limit, dist, dlims))
+
+    buckets: dict = {}
+    kept = []
+    for row in sorted(rows, key=lambda r: (r["time"], r["n"])):
+        if not gate(row):
+            kept.append(row["n"])  # gate bypass: never counted
+            continue
+        ri = next(
+            i for i, (rc, *_) in enumerate(specs)
+            if all(str(row[f]) == str(v) for f, v in rc["conditions"].items())
+        )
+        rc, limit, dist, dlims = specs[ri]
+        if limit < 0:
+            kept.append(row["n"])  # negative limit = unlimited
+            continue
+        cnt = 1  # size kind counts the top-level limit_size_field
+        size_field = cfg.get("limit_size_field")
+        if rc.get("limit_kind", "count") == "size" and size_field:
+            cnt = len(row[size_field].encode())
+        group = buckets.setdefault((row["k"], row["time"][:16], ri), {})
+        if dlims is None:
+            group[0] = group.get(0, 0) + cnt
+            if group[0] <= limit:
+                kept.append(row["n"])
+            continue
+        idx = next(
+            (j + 1 for j, r in enumerate(dist["ratios"])
+             if str(row[dist["field"]]) in [str(v) for v in r["values"]]),
+            0,
+        )
+        lim = dlims[idx]
+        if idx == 0 and group.get(0, 0) + cnt > lim:
+            # steal reserve from the most-free distribution
+            maxdiff = -1
+            for i in range(1, len(dlims)):
+                diff = dlims[i] - (group.get(i, 0) + cnt)
+                if diff > maxdiff:
+                    maxdiff, idx, lim = diff, i, dlims[i]
+        group[idx] = group.get(idx, 0) + cnt
+        if group[idx] <= lim:
+            kept.append(row["n"])
+    return sorted(kept)
+
+
+def _assert_fold_matches_oracle(spark, rows, schema, cfg, gate=lambda r: True):
+    """The fold's survivors equal the oracle's on the orderable schema,
+    then on the same rows with a map and a variant column added — the
+    payloads Catalyst can't order, which the fold sorts by comparator.
+    Returns the survivor count."""
+    from pyspark.sql import functions as F
 
     from file_d_spark import Pipeline
+
+    names = [f.split()[0] for f in schema.split(",")]
+    want = _oracle_survivors([dict(zip(names, r)) for r in rows], cfg, gate)
+    df = spark.createDataFrame(rows, schema)
+    p = Pipeline.from_dict({"actions": [cfg]})
+    for frame in (
+        df,
+        df.withColumn("m", F.create_map(F.col("k"), F.col("n"))),
+        df.withColumn("var", F.parse_json(F.to_json(F.struct("k", "n")))),
+    ):
+        out = p.apply(frame)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan
+        assert sorted(r.n for r in out.collect()) == want, frame.columns
+    return len(want)
+
+
+def test_throttle_dist_fold_matches_oracle(spark):
+    """The JVM aggregate()-fold replay equals the plain-Python oracle
+    over a seeded adversarial corpus: multiple keys/buckets, a dist
+    rule + a no-dist rule + a dist default, size kind on one rule,
+    steal pressure, and a do_if gate (gated rows bypass uncounted)."""
+    import random
 
     rng = random.Random(13)
     sevs = ["error", "warn", "info", "debug", ""]
@@ -226,28 +314,21 @@ def test_throttle_dist_backends_bit_parity(spark):
             "ratios": [{"ratio": 0.4, "values": ["error", "warn"]}],
         },
     }
-    df = spark.createDataFrame(rows, schema)
-    outs = {}
-    for backend in ("jvm", "arrow"):
-        p = Pipeline.from_dict(
-            {"actions": [{**cfg, "exact_backend": backend}]}
-        )
-        outs[backend] = sorted(r.n for r in p.apply(df).collect())
-    assert outs["jvm"] == outs["arrow"]
-    assert 0 < len(outs["jvm"]) < 400  # the throttle actually bit
+    n = _assert_fold_matches_oracle(
+        spark, rows, schema, cfg, gate=lambda r: r["ns"] != "ns_2"
+    )
+    assert 0 < n < 400  # the throttle actually bit
 
 
-def test_throttle_dist_backends_parity_more_shapes(spark):
-    """Two more adversarial parity shapes for the fold vs Arrow
-    (third r13 review round): (a) ratios summing to exactly 1.0 — a
-    ZERO default reserve, so every default-group event steals from
-    its first arrival, plus a negative-limit rule riding alongside;
-    (b) size kind with zero-length fields — zero-cost events admit
-    without consuming budget (the documented quadratic-caveat shape)
-    interleaved with oversized events."""
+def test_throttle_dist_fold_matches_oracle_more_shapes(spark):
+    """Two more adversarial shapes for the fold vs the oracle: (a)
+    ratios summing to exactly 1.0 — a ZERO default reserve, so every
+    default-group event steals from its first arrival, plus a
+    negative-limit rule riding alongside; (b) size kind with
+    zero-length fields — zero-cost events admit without consuming
+    budget (the documented quadratic-caveat shape) interleaved with
+    oversized events."""
     import random
-
-    from file_d_spark import Pipeline
 
     schema = (
         "k string, time string, severity string, ns string,"
@@ -312,19 +393,12 @@ def test_throttle_dist_backends_parity_more_shapes(spark):
         ("zero_reserve", zero_reserve, ["x"]),
         ("zero_size", zero_size, ["", "x" * 5, "x" * 60]),
     ):
-        df = spark.createDataFrame(corpus(7, bodies), schema)
-        outs = {}
-        for backend in ("jvm", "arrow"):
-            p = Pipeline.from_dict(
-                {"actions": [{**cfg, "exact_backend": backend}]}
-            )
-            outs[backend] = sorted(r.n for r in p.apply(df).collect())
-        assert outs["jvm"] == outs["arrow"], name
-        assert 0 < len(outs["jvm"]) < 300, name  # admission actually bit
+        n = _assert_fold_matches_oracle(spark, corpus(7, bodies), schema, cfg)
+        assert 0 < n < 300, name  # admission actually bit
 
 
 def test_throttle_dist_jvm_plan_has_no_python(spark):
-    """The default distribution backend must keep Python out of the
+    """The distribution fold must keep Python out of the
     plan (VERDICT r12 #4: the applyInPandas path previously needed a
     plan-guard allowance; the fold rewrite removes the need)."""
     from file_d_spark import Pipeline
@@ -361,11 +435,10 @@ def test_throttle_dist_jvm_plan_has_no_python(spark):
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_throttle_dist_variant_schema_falls_back_to_arrow(spark):
-    """Review r13: VariantType (like MapType) has no ordering, so the
-    JVM fold's array_sort cannot plan over it — the backend gate must
-    route such schemas to the Arrow replay instead of failing at plan
-    build."""
+def test_throttle_dist_variant_schema_runs_the_fold(spark):
+    """VariantType (like MapType) has no ordering, so a plain
+    array_sort can't plan over it — the fold sorts such payloads with a
+    comparator over the order keys, keeping Python out of the plan."""
     from pyspark.sql import functions as F
 
     from file_d_spark import Pipeline
@@ -398,13 +471,17 @@ def test_throttle_dist_variant_schema_falls_back_to_arrow(spark):
         }
     )
     out = p.apply(df)
-    assert out.count() == 4  # the limiter still bites, via Arrow
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(
+        r"BatchEvalPython|ArrowEvalPython|FlatMapGroupsInPandas", plan
+    )
+    assert out.count() == 4  # the limiter still bites
 
 
 def test_type_unorderable_is_a_whitelist():
-    """Second review pass r13: the gate must fail CLOSED — any type
-    Catalyst can't order (calendar intervals, future types) routes to
-    Arrow, not just the maps/variants a blacklist happened to name."""
+    """The gate must fail CLOSED — any type Catalyst can't order
+    (calendar intervals, future types) takes the comparator sort, not
+    just the maps/variants a blacklist happened to name."""
     from pyspark.sql import types as T
 
     from file_d_spark.actions.throttle import _type_unorderable

@@ -21,152 +21,6 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-class MiniRedis:
-    """In-process RESP2 server for redis tests (the reference uses the
-    miniredis library the same way): dict storage with millisecond
-    expiry, enough commands for the xredis client + limiter sync —
-    PING, AUTH, SET, GET, INCRBY, EXPIRE/PEXPIRE, PTTL, CLUSTER SLOTS.
-
-    ``cluster_slots=True`` makes CLUSTER SLOTS claim the full 0-16383
-    range for this server (single-node cluster)."""
-
-    def __init__(self, cluster_slots: bool = False):
-        import socketserver
-        import threading
-        import time as _time
-
-        self.store: dict[str, bytes] = {}
-        self.expiry: dict[str, float] = {}
-        self.calls: list[list[str]] = []
-        self._cluster = cluster_slots
-        #: when set to "host:port", key commands answer -MOVED there
-        #: (cluster resharding simulation)
-        self.moved_to: str | None = None
-        mini = self
-
-        class Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                buf = b""
-                while True:
-                    try:
-                        chunk = self.request.recv(65536)
-                    except OSError:
-                        return
-                    if not chunk:
-                        return
-                    buf += chunk
-                    while True:
-                        args, buf2 = mini._parse(buf)
-                        if args is None:
-                            break
-                        buf = buf2
-                        try:
-                            self.request.sendall(mini._dispatch(args))
-                        except OSError:
-                            return
-
-        self._srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-        self._srv.daemon_threads = True
-        self._time = _time
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
-
-    @property
-    def addr(self) -> str:
-        h, p = self._srv.server_address
-        return f"{h}:{p}"
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def close(self):
-        self._srv.shutdown()
-        self._srv.server_close()
-
-    # -- direct store access for seeding/asserting (miniredis s.Set) ---
-    def set(self, key: str, value: str):
-        self.store[key] = value.encode()
-
-    def get(self, key: str):
-        self._expire_now(key)
-        v = self.store.get(key)
-        return v.decode() if v is not None else None
-
-    def ttl_ms(self, key: str):
-        dl = self.expiry.get(key)
-        return None if dl is None else max(0, int((dl - self._time.time()) * 1000))
-
-    # -- protocol -------------------------------------------------------
-    @staticmethod
-    def _parse(buf: bytes):
-        """One RESP array of bulk strings; (None, buf) if incomplete."""
-        if not buf.startswith(b"*") or b"\r\n" not in buf:
-            return None, buf
-        head, rest = buf.split(b"\r\n", 1)
-        n = int(head[1:])
-        args = []
-        for _ in range(n):
-            if not rest.startswith(b"$") or b"\r\n" not in rest:
-                return None, buf
-            lhead, rest2 = rest.split(b"\r\n", 1)
-            ln = int(lhead[1:])
-            if len(rest2) < ln + 2:
-                return None, buf
-            args.append(rest2[:ln].decode())
-            rest = rest2[ln + 2:]
-        return args, rest
-
-    def _expire_now(self, key: str):
-        dl = self.expiry.get(key)
-        if dl is not None and self._time.time() >= dl:
-            self.store.pop(key, None)
-            self.expiry.pop(key, None)
-
-    def _dispatch(self, args: list[str]) -> bytes:
-        self.calls.append(args)
-        cmd = args[0].upper()
-        if cmd in ("PING", "AUTH"):
-            return b"+PONG\r\n" if cmd == "PING" else b"+OK\r\n"
-        if self.moved_to and cmd in ("GET", "SET", "INCRBY", "EXPIRE",
-                                     "PEXPIRE"):
-            return b"-MOVED 0 %s\r\n" % self.moved_to.encode()
-        if cmd == "SET":
-            self.store[args[1]] = args[2].encode()
-            self.expiry.pop(args[1], None)
-            if len(args) >= 5 and args[3].upper() in ("PX", "EX"):
-                ms = int(args[4]) * (1 if args[3].upper() == "PX" else 1000)
-                self.expiry[args[1]] = self._time.time() + ms / 1000
-            return b"+OK\r\n"
-        if cmd == "GET":
-            self._expire_now(args[1])
-            v = self.store.get(args[1])
-            if v is None:
-                return b"$-1\r\n"
-            return b"$%d\r\n%s\r\n" % (len(v), v)
-        if cmd == "INCRBY":
-            self._expire_now(args[1])
-            cur = int(self.store.get(args[1], b"0"))
-            cur += int(args[2])
-            self.store[args[1]] = str(cur).encode()
-            return b":%d\r\n" % cur
-        if cmd in ("EXPIRE", "PEXPIRE"):
-            if args[1] not in self.store:
-                return b":0\r\n"
-            ms = int(args[2]) * (1000 if cmd == "EXPIRE" else 1)
-            self.expiry[args[1]] = self._time.time() + ms / 1000
-            return b":1\r\n"
-        if cmd == "CLUSTER" and len(args) > 1 and args[1].upper() == "SLOTS":
-            if not self._cluster:
-                return b"-ERR This instance has cluster support disabled\r\n"
-            host, port = self._srv.server_address
-            h = host.encode()
-            return (
-                b"*1\r\n" b"*3\r\n" b":0\r\n" b":16383\r\n"
-                b"*2\r\n" b"$%d\r\n%s\r\n" b":%d\r\n" % (len(h), h, port)
-            )
-        return b"-ERR unknown command '%s'\r\n" % cmd.encode()
-
-
 def assert_frames_match(spark_df, duck_df: pd.DataFrame, rtol: float = 1e-9):
     got = normalize(spark_df.toPandas())
     want = normalize(duck_df)

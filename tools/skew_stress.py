@@ -115,20 +115,15 @@ def main() -> None:
         build(args.out, base=base_sf)
 
     from file_d_spark.queries import QUERIES, release_caches
-    from file_d_spark.queries_staged import STAGED
     from file_d_spark.session import get_spark
 
     names = args.queries or DEFAULT_QUERIES
-    # staged pool entries are stressable too (the registration gate:
-    # VERDICT r9 #7 asks for a skew row BEFORE a query takes a slot)
-    fns = dict(QUERIES)
-    fns.update({k: v[0] for k, v in STAGED.items() if k not in fns})
     spark = get_spark("skew-stress", cpus=int(os.environ.get(
         "SPARK_GRAFT_CPUS", "32")))
 
     def run(name: str, sf_dir: str) -> float:
         t0 = time.time()
-        fns[name](spark, sf_dir).write.format("noop").mode(
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         dt = time.time() - t0
