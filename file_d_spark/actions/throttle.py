@@ -143,12 +143,16 @@ def _didx_expr(specs: list[dict], schema) -> Column:
     return didx
 
 
-def _counted_expr(specs: list[dict], size_col: Column) -> Column:
-    """Per-row counted value: 1 for count-kind rules, the size column
-    for size-kind ones — shared by every admission path."""
+def _counted_expr(specs: list[dict], schema) -> Column:
+    """Per-row counted value: 1 for count-kind rules (and size-kind ones
+    with no size field), the byte length of the rule's size field for
+    size-kind ones — shared by every admission path."""
     counted = F.lit(1)
     for i, s in enumerate(specs):
-        if s["kind"] == "size":
+        if s["kind"] == "size" and s["size_field"]:
+            size_col = F.octet_length(
+                get_col_safe(parse_selector(s["size_field"]), schema).cast("string")
+            )
             counted = F.when(
                 F.col("__fd_rule__") == i, size_col
             ).otherwise(counted)
@@ -282,9 +286,9 @@ def _require_ungated_stream(pred: Column | None, name: str) -> None:
 class Throttle(Action):
     def apply_impl(self, df: DataFrame, pred: Column | None) -> DataFrame:
         _check_limiter_backend(self.params.get("limiter_backend"))
-        specs, rule_idx, size_col, ts = self._rules(df)
+        specs, rule_idx, ts = self._rules(df)
         if df.isStreaming:
-            return self._apply_stream(df, pred, specs, rule_idx, size_col, ts)
+            return self._apply_stream(df, pred, specs, rule_idx, ts)
         key_field = self.params.get("throttle_field", "")
         bucket_s = _parse_duration_seconds(self.params.get("bucket_interval"), 60.0)
         buckets_count = int(self.params.get("buckets_count", 60))
@@ -346,14 +350,12 @@ class Throttle(Action):
             # getDistrData) — which no window expression can replay.
             # Exact replay per (key, bucket, rule) group; parallelism
             # across groups, faithful sequential replay within one.
-            return self._admit_exact(
-                df, specs, size_col, order_fields, helper_cols
-            )
+            return self._admit_exact(df, specs, order_fields, helper_cols)
 
         # per-row (counted value, limit) from the matched rule — the
         # counted value through the SAME shared projection the
         # dist/stream paths use (one definition, no drift)
-        counted = _counted_expr(specs, size_col)
+        counted = _counted_expr(specs, df.schema)
         limit_col = F.lit(specs[-1]["limit"])
         for i, spec in enumerate(specs):
             limit_col = F.when(
@@ -380,18 +382,21 @@ class Throttle(Action):
 
     def _rules(self, df: DataFrame):
         """What the batch and streaming paths share: the rule specs,
-        the first-matching-rule index, the size column size-kind rules
-        count, and the parsed event time.
+        the first-matching-rule index and the parsed event time.  A
+        size-kind rule counts the bytes of its own ``limit_size_field``,
+        else of the top-level one.
 
         Rules are the config rules in order, then the implicit default
         rule (matches everything) — first match wins, and each rule
         owns its own limiters (throttle.go:117-125,467-475: limiter
         key embeds the rule index, so counting is per (rule, key))."""
         limit = int(self.params.get("default_limit", 5000))
+        size_field = self.params.get("limit_size_field", "")
         specs = [
             {
                 "limit": int(rcfg.get("limit", limit)),
                 "kind": rcfg.get("limit_kind", "count"),
+                "size_field": rcfg.get("limit_size_field") or size_field,
                 "conditions": rcfg.get("conditions") or {},
                 "dist": rcfg.get("limit_distribution") or {},
             }
@@ -401,6 +406,7 @@ class Throttle(Action):
             {
                 "limit": limit,
                 "kind": self.params.get("limit_kind", "count"),
+                "size_field": size_field,
                 "conditions": {},
                 "dist": self.params.get("limit_distribution") or {},
             }
@@ -424,15 +430,6 @@ class Throttle(Action):
                 rule_idx
             )
 
-        size_field = self.params.get("limit_size_field", "")
-        size_col = (
-            F.octet_length(
-                get_col_safe(parse_selector(size_field), df.schema).cast("string")
-            )
-            if size_field
-            else F.lit(1)
-        )
-
         # loud on un-timestampable types; parse failures -> null bucket
         # (never backfill wall clock — see round-2 postmortem).  The
         # stream parses through the same Go-layout machinery
@@ -446,9 +443,9 @@ class Throttle(Action):
             self.params.get("time_field_format", "rfc3339nano"),
             context="throttle time_field",
         )
-        return specs, rule_idx, size_col, ts
+        return specs, rule_idx, ts
 
-    def _apply_stream(self, df, pred, specs, rule_idx, size_col, ts):
+    def _apply_stream(self, df, pred, specs, rule_idx, ts):
         """Streaming throttle with full rule parity: the same specs /
         rule-index / counted-value / distribution-index columns as the
         batch path feed the keyed state function, which owns one bucket
@@ -462,7 +459,7 @@ class Throttle(Action):
             return df  # negative limit = unlimited (throttle_test.go:153-181)
         staged = (
             df.withColumn("__fd_rule__", rule_idx)
-            .withColumn("__fd_cnt__", _counted_expr(specs, size_col))
+            .withColumn("__fd_cnt__", _counted_expr(specs, df.schema))
             .withColumn("__fd_didx__", _didx_expr(specs, df.schema))
             .withColumn("__fd_ts__", ts)
         )
@@ -488,7 +485,7 @@ class Throttle(Action):
             didx_col="__fd_didx__",
         )
 
-    def _admit_exact(self, df, specs, size_col, order_fields, helper_cols):
+    def _admit_exact(self, df, specs, order_fields, helper_cols):
         """Exact distribution replay: the sequential admission of
         in_memory_limiter.isAllowed per (key, bucket, rule) group,
         default-distribution stealing included (getDistrData),
@@ -513,7 +510,7 @@ class Throttle(Action):
                 for i, c in enumerate(order_fields)
             ],
             _didx_expr(specs, df.schema).cast("int").alias("d"),
-            _counted_expr(specs, size_col).cast("bigint").alias("c"),
+            _counted_expr(specs, df.schema).cast("bigint").alias("c"),
             F.struct(*[F.col(c) for c in payload_cols]).alias("p"),
         )
         gated = df.filter(~F.col("__fd_m__")).select(*payload_cols)

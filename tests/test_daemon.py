@@ -15,6 +15,10 @@ import pytest
 
 from file_d_spark.__main__ import load_pipelines, main, serve_control_plane
 
+# the checkout this test file belongs to: the daemon subprocess must
+# import this tree's file_d_spark, whatever directory it runs from
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _write(path, text):
     with open(path, "w") as fh:
@@ -231,7 +235,7 @@ pipelines:
          "--config", str(cfg),
          "--checkpoint-root", str(tmp_path / "ck"),
          "--http", "127.0.0.1:0", "--cpus", "2"],
-        env={**os.environ, "PYTHONPATH": "/root/repo"},
+        env={**os.environ, "PYTHONPATH": _REPO},
         stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
     )
     try:

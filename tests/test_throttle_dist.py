@@ -168,8 +168,8 @@ def _oracle_survivors(rows: list[dict], cfg: dict, gate) -> list[int]:
     JVM fold is checked against.  Covers the shapes these corpora use:
     a 1m bucket with no ring clamp, rfc3339 times that sort as text,
     ``n`` as the arrival order, rules with equality conditions, count
-    or size kind (sized by the top-level ``limit_size_field``, else
-    1), and distributions over one field; ``gate(row)``
+    or size kind (sized by the rule's ``limit_size_field``, else the
+    top-level one, else 1), and distributions over one field; ``gate(row)``
     stands for the do_if (gated rows bypass uncounted)."""
     assert cfg["bucket_interval"] == "1m" and cfg["buckets_count"] >= 100000
     default = {**cfg, "conditions": {}, "limit": cfg["default_limit"]}
@@ -198,8 +198,8 @@ def _oracle_survivors(rows: list[dict], cfg: dict, gate) -> list[int]:
         if limit < 0:
             kept.append(row["n"])  # negative limit = unlimited
             continue
-        cnt = 1  # size kind counts the top-level limit_size_field
-        size_field = cfg.get("limit_size_field")
+        cnt = 1  # size kind counts the rule's limit_size_field, else the top-level one
+        size_field = rc.get("limit_size_field") or cfg.get("limit_size_field")
         if rc.get("limit_kind", "count") == "size" and size_field:
             cnt = len(row[size_field].encode())
         group = buckets.setdefault((row["k"], row["time"][:16], ri), {})
