@@ -5,7 +5,7 @@ queries()     -> every implemented operator from SURVEY.md §2 (plus the
                  training-data ops) as (spark, sf_dir) -> DataFrame,
                  rotated so the driver's ~50-row correctness cap
                  verifies every never-checked or changed-this-round
-                 query first (queries._SWEEP_CHANGED + _reorder_sweep)
+                 query first (queries._SWEEP_CHANGED + sweep_order)
 oracle_sql()  -> matching DuckDB SQL for EVERY query (since round 5
                  even kitchen_sink_actions: clock pinned via set_time's
                  `now`, hostname embedded as a literal)
@@ -32,9 +32,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from file_d_spark.queries import QUERIES
+    from file_d_spark.queries import QUERIES, sweep_order
 
-    return dict(QUERIES)
+    return {name: QUERIES[name] for name in sweep_order()}
 
 
 def oracle_sql() -> dict[str, str]:

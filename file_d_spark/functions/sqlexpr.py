@@ -35,11 +35,6 @@ def arr_l_sql(vals) -> str:
     return "array(" + ", ".join(f"{int(v)}L" for v in vals) + ")"
 
 
-def lit_doubles(vals) -> Column:
-    """Constant array<double> Column in ONE py4j trip."""
-    return F.expr(arr_d_sql(vals))
-
-
 def lit_longs(vals) -> Column:
     """Constant array<bigint> Column in ONE py4j trip."""
     return F.expr(arr_l_sql(vals))

@@ -5324,7 +5324,7 @@ def q_quantile_thresholds(spark, sf_dir):
 #           driver-verified.  These MUST land inside the window.
 #   tier 2  STALE — everything else ordered by the round of its last
 #           driver-green row, OLDEST FIRST (read from the repo's
-#           CORRECTNESS_r*.json at import), so no green row can age
+#           CORRECTNESS_r*.json by sweep_order), so no green row can age
 #           more than a couple of rounds before re-verification.
 #   tier 3  PARKED — the freshest-evidence rows overflow past the
 #           window; losing a round's driver row there costs the least.
@@ -5409,7 +5409,10 @@ def _driver_green_rounds() -> dict[str, int]:
     return out
 
 
-def _reorder_sweep() -> None:
+def sweep_order() -> list[str]:
+    """Registered names in the rotated order above, which
+    ``__spark_entry__.queries()`` applies; reads the repo's
+    CORRECTNESS_r*.json, so it runs on call, never at import."""
     greens = _driver_green_rounds()
     reg_pos = {k: i for i, k in enumerate(QUERIES)}
     # a changed query re-greened by a driver round AT OR AFTER the
@@ -5424,14 +5427,8 @@ def _reorder_sweep() -> None:
     # never-verified first (green round 0), then oldest evidence first;
     # registration order breaks ties deterministically
     rest.sort(key=lambda k: (greens.get(k, 0), reg_pos[k]))
-    ordered = {k: QUERIES[k] for k in changed + rest}
-    assert len(ordered) == len(QUERIES), "sweep reorder lost a query"
     assert len(changed) <= _SWEEP_WINDOW, "changed list alone exceeds the window"
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder_sweep()
+    return changed + rest
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:

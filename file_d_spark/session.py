@@ -20,7 +20,8 @@ archive records it at exit (``-XX:ArchiveClassesAtExit``) and
 publishes it by rename; that one process starts slower and spends
 ~15-30 s at exit writing the 140-160 MB file.  The archive lives in
 ``${XDG_CACHE_HOME:-~/.cache}/file_d_spark/cds/``, keyed by the java
-binary and the Spark jars; deleting the directory resets it.
+binary and the Spark jars, and publishing one removes the archives of
+other keys; deleting the directory resets it.
 ``cds_launch`` says when the archive cannot be used (anything that
 could put a non-empty directory on the launcher classpath) and the
 JVM then starts exactly as it would without it.
@@ -89,7 +90,8 @@ class CdsLaunch:
         whole one: exit status 0 and the "Written" line in its log.  A
         partial file never reaches ``archive`` (JDK 17 dies with SIGBUS
         mapping a truncated archive), so a failed, timed-out or killed
-        recording leaves only a tmp file, removed here or swept later."""
+        recording leaves only a tmp file, removed here or swept later.
+        Publishing removes every other key's archive."""
         ok = False
         try:
             proc.stdin.close()  # the gateway exits on stdin EOF
@@ -102,6 +104,14 @@ class CdsLaunch:
             ok = rc == 0 and _CDS_WRITTEN in _read_text(self.log)
             if ok:
                 os.replace(self.tmp, self.archive)
+                # an archive of another key (an older java binary, conf
+                # dir or jar set) is never mapped again; a JVM that maps
+                # one keeps its mapping after the unlink, and a launch
+                # that finds its archive gone starts without it
+                cache = os.path.dirname(self.archive)
+                for name in os.listdir(cache):
+                    if name.endswith(".jsa") and os.path.join(cache, name) != self.archive:
+                        _unlink(os.path.join(cache, name))
         finally:
             self.release(remove_tmp=not ok)
         return ok

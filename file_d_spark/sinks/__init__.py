@@ -1173,13 +1173,6 @@ def build_stream_sink(
     raise ValueError(f"unsupported streaming output type: {typ!r}")
 
 
-class _PlanView:
-    """Minimal plan stand-in for nested sink configs (deadqueue)."""
-
-    def __init__(self, output: dict):
-        self.output = output
-
-
 def _write_one(df: DataFrame, typ: str, cfg: dict[str, Any]) -> Any:
     if typ == "clickhouse" and cfg.get("columns"):
         # native CH column types (Enum/IPv4-6/DateTime64/...) —

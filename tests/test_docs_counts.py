@@ -3,7 +3,12 @@ totals must be derived from the live registry, never hand-edited
 numbers that drift (r3 postmortem: docs said 70/69 while the registry
 held 71/70)."""
 
+import glob
+import json
 import re
+import subprocess
+import sys
+import textwrap
 
 from file_d_spark.queries import ORACLES, QUERIES
 
@@ -125,7 +130,7 @@ def test_sweep_window_capacity():
     # round has been re-verified post-change — it no longer needs a
     # window slot (it stays in the list only until the next round's
     # session clears it)
-    # mirror _reorder_sweep exactly: only REGISTERED changed entries
+    # mirror sweep_order exactly: only REGISTERED changed entries
     # count (a folded-away name left in the list is runtime-ignored)
     must |= {
         k for k in _SWEEP_CHANGED
@@ -136,3 +141,33 @@ def test_sweep_window_capacity():
         f"window holds {_SWEEP_WINDOW}: consolidate or defer registrations "
         f"(sorted overflow candidates: {sorted(must)[:8]}...)"
     )
+
+
+def test_queries_import_reads_no_artifact():
+    """Importing the registry opens no CORRECTNESS_r*.json and leaves
+    QUERIES in registration order; only sweep_order, which
+    __spark_entry__.queries() applies, reads the round files."""
+    code = textwrap.dedent(
+        """
+        import json, sys
+        opened = []
+        sys.addaudithook(lambda ev, args: ev == "open" and opened.append(str(args[0])))
+        from file_d_spark.queries import QUERIES, sweep_order
+        at_import = [p for p in opened if "CORRECTNESS_r" in p]
+        sweep_order()
+        print(json.dumps({
+            "at_import": at_import,
+            "by_sweep": [p for p in opened if "CORRECTNESS_r" in p],
+            "order": list(QUERIES),
+        }))
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True
+    ).stdout
+    got = json.loads(out.splitlines()[-1])
+    assert got["at_import"] == []
+    if glob.glob("CORRECTNESS_r*.json"):
+        assert got["by_sweep"]  # the hook sees the reads it should
+    registered = re.findall(r'^@query\(\s*"(\w+)"', open("file_d_spark/queries.py").read(), re.M)
+    assert got["order"] == registered

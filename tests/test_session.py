@@ -71,12 +71,26 @@ def test_use_existing_archive(home):
 
 
 def test_key_follows_jars_and_java(home, tmp_path):
+    """A new key records its own archive, and publishing it removes the
+    archives of other keys but no other key's lock, tmp or log file."""
     spark_home, env = home
     a = cds_launch(env, spark_home)
     a.release()
+    open(a.archive, "wb").close()
     (tmp_path / "spark" / "jars" / "c.jar").write_bytes(b"new")
     b = cds_launch(env, spark_home)
-    b.release()
+    assert b.lock and b.archive != a.archive
+    cache = cds_cache_dir(env)
+    others = ["k.lock", "k.1.tmp", "k.1.log"]
+    for name in others:
+        open(os.path.join(cache, name), "w").close()
+    open(b.tmp, "wb").close()
+    with open(b.log, "w") as fh:
+        fh.write("[info][cds,dynamic] Written dynamic archive 0x0 - 0x1\n")
+    assert b.publish(subprocess.Popen(["sh", "-c", "cat >/dev/null"], stdin=subprocess.PIPE))
+    left = os.listdir(cache)
+    assert [n for n in left if n.endswith(".jsa")] == [os.path.basename(b.archive)]
+    assert set(others) <= set(left)
     (tmp_path / "jdk2" / "bin").mkdir(parents=True)
     (tmp_path / "jdk2" / "bin" / "java").write_text("")
     c = cds_launch(dict(env, JAVA_HOME=str(tmp_path / "jdk2")), spark_home)

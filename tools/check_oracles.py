@@ -9,7 +9,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the repo root replaces this script's directory, where tools/profile.py
+# would shadow the standard library's profile module
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb
 import pandas as pd

@@ -32,7 +32,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the repo root replaces this script's directory, where tools/profile.py
+# would shadow the standard library's profile module
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 BASE_SF = "/root/testdata/sf0.1"
 

@@ -9,38 +9,18 @@ Usage: python tools/sweep_state.py
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def last_green() -> dict[str, int]:
-    """query -> newest round with a hash-green (or rows-green when no
-    oracle existed) driver row."""
-    out: dict[str, int] = {}
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        data = json.load(open(path))
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            ok = row.get("hash_match") or (
-                row.get("hash_match") is None and row.get("rows_match")
-            )
-            if ok and not row.get("err"):
-                out[name] = max(out.get(name, 0), rnd)
-    return out
+# the repo root replaces this script's directory, where tools/profile.py
+# would shadow the standard library's profile module
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
-    from file_d_spark.queries import QUERIES
+    from file_d_spark.queries import QUERIES, _driver_green_rounds
 
-    greens = last_green()
+    greens = _driver_green_rounds()
     rows = [(greens.get(q, 0), q) for q in QUERIES]
     for rnd, q in sorted(rows):
         tag = "NEVER" if rnd == 0 else f"r{rnd}"
