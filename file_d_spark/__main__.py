@@ -71,7 +71,7 @@ def build_resetters(pipelines: dict) -> dict:
 
 
 def serve_control_plane(
-    spark, queries: dict, state: dict, host: str, port: int,
+    spark, queries: dict, ring, state: dict, host: str, port: int,
     resetters: dict | None = None,
 ):
     """The daemon HTTP mux (file.d.go:327-373): control endpoints plus
@@ -79,46 +79,11 @@ def serve_control_plane(
     threads (goroutine-dump analogue), /profile (sampled folded
     stacks), /heap (tracemalloc), /cmdline, and /freeosmem (gc pass).
     The Go-specific mutex/block profile-rate knobs have no Python
-    analogue and stay unexposed.  Returns the ThreadingHTTPServer
-    (already serving)."""
+    analogue and stay unexposed.  /metrics reads the running totals of
+    ``ring``, the :class:`~file_d_spark.metrics.ProgressRing` listening
+    to ``queries``.  Returns the ThreadingHTTPServer (already
+    serving)."""
     resetters = resetters or {}
-
-    # Monotonic output-row counters.  recentProgress is a bounded ring
-    # (~100 entries): re-summing it on every scrape undercounts long
-    # runs and DECREASES as old batches roll off, which breaks
-    # Prometheus counter semantics (rate() misfires on resets) — ADVICE
-    # r7.  Instead fold each batch into a running total exactly once,
-    # keyed on batchId; no-data ticks repeat the last batchId and are
-    # skipped by the > guard.
-    counter_lock = threading.Lock()
-    counter_state: dict = {
-        name: {"last_batch": -1, "total": 0, "run_id": None}
-        for name in queries
-    }
-
-    def output_rows_total(name, q) -> int:
-        st = counter_state.setdefault(
-            name, {"last_batch": -1, "total": 0, "run_id": None}
-        )
-        with counter_lock:
-            # A stop/restart starts a new run whose batchIds may reset
-            # to 0; without clearing the high-water mark the counter
-            # freezes forever after any restart (ADVICE r8).  The
-            # running total carries across runs — the counter stays
-            # monotonic, only the dedup key resets.
-            run_id = str(getattr(q, "runId", "") or "")
-            if run_id != st.get("run_id"):
-                st["run_id"] = run_id
-                st["last_batch"] = -1
-            for prog in q.recentProgress:
-                bid = int(prog.get("batchId", -1))
-                if bid <= st["last_batch"]:
-                    continue
-                st["last_batch"] = bid
-                st["total"] += max(
-                    0, int(prog["sink"].get("numOutputRows", 0) or 0)
-                )
-            return st["total"]
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):
@@ -250,7 +215,7 @@ def serve_control_plane(
                 for name, q in queries.items():
                     reg.inc(
                         "output_plugin_events_count_total",
-                        output_rows_total(name, q),
+                        ring.totals(q.id)["numOutputRows"],
                         pipeline=name,
                     )
                 body = reg.render().encode()
@@ -354,6 +319,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from file_d_spark import Pipeline, get_spark
+    from file_d_spark.metrics import ProgressRing
 
     pipelines = load_pipelines(args.config)
     # embedding (tests, notebooks): reuse a live session and leave it
@@ -374,6 +340,9 @@ def main(argv: list[str] | None = None) -> int:
     signal.signal(signal.SIGTERM, stop)
     signal.signal(signal.SIGINT, stop)
 
+    # the /metrics totals must see every batch, so listen from the start
+    ring = ProgressRing()
+    spark.streams.addListener(ring)
     queries = Pipeline.run_all_streams(
         pipelines, spark, args.checkpoint_root,
         trigger_available_now=args.once,
@@ -384,7 +353,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.http != "off":
         host, _, port = args.http.rpartition(":")
         srv = serve_control_plane(
-            spark, queries, state, host or "127.0.0.1", int(port),
+            spark, queries, ring, state, host or "127.0.0.1", int(port),
             resetters=build_resetters(pipelines),
         )
         log.info("control plane on %s", args.http)
@@ -410,6 +379,7 @@ def main(argv: list[str] | None = None) -> int:
         state["stopping"] = True
         if srv is not None:
             srv.shutdown()
+        spark.streams.removeListener(ring)
         if owns_session:
             spark.stop()
     return 0

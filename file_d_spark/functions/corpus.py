@@ -1552,285 +1552,3 @@ def quantile_thresholds(
             F.min("__s__").alias("threshold"),
         )
     )
-
-
-def vocab_coverage(
-    df: DataFrame,
-    lang_col: str,
-    text_col: str,
-    vocab_size: int = 500,
-) -> DataFrame:
-    """Per-language coverage of a top-``vocab_size`` global word
-    vocabulary — the OOV-rate audit run before freezing a tokenizer
-    vocab: a language whose tokens are mostly out-of-vocabulary will
-    be shredded to characters (or UNK) by that vocab.
-
-    Vocabulary selection is deterministic: global word counts ranked
-    by (count desc, word asc), top ``vocab_size`` kept.
-
-    Scale shape: one zipfian word groupBy (map-side combine) feeds a
-    TakeOrderedAndProject of ``vocab_size`` rows — the only ordered
-    structure is vocab-sized; the coverage pass re-scans the tokens
-    narrowly and LEFT-SEMI-ish joins the broadcast vocab (a left join
-    on the bounded frame, flagging membership), then one lang-keyed
-    aggregate.  The corpus never enters a wide dependency.
-
-    Returns (lang, n_tokens, in_vocab, oov_rate) with exact BIGINT
-    counts and oov_rate rounded to 6dp.
-    """
-    if vocab_size < 1:
-        raise ValueError(f"vocab_coverage: vocab_size must be >= 1, got {vocab_size}")
-    words = df.select(
-        F.col(lang_col).alias("lang"),
-        F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("w"),
-    ).filter(F.col("w") != "")
-    vocab = (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("__c__"))
-        .orderBy(F.col("__c__").desc(), "w")
-        .limit(vocab_size)
-        .select("w", F.lit(1).alias("__in__"))
-    )
-    return (
-        words.join(F.broadcast(vocab), "w", "left")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum(F.coalesce(F.col("__in__"), F.lit(0)).cast("long")).alias(
-                "in_vocab"
-            ),
-        )
-        .select(
-            "lang",
-            "n_tokens",
-            "in_vocab",
-            F.round(
-                F.lit(1.0)
-                - F.col("in_vocab").cast("double") / F.col("n_tokens"),
-                6,
-            ).alias("oov_rate"),
-        )
-    )
-
-
-def decontaminate_spans(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 8,
-) -> DataFrame:
-    """Cross-corpus exact-span DECONTAMINATION (the ExactSubstr cut of
-    Lee et al. 2107.06499 pointed at benchmark leakage): every train
-    token covered by an n-gram that appears VERBATIM anywhere in
-    ``eval_df`` is removed.  Where :func:`~file_d_spark.functions.
-    dedup.fuzzy_decontaminate` flags whole documents by near-dup
-    similarity, this cuts exactly the leaked spans and keeps the rest
-    of the document.
-
-    Returns ``(id_col, n_tokens, n_removed, clean_text)`` for every
-    train document (same contract as :func:`remove_dup_spans`).
-
-    Scale shape — cheaper than the within-corpus cut: no corpus-wide
-    count window at all.  The eval side (benchmarks — MBs at any
-    corpus scale) condenses to its DISTINCT gram hashes and BROADCASTS
-    into a left-semi join against the train grams, so the corpus never
-    enters a wide dependency; contaminated start positions collapse to
-    one int array per AFFECTED doc (output proportional to the leaked
-    region), and the span expand/cut/rejoin runs in-row via array HOFs
-    exactly like remove_dup_spans.  Grams travel as the portable
-    60-bit md5-prefix hash, so a DuckDB oracle reproduces the join
-    keys — collisions included.
-    """
-    from file_d_spark.functions.dedup import _portable_hash60
-
-    if n < 2:
-        raise ValueError("decontaminate_spans: n must be >= 2")
-
-    def gram_frame(frame: DataFrame, with_id: bool) -> DataFrame:
-        t = frame.select(
-            F.col(id_col).alias("__id__"),
-            tokens(F.col(text_col)).alias("__t__"),
-        )
-        starts = F.when(
-            F.size("__t__") >= n,
-            F.sequence(F.lit(1), F.size("__t__") - F.lit(n - 1)),
-        ).otherwise(F.array().cast("array<int>"))
-        g = t.select(
-            "__id__",
-            F.explode(
-                F.transform(
-                    starts,
-                    lambda s: F.struct(
-                        s.alias("s"),
-                        _portable_hash60(
-                            F.concat_ws(" ", F.slice(F.col("__t__"), s, n))
-                        ).alias("h"),
-                    ),
-                )
-            ).alias("__g__"),
-        ).select(
-            "__id__",
-            F.col("__g__.s").alias("__s__"),
-            F.col("__g__.h").alias("__h__"),
-        )
-        return g if with_id else g.select("__h__").distinct()
-
-    toks = train.select(
-        F.col(id_col).alias("__id__"),
-        tokens(F.col(text_col)).alias("__t__"),
-    )
-    leaked = gram_frame(train, True).join(
-        F.broadcast(gram_frame(eval_df, False)), "__h__", "left_semi"
-    )
-    leak_starts = leaked.groupBy("__id__").agg(
-        F.collect_list("__s__").alias("__ds__")
-    )
-    covered = F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.coalesce(F.col("__ds__"), F.array().cast("array<int>")),
-                lambda s: F.sequence(s, s + F.lit(n - 1)),
-            )
-        )
-    )
-    joined = toks.join(leak_starts, "__id__", "left").withColumn(
-        "__cov__", covered
-    )
-    kept = F.filter(
-        F.col("__t__"),
-        lambda t, i: ~F.array_contains(F.col("__cov__"), i + F.lit(1)),
-    )
-    return joined.select(
-        F.col("__id__").alias(id_col),
-        F.size("__t__").alias("n_tokens"),
-        (F.size("__t__") - F.size(kept)).alias("n_removed"),
-        F.concat_ws(" ", kept).alias("clean_text"),
-    )
-
-
-def assoc_audit(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Pairwise categorical-association audit (chi-square + Cramér's
-    V) over metadata columns — the split-leakage QC a training
-    pipeline runs after :func:`hash_split`: a train/val/test
-    assignment that CORRELATES with language, source, or time (V
-    meaningfully above 0) silently biases every downstream eval,
-    and the same audit flags redundant metadata (V near 1 means one
-    column is a function of the other).
-
-    Exactness: this deliberately reports chi-square / Cramér's V,
-    NOT ln-based mutual information — entropy terms go through libm
-    ``ln``, which is only 1-ulp-accurate and differs between the
-    JVM and C libm, so an MI sum can flip its last rounded digit
-    across engines.  Every operation here is correctly-rounded IEEE
-    binary64 (+, −, ×, ÷) on exact integer counts, so each cell's
-    term is BIT-IDENTICAL cross-engine, and the per-cell terms are
-    fixed-pointed by ``floor(term · 2^20)`` (a power-of-two scale —
-    no decimal .5 boundary) and summed as exact BIGINTs, making the
-    aggregate independent of summation order.  The final
-    ``chi2``/``cramers_v`` derive from those integers through one
-    exact power-of-two division and a correctly-rounded sqrt.
-
-    Scale shape: ONE corpus scan — each row explodes into
-    len(cols choose 2) tagged pair cells (a constant), map-side
-    combined into the (pair, value_a, value_b) histogram; marginals
-    and totals are window sums OVER THE HISTOGRAM (bounded by the
-    category-cardinality product, never the corpus), and the final
-    aggregate is histogram-sized.  NULL categories participate as
-    the empty-string category.
-
-    Output, one row per unordered column pair: (col_a, col_b, n,
-    k_a, k_b, chi2_fp, chi2, cramers_v) with chi2/cramers_v rounded
-    to 6 (derived from chi2_fp — the exact integer is the
-    engine-parity anchor).
-    """
-    if len(set(cols)) != len(cols):
-        # a repeated column would yield a degenerate self-pair row
-        # reporting V = 1 — a spurious "perfect leakage" signal in
-        # the very table this audit exists to make trustworthy
-        raise ValueError("assoc_audit columns must be distinct")
-    bad = [c for c in cols if "|" in str(c)]
-    if bad:
-        # '|' is the pair-tag delimiter: such a name would mislabel
-        # col_a/col_b and could merge two pairs' histograms
-        raise ValueError(
-            f"assoc_audit column names cannot contain '|': {bad}"
-        )
-    pairs = [
-        (cols[i], cols[j])
-        for i in range(len(cols))
-        for j in range(i + 1, len(cols))
-    ]
-    if not pairs:
-        raise ValueError("assoc_audit needs at least two columns")
-    hist = (
-        df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(f"{a}|{b}").alias("pair"),
-                            F.coalesce(F.col(a).cast("string"), F.lit(""))
-                            .alias("va"),
-                            F.coalesce(F.col(b).cast("string"), F.lit(""))
-                            .alias("vb"),
-                        )
-                        for a, b in pairs
-                    ]
-                )
-            ).alias("c")
-        )
-        .select("c.pair", "c.va", "c.vb")
-        .groupBy("pair", "va", "vb")
-        .agg(F.count(F.lit(1)).cast("double").alias("n_ab"))
-    )
-    w_a = Window.partitionBy("pair", "va")
-    w_b = Window.partitionBy("pair", "vb")
-    w_p = Window.partitionBy("pair")
-    na = F.sum("n_ab").over(w_a)
-    nb = F.sum("n_ab").over(w_b)
-    n = F.sum("n_ab").over(w_p)
-    # The histogram holds only OBSERVED cells, so the textbook
-    # sum((n_ab - e)^2 / e) would silently drop every zero cell's
-    # contribution (e each).  Use the algebraic identity
-    # chi2 = sum_over_ALL_cells((n_ab - e)^2/e) = sum(n_ab^2/e) - n:
-    # zero cells contribute 0 to the first term, so summing observed
-    # cells is EXACT.  e = na*nb/n; every op correctly rounded on
-    # identical inputs => bit-identical doubles per cell.
-    e = na * nb / n
-    term = (F.col("n_ab") * F.col("n_ab")) / e
-    scored = hist.select(
-        "pair",
-        "va",
-        "vb",
-        n.alias("n"),
-        F.floor(term * F.lit(1048576.0)).cast("long").alias("term_fp"),
-    )
-    agg = scored.groupBy("pair").agg(
-        F.first("n").cast("long").alias("n"),
-        F.countDistinct("va").cast("long").alias("k_a"),
-        F.countDistinct("vb").cast("long").alias("k_b"),
-        F.sum("term_fp").cast("long").alias("chi2_fp"),
-    )
-    # floor truncation makes the fp sum a hair LOW; after "- n" a
-    # genuinely-zero chi2 could dip epsilon-negative — clamp
-    chi2 = F.greatest(
-        F.col("chi2_fp").cast("double") / F.lit(1048576.0)
-        - F.col("n").cast("double"),
-        F.lit(0.0),
-    )
-    dof = F.least(F.col("k_a"), F.col("k_b")) - F.lit(1)
-    v = F.when(
-        dof > 0,
-        F.sqrt(chi2 / (F.col("n").cast("double") * dof.cast("double"))),
-    ).otherwise(F.lit(0.0))
-    return agg.select(
-        F.split_part(F.col("pair"), F.lit("|"), F.lit(1)).alias("col_a"),
-        F.split_part(F.col("pair"), F.lit("|"), F.lit(2)).alias("col_b"),
-        "n",
-        "k_a",
-        "k_b",
-        "chi2_fp",
-        F.round(chi2, 6).alias("chi2"),
-        F.round(v, 6).alias("cramers_v"),
-    )

@@ -1114,214 +1114,3 @@ def dedup_clusters(
             "is_representative", (F.col(id_col) == F.col("cluster_id"))
         )
     )
-
-
-def keep_best_representative(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "n_chars",
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
-    """Quality-aware duplicate-cluster survivor selection: every doc
-    gets its near-dup cluster (components of ``pairs``, same machinery
-    as :func:`dedup_clusters`), and the KEPT representative is the
-    cluster's highest-``score_col`` member (ties to the smallest id) —
-    the practical dedup policy: when five near-copies exist, keep the
-    best one, not the one with the smallest id.
-
-    Returns ``(id_col, cluster_id, score_col, csize, kept)`` for every
-    input doc.
-
-    Scale shape: survivor selection is ONE keyed aggregation —
-    ``min(struct(-score, id))`` per cluster (the SCORE is negated, not
-    the id, so string/struct ids work) — so a pathological
-    million-member duplicate cluster reduces through map-side partial
-    mins instead of funnelling through a per-cluster rank window; the
-    cluster size rides the same aggregate.  Cluster assignment reuses
-    :func:`connected_components` (bounded driver union-find fast path,
-    large-star/small-star contraction beyond it).  ``score_col`` must
-    be numeric (it is negated); a non-numeric score raises loudly at
-    plan-build instead of silently nulling under implicit casts.
-    """
-    from pyspark.sql import types as T
-
-    score_type = df.schema[score_col].dataType
-    if not isinstance(score_type, T.NumericType):
-        raise ValueError(
-            f"keep_best_representative: score_col {score_col!r} must be "
-            f"numeric, got {score_type.simpleString()}"
-        )
-    cc = connected_components(pairs, src, dst)
-    assigned = (
-        df.select(F.col(id_col), F.col(score_col))
-        .join(cc.withColumnRenamed("id", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-            score_col,
-        )
-    )
-    best = assigned.groupBy("cluster_id").agg(
-        F.min(
-            F.struct(
-                (-F.col(score_col)).alias("ns"),
-                F.col(id_col).alias("kid"),
-            )
-        ).alias("__best__"),
-        F.count(F.lit(1)).alias("csize"),
-    ).select(
-        "cluster_id",
-        F.col("__best__.kid").alias("__keep_id__"),
-        "csize",
-    )
-    # plain equi-join: `best` is cluster-count-sized (corpus-scaled, so
-    # no broadcast hint — AQE broadcasts it when it IS small)
-    return assigned.join(best, "cluster_id").select(
-        id_col,
-        "cluster_id",
-        score_col,
-        "csize",
-        (F.col(id_col) == F.col("__keep_id__")).alias("kept"),
-    )
-
-
-def _bucket_vector_frame(
-    sh: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
-    """Compact (doc, buckets array<long>) frame — one xxhash64 bucket
-    per band from the minhash signature, built with ONE SQL string
-    (the _banded_signatures plan-build economy, bit-equal buckets).
-    Checkpointed COMPACT (one vector per doc) so consumers that
-    posexplode it afterwards don't materialize 16 copies of each
-    vector in the checkpoint."""
-    rows_per_band = num_hashes // bands
-    hashed = sh.select(
-        "doc", base_hashes(F.col("shingles")).alias("__base__")
-    )
-    sig = hashed.select(
-        "doc", minhash_signature(F.col("__base__"), num_hashes).alias("sig")
-    )
-    buckets_sql = "array({})".format(
-        ", ".join(
-            "xxhash64({refs})".format(
-                refs=", ".join(
-                    f"sig[{b * rows_per_band + r}]"
-                    for r in range(rows_per_band)
-                )
-            )
-            for b in range(bands)
-        )
-    )
-    frame = sig.select("doc", F.expr(buckets_sql).alias("buckets"))
-    return _register_cache(frame.localCheckpoint(eager=True))
-
-
-def _first_band_collision(a_vec: Column, b_vec: Column, band: Column) -> Column:
-    """True iff no band BEFORE ``band`` collides between the two
-    bucket vectors — the LSH emit-once predicate (band 0 slices an
-    empty prefix, vacuously true)."""
-    return F.forall(
-        F.zip_with(
-            F.slice(a_vec, F.lit(1), band),
-            F.slice(b_vec, F.lit(1), band),
-            lambda x, y: x != y,
-        ),
-        lambda differs: differs,
-    )
-
-
-def minhash_candidates_emit_once(
-    sh: DataFrame, num_hashes: int = 64, bands: int = 16
-) -> DataFrame:
-    """Distinct MinHash-banded candidate pairs, each emitted from its
-    FIRST colliding band — the LSH emit-once form that replaced the
-    distinct() in ``similarity.banded_cosine_pairs`` (2x on its x10
-    decade row, SCALE.md r11).  Where :func:`minhash_lsh_pairs` dedups
-    multi-band collisions with a pair-key groupBy (a full shuffle of
-    the raw candidate volume), this checks in-row that no EARLIER band
-    collides, over the two carried per-band bucket vectors, so the
-    candidate stream is distinct by construction.
-
-    Same (doc_a, doc_b) set as the groupBy form — asserted in
-    tests/test_dedup_emit_once.py.  MEASURED AND NOT WIRED into the
-    registered operators: at x10 documents (50k docs, ~306k
-    candidates) the groupBy form is FASTER because near-dup
-    candidates are sparse — the pair-key shuffle this avoids is tiny,
-    while carrying the bucket vector through the join is not (numbers
-    in COVERAGE.md "Registry capacity", which records the rejection).
-    Use this form only where multi-band collision volume dominates
-    (the dense regime where ``similarity.banded_cosine_pairs``
-    measured 2x — SCALE.md r11)."""
-    keyed = _bucket_vector_frame(sh, num_hashes, bands).select(
-        "doc",
-        "buckets",
-        F.posexplode("buckets").alias("band", "bucket"),
-    )
-    right = keyed.select(
-        F.col("doc").alias("doc_b"),
-        F.col("buckets").alias("buckets_b"),
-        "band",
-        "bucket",
-    )
-    return (
-        keyed.select(
-            F.col("doc").alias("doc_a"), "buckets", "band", "bucket"
-        )
-        .join(right, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(
-            _first_band_collision(
-                F.col("buckets"), F.col("buckets_b"), F.col("band")
-            )
-        )
-        .select("doc_a", "doc_b")
-    )
-
-
-def minhash_candidates_emit_once_vs(
-    sh_big: DataFrame,
-    sh_small: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """Two-table emit-once MinHash candidates: ``sh_big`` (the corpus
-    shingle frame) against a BROADCAST ``sh_small`` (the eval set) —
-    the :func:`fuzzy_decontaminate` candidate stage without its
-    pair-key groupBy.  With the small side broadcast, the groupBy was
-    the ONLY corpus-volume shuffle left in that operator; the in-row
-    first-colliding-band check removes it, so the corpus stays
-    entirely un-shuffled end to end.  Emits distinct
-    (doc_a = big, doc_b = small) pairs by construction; same set as
-    the groupBy form (tests/test_dedup_emit_once.py).  Like the
-    one-table form, NOT wired into the registered operator — the
-    sparse-candidate measurement (see
-    :func:`minhash_candidates_emit_once`) applies here too; reach
-    for it only when cross-table collision volume dominates."""
-
-    def exploded(sh: DataFrame) -> DataFrame:
-        return _bucket_vector_frame(sh, num_hashes, bands).select(
-            "doc",
-            "buckets",
-            F.posexplode("buckets").alias("band", "bucket"),
-        )
-
-    big = exploded(sh_big).select(
-        F.col("doc").alias("doc_a"), "buckets", "band", "bucket"
-    )
-    small = exploded(sh_small).select(
-        F.col("doc").alias("doc_b"),
-        F.col("buckets").alias("buckets_b"),
-        "band",
-        "bucket",
-    )
-    return (
-        big.join(F.broadcast(small), ["band", "bucket"])
-        .filter(
-            _first_band_collision(
-                F.col("buckets"), F.col("buckets_b"), F.col("band")
-            )
-        )
-        .select("doc_a", "doc_b")
-    )

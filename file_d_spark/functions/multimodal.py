@@ -25,8 +25,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # mapInPandas closures reference module-level helpers; executors may
 # not have the repo on sys.path — pickle this module by value
@@ -43,15 +42,6 @@ MEDIA_META_SCHEMA = (
     "media_id long, kind string, byte_len int, "
     "width int, height int, n_frames int, sample_rate int"
 )
-
-
-def as_media_column(df: DataFrame, content_col: str, kind: str, id_col: str) -> DataFrame:
-    """Normalize to the engine's media layout: (media_id, kind, blob)."""
-    return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.col(content_col).cast("binary").alias("blob"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -327,14 +317,4 @@ def synthesize_media_fixture(
 
     return df.select(id_col, payload_col).mapInPandas(
         run, schema="media_id long, kind string, blob binary"
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_nth: int = 10) -> DataFrame:
-    """Plan frame sampling for video blobs: explode frame indices
-    0..n_frames step every_nth.  (Decode of individual frames is the
-    stubbed step; the explode/partition shape is the real one.)"""
-    return df.withColumn(
-        "frame_idx",
-        F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_nth))),
     )

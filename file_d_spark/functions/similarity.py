@@ -2068,245 +2068,3 @@ def mmr_oracle_sql(
     FROM ({union})""")
     return "".join(parts)
 
-
-# --------------------------------------------------------------------------
-# embedding distribution audit (r12)
-# --------------------------------------------------------------------------
-
-
-def embedding_stats(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    shards: int = 0,
-    _max_exact_rows: int = 131071,
-) -> DataFrame:
-    """Per-dimension distribution audit of an embedding column — the
-    QC pass an embedding pipeline runs before trusting a new encoder
-    drop: a dead dimension (std ~ 0), a collapsed encoder (all dims
-    near-constant), an exploding norm, or a sparsity shift all show up
-    here as one 64-row table.
-
-    Exactness: values are fixed-pointed by ``floor(v * 2^20)`` — a
-    POWER-OF-TWO scale, so the multiply is exact for any float32 input
-    (binary scaling adds no rounding error) and floor is unambiguous;
-    unlike decimal ``round(v, 6)`` there is no .5 boundary on which
-    two engines can disagree (the r12 mmr lesson).  Every aggregate is
-    then an exact BIGINT (count / sum / sum-of-squares / min / max /
-    negatives), and the derived ``mean``/``std`` are IEEE operations
-    on identical integers — bit-identical cross-engine with no
-    rounding step at all.
-
-    Broken-encoder inputs are handled EXPLICITLY, because they are
-    what the audit exists to catch and also exactly where engines
-    diverge on a naive cast (Spark's non-ANSI double→long turns NaN
-    into 0 and saturates ±Inf; DuckDB raises): non-finite cells —
-    NaN, ±Inf, and NULL array elements alike — are
-    COUNTED (``n_nonfinite``) and excluded from the moments, and
-    finite cells clamp to ±8.0 before fixed-pointing (``n_clamped``
-    counts them) — an embedding component beyond ±8 is a defect
-    report, not a datum whose 21st bit matters.  The clamp also
-    bounds the sum-of-squares term at 2^46 per cell, so at most
-    floor((2^63-1) / 2^46) = 131071 finite cells per dim before
-    BIGINT overflow.  That bound is ENFORCED, not just documented
-    (r13): the exact-BIGINT regimes raise (``raise_error``, wrapped
-    around the two wrap-risk columns ``sum_fp``/``sumsq_fp`` so
-    column pruning can't drop the guard) on any group over
-    ``_max_exact_rows`` finite cells — a guard on the FINAL group
-    count is sound for map-side partials too, since every partial is
-    a subset of its group.  Past the bound, pass ``shards > 0``:
-    cells split into ``shards`` row-spread partials
-    (``xxhash64(monotonically_increasing_id) % shards`` — the HASH
-    matters: a raw id stride would let any shards value sharing a
-    factor with the vector width collapse each dim group into one
-    shard), each partial aggregates in exact BIGINT under the same
-    per-partial bound guard, and the shard merge sums in
-    DECIMAL(38,0) — exact integers to 10^38, i.e. ~10^24 rows — so
-    the merged result is bit-identical to the unsharded algebra and
-    independent of the (nondeterministic) shard assignment.  Sharded
-    output carries ``sum_fp``/``sumsq_fp`` as DECIMAL(38,0) instead
-    of BIGINT; every derived column is unchanged.
-
-    Scale shape: one posexplode (dim fan-out is the vector width, not
-    the corpus) into ONE partially-aggregated groupBy on the tiny
-    ``dim`` key — map-side combine reduces each task to ``dim`` rows
-    before the shuffle; no window, no join, no Python.
-    """
-    v = F.col("v").cast("double")
-    # a NULL cell is a broken input too: the raw predicate yields NULL
-    # for it, which would count it in n but in NEITHER n_nonfinite nor
-    # the moments — silently diluting the mean/std denominator.
-    # coalesce pins NULL -> not-finite so it lands in n_nonfinite.
-    finite = F.coalesce(
-        ~(
-            F.isnan(v)
-            | (v == F.lit(float("inf")))
-            | (v == F.lit(float("-inf")))
-        ),
-        F.lit(False),
-    )
-    clamped = F.least(F.greatest(v, F.lit(-8.0)), F.lit(8.0))
-    # per cell: (dim, fin, v_fp, cl) — the finite test, the ±8 clamp
-    # and the 2^20 fixed point
-    cell = df.select(F.posexplode(F.col(vec_col)).alias("d0", "v")).select(
-        (F.col("d0") + 1).alias("dim"),
-        finite.alias("fin"),
-        F.when(
-            finite,
-            F.floor(clamped * F.lit(1048576.0)).cast("long"),
-        ).alias("v_fp"),
-        (finite & (F.abs(v) > F.lit(8.0))).alias("cl"),
-    )
-    exact_aggs = [
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.when(~F.col("fin"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_nonfinite"),
-        F.sum(F.when(F.col("cl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_clamped"),
-        F.coalesce(F.sum("v_fp"), F.lit(0)).cast("long").alias("sum_fp"),
-        F.coalesce(F.sum(F.col("v_fp") * F.col("v_fp")), F.lit(0))
-        .cast("long")
-        .alias("sumsq_fp"),
-        F.min("v_fp").cast("long").alias("min_fp"),
-        F.max("v_fp").cast("long").alias("max_fp"),
-        F.sum(F.when(F.col("v_fp") < 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_neg"),
-    ]
-    # the exact-BIGINT overflow guard, attached to the two columns
-    # that can actually wrap (sumsq at 2^46/cell, sum at 2^23/cell) —
-    # NOT to a bystander column Catalyst could prune away with the
-    # guard inside it.  Under ANSI mode (the session default) an
-    # ACTUAL overflow already throws mid-agg; this guard adds the
-    # actionable message, fires conservatively even when the cells
-    # were too small to wrap, and covers non-ANSI sessions where
-    # sum(long) wraps silently.
-    bound = int(_max_exact_rows)
-
-    def _guard(agg_df, what):
-        nf_ct = F.col("n") - F.col("n_nonfinite")
-        err = F.raise_error(
-            F.format_string(
-                f"embedding_stats: dim %s has %s finite cells in one "
-                f"{what} — over the exact-BIGINT bound ({bound}); "
-                + (
-                    "raise shards to spread the rows further"
-                    if what != "dim group"
-                    else "pass shards > 0 for the DECIMAL(38,0) merge path"
-                ),
-                F.col("dim"),
-                nf_ct,
-            )
-        ).cast("long")
-        out = agg_df
-        for c in ("sum_fp", "sumsq_fp"):
-            out = out.withColumn(
-                c,
-                F.when(nf_ct > F.lit(bound), err).otherwise(F.col(c)),
-            )
-        return out
-
-    if shards and int(shards) > 0:
-        # shard key: HASH of a unique row id — a raw `id % shards`
-        # would inherit posexplode's arithmetic structure (cells of
-        # one dim are spaced `dim_count` apart, so any shards value
-        # sharing a factor with the vector width collapses each dim
-        # group into ONE shard); xxhash64 breaks the stride
-        part = cell.withColumn(
-            "__shard__",
-            F.pmod(
-                F.xxhash64(F.monotonically_increasing_id()),
-                F.lit(int(shards)),
-            ),
-        ).groupBy("dim", "__shard__").agg(*exact_aggs)
-        # each BIGINT partial must itself respect the bound — an
-        # undersized shards value would otherwise wrap per-shard and
-        # the decimal merge would launder the wrapped values as exact
-        part = _guard(part, "(dim, shard) partial")
-        agg = part.groupBy("dim").agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("n_nonfinite").cast("long").alias("n_nonfinite"),
-            F.sum("n_clamped").cast("long").alias("n_clamped"),
-            F.sum(F.col("sum_fp").cast("decimal(38,0)")).alias("sum_fp"),
-            F.sum(F.col("sumsq_fp").cast("decimal(38,0)")).alias("sumsq_fp"),
-            F.min("min_fp").cast("long").alias("min_fp"),
-            F.max("max_fp").cast("long").alias("max_fp"),
-            F.sum("n_neg").cast("long").alias("n_neg"),
-        )
-        return _embedding_stats_finalize(agg)
-    agg = _guard(cell.groupBy("dim").agg(*exact_aggs), "dim group")
-    return _embedding_stats_finalize(agg)
-
-
-def _embedding_stats_finalize(
-    agg: DataFrame, extra_cols: tuple = ()
-) -> DataFrame:
-    """Derive mean/std from the exact integer aggregates — shared by
-    the sharded and unsharded paths so the IEEE derivation is the
-    same expression tree on both."""
-    scale = F.lit(1048576.0)
-    nf = (F.col("n") - F.col("n_nonfinite")).cast("double")
-    mean = F.when(
-        nf > 0, F.col("sum_fp").cast("double") / (nf * scale)
-    )
-    ex2 = F.col("sumsq_fp").cast("double") / (nf * scale * scale)
-    return agg.select(
-        "dim", *extra_cols, "n", "n_nonfinite", "n_clamped",
-        "sum_fp", "sumsq_fp", "min_fp", "max_fp", "n_neg",
-        mean.alias("mean"),
-        F.when(
-            nf > 0, F.sqrt(F.greatest(ex2 - mean * mean, F.lit(0.0)))
-        ).alias("std"),
-    )
-
-
-def embedding_stats_oracle_sql(source_sql: str, vec_expr: str) -> str:
-    """DuckDB mirror of :func:`embedding_stats`."""
-    return f"""
-    WITH src AS ({source_sql}),
-    raw AS (
-      SELECT dim, v::DOUBLE AS v
-      FROM (SELECT unnest({vec_expr}) AS v,
-                   unnest(range(1, len({vec_expr}) + 1)) AS dim
-            FROM src)),
-    cell AS (
-      SELECT dim,
-             coalesce(NOT (isnan(v) OR isinf(v)), FALSE) AS fin,
-             CASE WHEN coalesce(NOT (isnan(v) OR isinf(v)), FALSE)
-                  THEN CAST(floor(least(greatest(v, -8.0), 8.0)
-                                  * 1048576.0) AS BIGINT)
-             END AS v_fp,
-             (coalesce(NOT (isnan(v) OR isinf(v)), FALSE)
-              AND abs(v) > 8.0) AS cl
-      FROM raw),
-    agg AS (
-      SELECT dim,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN NOT fin THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_nonfinite,
-             CAST(sum(CASE WHEN cl THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_clamped,
-             CAST(coalesce(sum(v_fp), 0) AS BIGINT) AS sum_fp,
-             CAST(coalesce(sum(v_fp * v_fp), 0) AS BIGINT) AS sumsq_fp,
-             CAST(min(v_fp) AS BIGINT) AS min_fp,
-             CAST(max(v_fp) AS BIGINT) AS max_fp,
-             CAST(sum(CASE WHEN v_fp < 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_neg
-      FROM cell GROUP BY dim)
-    SELECT dim, n, n_nonfinite, n_clamped,
-           sum_fp, sumsq_fp, min_fp, max_fp, n_neg,
-           CASE WHEN n - n_nonfinite > 0 THEN
-             sum_fp::DOUBLE / ((n - n_nonfinite)::DOUBLE * 1048576.0)
-           END AS mean,
-           CASE WHEN n - n_nonfinite > 0 THEN
-             sqrt(greatest(
-               sumsq_fp::DOUBLE
-                 / ((n - n_nonfinite)::DOUBLE * 1048576.0 * 1048576.0)
-               - (sum_fp::DOUBLE / ((n - n_nonfinite)::DOUBLE * 1048576.0))
-                 * (sum_fp::DOUBLE / ((n - n_nonfinite)::DOUBLE
-                                      * 1048576.0)),
-               0.0))
-           END AS std
-    FROM agg
-    """

@@ -12,9 +12,9 @@ so DuckDB can replay the EXACT sketch, register for register:
 * :func:`kmv_distinct` — K-Minimum-Values / bottom-k (Bar-Yossef et
   al. 2002).  Distinct hashes, k smallest per group, estimate from
   the k-th.
-* :func:`cms_topk` — Count-Min (Cormode & Muthukrishnan 2005) depth×
-  width integer counter matrix + candidate estimation (min over the
-  depth rows), all-integer until the final comparison.
+* :func:`_cms_from_counts` — Count-Min (Cormode & Muthukrishnan
+  2005) depth×width integer counter matrix + candidate estimation
+  (min over the depth rows), all-integer until the final comparison.
 
 Portability contract (shared with dedup/similarity/corpus): hashes
 are the first 8 hex chars of md5 — ``conv(substr(md5(x),1,8),16,10)``
@@ -346,14 +346,13 @@ def kmv_overlap_oracle_sql(
 """
 
 
-def cms_topk(
-    df: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 1024,
-    k: int = 10,
+def _cms_from_counts(
+    counts: DataFrame, value_col: str, depth: int, width: int, k: int
 ) -> DataFrame:
-    """Count-Min sketch + heavy-hitter readout.
+    """Count-Min sketch + heavy-hitter readout over a prepared
+    ``(v, n)`` value-count frame (non-null values cast to string, one
+    row per value).  The caller holds (and caches) that frame, so a
+    suite computing several sketches pays one corpus pass.
 
     Builds the depth×width integer counter matrix (row r hashes
     ``value || '#' || r``), then estimates the frequency of the true
@@ -364,27 +363,6 @@ def cms_topk(
 
     Columns: (value, exact_count, cms_estimate) — the pair exposes
     the sketch's overestimate for error auditing."""
-    counts = (
-        df.select(F.col(value_col).cast("string").alias("v"))
-        .where(F.col("v").isNotNull())
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    from file_d_spark.cachereg import register as _register_cache
-
-    # the (value, count) frame feeds the sketch, the candidate pick
-    # and the readout — one shuffle, reused three times
-    counts = _register_cache(counts.localCheckpoint(eager=True))
-    return _cms_from_counts(counts, value_col, depth, width, k)
-
-
-def _cms_from_counts(
-    counts: DataFrame, value_col: str, depth: int, width: int, k: int
-) -> DataFrame:
-    """CMS sketch + readout over a prepared ``(v, n)`` value-count
-    frame — exactly the aggregate :func:`cms_topk` builds internally.
-    Callers that already hold (and cached) that frame — e.g. a suite
-    computing several sketches off one corpus pass — enter here."""
     rows = F.explode(
         F.sequence(F.lit(0), F.lit(depth - 1))
     ).alias("r")
@@ -426,7 +404,7 @@ def cms_oracle_sql(
     width: int = 1024,
     k: int = 10,
 ) -> str:
-    """DuckDB mirror of :func:`cms_topk`."""
+    """DuckDB mirror of :func:`_cms_from_counts` over ``source_sql``."""
     return f"""
     WITH src AS ({source_sql}),
     counts AS (
@@ -453,46 +431,30 @@ def cms_oracle_sql(
 """
 
 
-def f2_moment(df: DataFrame, value_col: str, reps: int = 16) -> DataFrame:
+def _f2_from_counts(counts: DataFrame, reps: int) -> DataFrame:
     """AMS second-frequency-moment sketch (Alon, Matias & Szegedy
-    1996): F2 = Σ_v f_v² — the SELF-JOIN SIZE of the value column,
-    the quantity a 100 TB join planner wants before committing to a
-    shuffle.  ``reps`` independent ±1 hash signs s_r(v); each rep's
-    X_r = Σ_v s_r(v)·f_v is an EXACT BIGINT (one keyed aggregate over
-    the distinct-value counts frame), E[X_r²] = F2, and the estimate
-    averages the X_r² across reps — the only float op is the final
-    division, so the result is bit-identical cross-engine.
+    1996) over a prepared ``(v, f)`` value-count frame (non-null
+    values cast to string, one row per value; a null contributes no
+    self-join pairs).  F2 = Σ_v f_v² — the SELF-JOIN SIZE of the value
+    column, the quantity a 100 TB join planner wants before committing
+    to a shuffle.  ``reps`` independent ±1 hash signs s_r(v); each
+    rep's X_r = Σ_v s_r(v)·f_v is an EXACT BIGINT (one keyed aggregate
+    over the counts frame), E[X_r²] = F2, and the estimate averages
+    the X_r² across reps — the only float op is the final division, so
+    the result is bit-identical cross-engine.
 
-    Scale shape: one corpus shuffle to (value, count); the sketch side
-    then explodes ``reps`` sign cells per DISTINCT value (bounded by
-    the distinct count, not the row count) into ONE aggregate of
-    ``reps`` rows.  X_r² is computed in exact integer arithmetic —
-    at test scale X_r < 2³¹ so the square fits a BIGINT; at
-    production scale shard values and merge X_r per shard (the sketch
-    is linear: X_r(A∪B) = X_r(A) + X_r(B)).
+    Scale shape: the caller pays one corpus shuffle to (value, count)
+    and can share it across sketches; this side then explodes ``reps``
+    sign cells per DISTINCT value (bounded by the distinct count, not
+    the row count) into ONE aggregate of ``reps`` rows.  X_r² is
+    computed in exact integer arithmetic — at test scale X_r < 2³¹ so
+    the square fits a BIGINT; at production scale shard values and
+    merge X_r per shard (the sketch is linear: X_r(A∪B) = X_r(A) +
+    X_r(B)).
 
     One row: (reps, f2_exact, f2_estimate) — exact vs estimate
-    exposed for error auditing, the cms_topk convention.
-
-    Nulls are dropped (a null contributes no self-join pairs).
+    exposed for error auditing, the CMS readout's convention.
     """
-    from file_d_spark.cachereg import register as _register_cache
-
-    counts = (
-        df.select(F.col(value_col).cast("string").alias("v"))
-        .where(F.col("v").isNotNull())
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-    )
-    # reused by the sign cells AND the exact readout — one shuffle
-    counts = _register_cache(counts.localCheckpoint(eager=True))
-    return _f2_from_counts(counts, reps)
-
-
-def _f2_from_counts(counts: DataFrame, reps: int) -> DataFrame:
-    """F2 sketch + exact readout over a prepared ``(v, f)`` value-count
-    frame — the aggregate :func:`f2_moment` builds internally; entry
-    point for callers sharing one corpus pass across sketches."""
     cells = counts.select(
         "v",
         "f",
@@ -527,7 +489,7 @@ def _f2_from_counts(counts: DataFrame, reps: int) -> DataFrame:
 
 
 def f2_oracle_sql(source_sql: str, value_expr: str, reps: int = 16) -> str:
-    """DuckDB mirror of :func:`f2_moment`."""
+    """DuckDB mirror of :func:`_f2_from_counts` over ``source_sql``."""
     return f"""
     WITH src AS ({source_sql}),
     counts AS (

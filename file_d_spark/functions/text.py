@@ -1,5 +1,5 @@
 """Text-analysis functions for large-scale training-data pipelines:
-tokenization, quality scoring, language ID, document fingerprinting.
+tokenization, language ID, character entropy, document fingerprinting.
 
 These extend the reference's surface (it has no text analytics) with
 the operations a 100 TB corpus pipeline needs; everything is pure
@@ -31,45 +31,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(BPE_TOKEN_RE), 0))
 
 
-def quality_metrics(col: Column) -> dict[str, Column]:
-    """Heuristic quality signals: length, token stats, alpha/space/
-    punct ratios, stopword ratio.  Mirrors common corpus-filter
-    features (C4/Gopher-style rules)."""
-    toks = tokens(col)
-    n_chars = F.length(col)
-    n_tokens = F.size(toks)
-    alpha = F.length(F.regexp_replace(col, r"[^A-Za-z]", ""))
-    spaces = F.length(F.regexp_replace(col, r"[^ ]", ""))
-    digits = F.length(F.regexp_replace(col, r"[^0-9]", ""))
-    stop = F.size(F.array_intersect(toks, F.lit(list(EN_STOPWORDS))))
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "avg_token_len": F.round(
-            (n_chars - spaces).cast("double") / F.greatest(n_tokens, F.lit(1)), 4
-        ),
-        "alpha_ratio": F.round(alpha.cast("double") / F.greatest(n_chars, F.lit(1)), 4),
-        "digit_ratio": F.round(digits.cast("double") / F.greatest(n_chars, F.lit(1)), 4),
-        "has_stopword": (stop > 0).cast("int"),
-    }
-
-
-def quality_score(col: Column) -> Column:
-    """Composite 0..1 quality score from the metric family."""
-    m = quality_metrics(col)
-    length_ok = (
-        (m["n_tokens"] >= 5) & (m["n_tokens"] <= 100000)
-    ).cast("double")
-    word_len_ok = (
-        (m["avg_token_len"] >= 2) & (m["avg_token_len"] <= 12)
-    ).cast("double")
-    return F.round(
-        (length_ok + word_len_ok + m["alpha_ratio"] + m["has_stopword"].cast("double"))
-        / 4.0,
-        4,
-    )
-
-
 # tiny per-language stopword seeds for the n-gram/stopword heuristic
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "for", "on"]
 DE_STOPWORDS = ["der", "die", "das", "und", "ist", "nicht", "ein", "zu", "mit", "auf"]
@@ -77,28 +38,6 @@ ES_STOPWORDS = ["el", "la", "de", "que", "y", "en", "un", "es", "por", "con"]
 FR_STOPWORDS = ["le", "la", "de", "et", "un", "est", "pour", "dans", "que", "sur"]
 
 LANG_STOPWORDS = {"en": EN_STOPWORDS, "de": DE_STOPWORDS, "es": ES_STOPWORDS, "fr": FR_STOPWORDS}
-
-
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Stopword-hit counts per candidate language (distinct tokens)."""
-    toks = F.array_distinct(tokens(F.lower(col)))
-    return {
-        lang: F.size(F.array_intersect(toks, F.lit(list(words))))
-        for lang, words in LANG_STOPWORDS.items()
-    }
-
-
-def lang_id(col: Column) -> Column:
-    """argmax language by stopword hits; 'und' (undetermined) when all
-    scores are zero.  Ties break by fixed language order en>de>es>fr.
-
-    NOTE for hot paths: as a single expression the token chain is
-    re-evaluated for every score reference (HOFs sit outside codegen's
-    subexpression elimination).  Per-row cost is ~9 tokenization passes;
-    prefer :func:`with_lang_id` on DataFrames, which stages the token
-    array and the four score columns through materialized projections."""
-    scores = lang_scores(col)
-    return _argmax_lang({k: v for k, v in scores.items()})
 
 
 def _argmax_lang(scores: dict[str, Column]) -> Column:
@@ -113,12 +52,16 @@ def _argmax_lang(scores: dict[str, Column]) -> Column:
 
 
 def with_lang_id(df, text_col: str, out_col: str = "lang_guess"):
-    """DataFrame-level language ID: identical result to ``lang_id`` but
-    the distinct-token array and the per-language hit counts are staged
-    as real columns, so tokenization runs ONCE per row and the argmax
-    reads four materialized ints.  (CollapseProject keeps the stages
-    apart because the intermediate columns are non-cheap and referenced
-    more than once.)"""
+    """DataFrame-level language ID: the argmax language by stopword
+    hits over the distinct lower-cased tokens; 'und' (undetermined)
+    when all scores are zero, ties broken by the fixed order
+    en>de>es>fr.  The distinct-token array and the per-language hit
+    counts are staged as real columns, so tokenization runs ONCE per
+    row and the argmax reads four materialized ints (as one expression,
+    HOFs sit outside codegen's subexpression elimination and the token
+    chain would re-run for every score reference).  CollapseProject
+    keeps the stages apart because the intermediate columns are
+    non-cheap and referenced more than once."""
     sc_cols = {lang: f"__sc_{lang}__" for lang in LANG_STOPWORDS}
     staged = df.withColumn(
         "__ltoks__", F.array_distinct(tokens(F.lower(F.col(text_col))))

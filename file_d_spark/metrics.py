@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import collections
 import json
+import threading
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,24 +50,47 @@ def observe_events(df: DataFrame, name: str = "fd_pipeline") -> DataFrame:
 
 
 class ProgressRing(StreamingQueryListener):
-    """Keeps the last N StreamingQueryProgress records per query —
-    the /info endpoint analogue.  Attach with
-    ``spark.streams.addListener(ring)``."""
+    """Per-query streaming progress — the /info endpoint analogue and
+    the source of the daemon's /metrics counters.  Attach with
+    ``spark.streams.addListener(ring)`` before the queries start.
+
+    ``last`` reads a ring of the last ``capacity`` progress records.
+    ``totals`` reads running sums that every progress event adds to
+    exactly once, so they cover every batch reported since the
+    listener was attached, however many have left the ring (or the
+    query's own ``recentProgress``).  Totals are keyed by query id,
+    which persists in the checkpoint: a restarted query keeps adding
+    to the same totals, so they never decrease."""
 
     def __init__(self, capacity: int = 64):
         self.capacity = capacity
         self.progress: dict[str, collections.deque] = {}
+        self._totals: dict[str, dict] = {}
+        # listener callbacks and endpoint readers run on different threads
+        self._lock = threading.Lock()
 
     # StreamingQueryListener interface
     def onQueryStarted(self, event: Any) -> None:
-        self.progress.setdefault(str(event.id), collections.deque(maxlen=self.capacity))
+        pass
 
     def onQueryProgress(self, event: Any) -> None:
-        p = event.progress
-        ring = self.progress.setdefault(
-            str(p.id), collections.deque(maxlen=self.capacity)
-        )
-        ring.append(json.loads(p.json))
+        p = json.loads(event.progress.json)
+        qid = str(p["id"])
+        with self._lock:
+            self.progress.setdefault(
+                qid, collections.deque(maxlen=self.capacity)
+            ).append(p)
+            t = self._totals.setdefault(qid, _no_totals())
+            t["numInputRows"] += p.get("numInputRows") or 0
+            # a sink that does not count its rows reports -1
+            t["numOutputRows"] += max(
+                0, (p.get("sink") or {}).get("numOutputRows") or 0
+            )
+            for name, metrics in (p.get("observedMetrics") or {}).items():
+                acc = t["observedMetrics"].setdefault(name, {})
+                for k, v in metrics.items():
+                    if isinstance(v, (int, float)):
+                        acc[k] = acc.get(k, 0) + v
 
     def onQueryIdle(self, event: Any) -> None:
         pass
@@ -76,20 +100,19 @@ class ProgressRing(StreamingQueryListener):
 
     # info-endpoint-style accessors
     def last(self, query_id: str) -> dict | None:
-        ring = self.progress.get(str(query_id))
-        return ring[-1] if ring else None
+        with self._lock:
+            ring = self.progress.get(str(query_id))
+            return ring[-1] if ring else None
 
     def totals(self, query_id: str) -> dict:
-        ring = self.progress.get(str(query_id)) or []
-        rows = sum(p.get("numInputRows") or 0 for p in ring)
-        obs = {}
-        for p in ring:
-            for name, metrics in (p.get("observedMetrics") or {}).items():
-                acc = obs.setdefault(name, {})
-                for k, v in metrics.items():
-                    if isinstance(v, (int, float)):
-                        acc[k] = acc.get(k, 0) + v
-        return {"numInputRows": rows, "observedMetrics": obs}
+        with self._lock:
+            t = self._totals.get(str(query_id)) or _no_totals()
+            obs = {k: dict(v) for k, v in t["observedMetrics"].items()}
+            return {**t, "observedMetrics": obs}
+
+
+def _no_totals() -> dict:
+    return {"numInputRows": 0, "numOutputRows": 0, "observedMetrics": {}}
 
 
 # ---------------------------------------------------------------------------

@@ -5154,33 +5154,6 @@ def q_mmr_diversify(spark, sf_dir):
 # the r12 mmr lesson) ---
 
 
-def q_sketch_kmv_leg(spark, sf_dir):
-    """Bottom-k (KMV) distinct-words-per-language estimate (k=64) —
-    sketch_suite leg (staged r10, folded r13)."""
-    return sketch.kmv_distinct(
-        _sketch_words(spark, sf_dir).select("lang", "w"), "lang", "w", k=64
-    )
-
-
-def q_sketch_cms_leg(spark, sf_dir):
-    """Count-Min heavy hitters over the global word stream (4x1024
-    counters): top-10 exact counts vs their sketch estimates —
-    sketch_suite leg (staged r10, folded r13)."""
-    return sketch.cms_topk(
-        _sketch_words(spark, sf_dir).select("w"), "w",
-        depth=4, width=1024, k=10,
-    )
-
-
-def q_sketch_f2_leg(spark, sf_dir):
-    """AMS F2 / self-join-size estimate over the global word stream —
-    the join-size primitive a planner consults before committing a
-    100 TB shuffle.  sketch_suite leg (staged r10, folded r13)."""
-    return sketch.f2_moment(
-        _sketch_words(spark, sf_dir).select("w"), "w", reps=16
-    )
-
-
 _SKETCH_SUITE_COLS = [
     ("lang", "string", "VARCHAR"),
     ("n_distinct_capped", "bigint", "BIGINT"),

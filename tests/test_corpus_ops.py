@@ -918,65 +918,3 @@ def test_quantile_thresholds_rejects_bad_fraction(spark):
         corpus.quantile_thresholds(df, "lang", "score", quantiles=[(3, 2)])
     with pytest.raises(ValueError, match="not in"):
         corpus.quantile_thresholds(df, "lang", "score", quantiles=[(0, 4)])
-
-
-def test_vocab_coverage_hand_computed(spark):
-    """Top-V vocab is (count desc, word asc)-deterministic; coverage
-    counts every token occurrence, OOV rate derives from exact longs."""
-    df = spark.createDataFrame(
-        [
-            ("en", "the cat the dog"),
-            ("en", "the zebra"),
-            ("de", "der hund der"),
-        ],
-        "lang string, text string",
-    )
-    # counts: the=3, der=2, cat/dog/zebra/hund=1 -> V=2 keeps {the, der}
-    out = {
-        r.lang: r
-        for r in corpus.vocab_coverage(df, "lang", "text", vocab_size=2)
-        .collect()
-    }
-    assert out["en"].n_tokens == 6 and out["en"].in_vocab == 3
-    assert out["de"].n_tokens == 3 and out["de"].in_vocab == 2
-    assert out["en"].oov_rate == 0.5
-    assert out["de"].oov_rate == round(1 - 2 / 3, 6)
-
-
-def test_vocab_coverage_rejects_bad_size(spark):
-    df = spark.createDataFrame([("en", "x")], "lang string, text string")
-    with pytest.raises(ValueError, match="vocab_size"):
-        corpus.vocab_coverage(df, "lang", "text", vocab_size=0)
-
-
-def test_decontaminate_spans_hand_computed(spark):
-    """Exact 3-gram leakage: only the span matching an eval 3-gram is
-    cut from the train doc; untouched docs pass through verbatim;
-    whole-doc leakage empties clean_text."""
-    train = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon"),   # leak at tokens 2-4
-            (2, "totally clean text here"),
-            (3, "beta gamma delta"),                 # the whole doc leaks
-        ],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame(
-        [(100, "xxx beta gamma delta yyy")], "doc_id long, text string"
-    )
-    out = {
-        r.doc_id: r
-        for r in corpus.decontaminate_spans(train, ev, "doc_id", "text", n=3)
-        .collect()
-    }
-    assert out[1].n_tokens == 5 and out[1].n_removed == 3
-    assert out[1].clean_text == "alpha epsilon"
-    assert out[2].n_removed == 0
-    assert out[2].clean_text == "totally clean text here"
-    assert out[3].n_removed == 3 and out[3].clean_text == ""
-
-
-def test_decontaminate_spans_rejects_bad_n(spark):
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="n must be"):
-        corpus.decontaminate_spans(df, df, "doc_id", "text", n=1)

@@ -8,12 +8,13 @@ the daemon control plane (live/ready/metrics/log-level/play/pipelines).
 
 import json
 import os
-import re
+import time
 import urllib.request
 
 import pytest
 
 from file_d_spark.__main__ import load_pipelines, main, serve_control_plane
+from file_d_spark.metrics import ProgressRing
 
 # the checkout this test file belongs to: the daemon subprocess must
 # import this tree's file_d_spark, whatever directory it runs from
@@ -88,16 +89,40 @@ pipelines:
     assert all(r["level"] != "debug" for r in rows)
 
 
+def _progress(query_id, run_id, batch_id, rows):
+    """A listener event as ProgressRing reads it."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(progress=SimpleNamespace(json=json.dumps({
+        "id": query_id, "runId": run_id, "batchId": batch_id,
+        "numInputRows": rows, "sink": {"numOutputRows": rows},
+    })))
+
+
+def _scrape_total(base, pipeline):
+    text = urllib.request.urlopen(f"{base}/metrics", timeout=30).read().decode()
+    for line in text.splitlines():
+        if line.startswith(
+            f'file_d_output_plugin_events_count_total{{pipeline="{pipeline}"}}'
+        ):
+            return float(line.rsplit(" ", 1)[1])
+    raise AssertionError(f"counter line missing:\n{text}")
+
+
 def test_control_plane_endpoints(spark):
     class FakeQuery:
+        id = "q-demo"
         isActive = True
         status = {"message": "ok"}
-        recentProgress = [{"batchId": 0, "sink": {"numOutputRows": 7}},
-                          {"batchId": 1, "sink": {"numOutputRows": 5}}]
 
+    # a ring smaller than the batch count: the counter must not depend
+    # on what the ring (or recentProgress) still holds
+    ring = ProgressRing(capacity=2)
+    for bid, rows in [(0, 7), (1, 5)]:
+        ring.onQueryProgress(_progress("q-demo", "run-1", bid, rows))
     state = {"stopping": False}
     srv = serve_control_plane(
-        spark, {"demo": FakeQuery()}, state, "127.0.0.1", 0
+        spark, {"demo": FakeQuery()}, ring, state, "127.0.0.1", 0
     )
     try:
         port = srv.server_address[1]
@@ -111,39 +136,23 @@ def test_control_plane_endpoints(spark):
             f"{base}/metrics", timeout=30).read().decode()
         assert 'pipeline="demo"' in metrics and "12" in metrics
 
-        def scrape_total():
-            text = urllib.request.urlopen(
-                f"{base}/metrics", timeout=30).read().decode()
-            for line in text.splitlines():
-                if re.match(r"file_d_output_plugin_events_count_total\b|file_d_output_plugin_events_count_total\{", line):
-                    return float(line.rsplit(" ", 1)[1])
-            raise AssertionError("counter line missing")
-
-        # counter MONOTONICITY across the recentProgress ring (ADVICE
-        # r7): old entries rolling off must not decrease the total, a
-        # repeated batchId (no-data tick) must not double-count, and a
-        # new batch adds exactly its delta
-        assert scrape_total() == 12
-        FakeQuery.recentProgress = [
-            {"batchId": 1, "sink": {"numOutputRows": 5}},  # repeat: skip
-            {"batchId": 2, "sink": {"numOutputRows": 3}},
-        ]
-        assert scrape_total() == 15
-        FakeQuery.recentProgress = [{"batchId": 3, "sink": {"numOutputRows": 1}}]
-        assert scrape_total() == 16
-        # restart: a NEW runId resets batchIds to 0 — the counter must
-        # keep counting (ADVICE r8: the old high-water guard froze it
-        # forever after any stop/start) while staying monotonic
-        FakeQuery.runId = "run-2"
-        FakeQuery.recentProgress = [
-            {"batchId": 0, "sink": {"numOutputRows": 4}},
-        ]
-        assert scrape_total() == 20
-        FakeQuery.recentProgress = [
-            {"batchId": 0, "sink": {"numOutputRows": 4}},  # same: skip
-            {"batchId": 1, "sink": {"numOutputRows": 2}},
-        ]
-        assert scrape_total() == 22
+        # counter MONOTONICITY (ADVICE r7): batches leaving the ring
+        # must not decrease the total, a no-data tick (the last batchId
+        # again, no rows written) must not add, and a new batch adds
+        # exactly its rows
+        assert _scrape_total(base, "demo") == 12
+        ring.onQueryProgress(_progress("q-demo", "run-1", 1, 0))
+        ring.onQueryProgress(_progress("q-demo", "run-1", 2, 3))
+        assert _scrape_total(base, "demo") == 15
+        ring.onQueryProgress(_progress("q-demo", "run-1", 3, 1))
+        assert _scrape_total(base, "demo") == 16
+        # restart (ADVICE r8): a NEW runId under the same query id (it
+        # persists in the checkpoint), batchIds from 0 again — the
+        # counter keeps counting and stays monotonic
+        ring.onQueryProgress(_progress("q-demo", "run-2", 0, 4))
+        assert _scrape_total(base, "demo") == 20
+        ring.onQueryProgress(_progress("q-demo", "run-2", 1, 2))
+        assert _scrape_total(base, "demo") == 22
         play = json.loads(urllib.request.urlopen(urllib.request.Request(
             f"{base}/api/v1/play",
             data=json.dumps({
@@ -164,11 +173,70 @@ def test_control_plane_endpoints(spark):
         srv.shutdown()
 
 
+def test_metrics_counter_counts_batches_past_recent_progress(tmp_path, spark):
+    """More batches than ``spark.sql.streaming.numRecentProgressUpdates``
+    keeps, with no scrape in between: the /metrics counter must still
+    equal the rows the sink received.  A fold over ``recentProgress``
+    at scrape time sees only the batches still held there.  (The noop
+    sink counts its rows; the file sink reports -1.)"""
+    from file_d_spark import Pipeline
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(8):
+        _write(src / f"part{i}.jsonl", "\n".join(
+            json.dumps({"n": i * 5 + j}) for j in range(5)
+        ))
+    pipelines = Pipeline.all_from_yaml(f"""
+pipelines:
+  demo:
+    settings:
+      decoder: json
+      decoder_params: {{schema: "n long"}}
+    input:
+      type: file
+      path: {src}
+      filename_pattern: "*.jsonl"
+      max_files_per_trigger: 1
+    actions:
+      - type: discard
+        do_if: {{op: int_val_cmp, field: n, cmp_op: lt, value: 10}}
+    output:
+      type: devnull
+""")
+    ring = ProgressRing()
+    spark.streams.addListener(ring)
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "3")
+    srv = None
+    try:
+        queries = Pipeline.run_all_streams(
+            pipelines, spark, str(tmp_path / "ck")
+        )
+        q = queries["demo"]
+        q.awaitTermination(120)
+        assert len(q.recentProgress) < 8  # the 8 batches no longer fit
+        written = 40 - 10  # n = 0..39, the discard drops n < 10
+        srv = serve_control_plane(
+            spark, queries, ring, {"stopping": False}, "127.0.0.1", 0
+        )
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        # listener delivery is asynchronous
+        deadline = time.time() + 30
+        while _scrape_total(base, "demo") < written and time.time() < deadline:
+            time.sleep(0.2)
+        assert _scrape_total(base, "demo") == written
+    finally:
+        if srv is not None:
+            srv.shutdown()
+        spark.conf.unset("spark.sql.streaming.numRecentProgressUpdates")
+        spark.streams.removeListener(ring)
+
+
 def test_pprof_endpoints(spark):
     """Python-runtime pprof analogues on the daemon mux
     (fd/file.d.go:327-373): thread dump, sampled profile (folded
     stacks), heap stats, cmdline, freeosmem."""
-    srv = serve_control_plane(spark, {}, {"stopping": False},
+    srv = serve_control_plane(spark, {}, ProgressRing(), {"stopping": False},
                               "127.0.0.1", 0)
     try:
         base = f"http://127.0.0.1:{srv.server_address[1]}"
@@ -210,7 +278,6 @@ def test_daemon_sigterm_graceful(tmp_path):
     import signal
     import subprocess
     import sys
-    import time
 
     src = tmp_path / "in"
     src.mkdir()
@@ -279,7 +346,8 @@ pipelines:
     assert sorted(resetters) == ["tailed"]
 
     srv = serve_control_plane(
-        spark, {}, {"stopping": False}, "127.0.0.1", 0, resetters=resetters
+        spark, {}, ProgressRing(), {"stopping": False}, "127.0.0.1", 0,
+        resetters=resetters,
     )
     try:
         port = srv.server_address[1]

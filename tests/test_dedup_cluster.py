@@ -3,8 +3,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from file_d_spark.functions.dedup import connected_components, dedup_clusters
 
 
@@ -113,61 +111,3 @@ def test_cc_random_graphs_match_union_find(spark):
             for r in connected_components(pairs, driver_max_pairs=0).collect()
         }
         assert fast == dist, f"trial {trial}: {fast} != {dist}"
-
-
-def test_keep_best_representative_hand_computed(spark):
-    """Survivor = highest score in the cluster, ties to the smallest
-    id; singletons keep themselves; csize counts every member."""
-    from file_d_spark.functions.dedup import keep_best_representative
-
-    docs = spark.createDataFrame(
-        [(1, 10), (2, 30), (3, 30), (4, 5), (9, 7)],
-        "doc_id long, n_chars long",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
-    )
-    out = {
-        r.doc_id: r
-        for r in keep_best_representative(docs, pairs, "doc_id", "n_chars")
-        .collect()
-    }
-    # cluster {1,2,3,4}: best score 30 shared by 2 and 3 -> keep 2
-    assert [out[i].kept for i in (1, 2, 3, 4)] == [False, True, False, False]
-    assert all(out[i].csize == 4 for i in (1, 2, 3, 4))
-    assert all(out[i].cluster_id == 1 for i in (1, 2, 3, 4))
-    # singleton keeps itself
-    assert out[9].kept and out[9].csize == 1 and out[9].cluster_id == 9
-
-
-def test_keep_best_representative_string_ids(spark):
-    """String ids work: the aggregate negates the SCORE, never the id
-    (a negated string id would null out under implicit casts)."""
-    from file_d_spark.functions.dedup import keep_best_representative
-
-    docs = spark.createDataFrame(
-        [("doc-a", 10), ("doc-b", 30), ("doc-c", 30)],
-        "doc_id string, n_chars long",
-    )
-    pairs = spark.createDataFrame(
-        [("doc-a", "doc-b"), ("doc-b", "doc-c")], "doc_a string, doc_b string"
-    )
-    out = {
-        r.doc_id: r
-        for r in keep_best_representative(docs, pairs, "doc_id", "n_chars")
-        .collect()
-    }
-    assert [out[k].kept for k in ("doc-a", "doc-b", "doc-c")] == [
-        False, True, False,
-    ]
-
-
-def test_keep_best_representative_rejects_non_numeric_score(spark):
-    from file_d_spark.functions.dedup import keep_best_representative
-
-    docs = spark.createDataFrame([(1, "hi")], "doc_id long, s string")
-    pairs = spark.createDataFrame([(1, 1)], "doc_a long, doc_b long")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="must be\\s+numeric"):
-        keep_best_representative(docs, pairs, "doc_id", "s")

@@ -159,19 +159,3 @@ def test_sniff_never_raises_on_arbitrary_bytes():
         for tail in (b"", b"\x00", b"\xff" * 40, b"A" * 10):
             meta = mm.sniff_media(prefix + tail)
             assert meta is None or isinstance(meta, dict)
-
-
-def test_as_media_column_and_frame_sample_plan(spark):
-    """as_media_column normalizes any (id, binary) frame to the engine
-    media layout; frame_sample_plan explodes every-nth frame indices
-    over extracted metadata (video frame-sampling plumbing)."""
-    rows = [(7, bytearray(mm.build_gif(4, 4, b"xyz")))]
-    df = spark.createDataFrame(rows, "some_id long, payload binary")
-    media = mm.as_media_column(df, "payload", "video", "some_id")
-    assert media.columns == ["media_id", "kind", "blob"]
-    meta = mm.extract_media_metadata(media).withColumn(
-        "n_frames", __import__("pyspark.sql.functions", fromlist=["lit"]).lit(25)
-    )
-    sampled = mm.frame_sample_plan(meta, every_nth=10).collect()
-    assert [r.frame_idx for r in sampled] == [0, 10, 20]
-    assert all(r.media_id == 7 for r in sampled)

@@ -272,31 +272,3 @@ def test_scanner_longest_match_pure():
     # longest match wins over declaration order (lexmachine maximal munch)
     pats = [(r"\d+", "<int>"), (r"\d+\.\d+", "<float>")]
     assert scan_longest_match("take 1.25 units", pats) == "take <float> units"
-
-
-def test_quality_score_hand_computed(spark):
-    """quality_score: 0..1 composite of length-ok, word-length-ok,
-    alpha ratio, and stopword presence — hand-computed cases."""
-    from pyspark.sql import functions as F
-
-    from file_d_spark.functions.text import quality_score
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),  # clean English
-        (2, "1234 5678 9012"),                                # digits only
-        (3, "a b"),                                           # too short
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    got = {
-        r.id: r.score
-        for r in df.select(
-            "id", quality_score(F.col("text")).alias("score")
-        ).collect()
-    }
-    # clean text: len ok (9 tokens), avg token len ok, alpha_ratio
-    # 35 letters / 43 chars = 0.814, has stopword -> (1+1+0.814+1)/4
-    assert got[1] == round((1 + 1 + 35 / 43 + 1) / 4, 4)
-    # digits: len ok (3 tokens? n=3 <5 -> 0), avg len 12/3=4 ok,
-    # alpha 0, no stopword -> (0+1+0+0)/4
-    assert got[2] == 0.25
-    assert got[3] < got[1]

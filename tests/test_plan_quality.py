@@ -184,21 +184,6 @@ def test_incremental_bucketed_shuffles_only_new_side(spark, sf_dir):
     )
 
 
-def test_staged_vocab_coverage_distributed_topk(spark, sf_dir):
-    """vocab_coverage's top-V selection must plan as
-    TakeOrderedAndProject (vocab-sized distributed heap) and join the
-    vocab broadcast — a global Sort of the word histogram or a
-    shuffled join would be the 100 TB failure modes."""
-    from file_d_spark.functions import corpus
-    from file_d_spark.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    plan = executed_plan(corpus.vocab_coverage(d, "lang", "text", vocab_size=500))
-    assert "TakeOrderedAndProject" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_quantile_thresholds_window_on_histogram(spark, sf_dir):
     """quantile_thresholds' cumulative window must run over the
     (group, score) HISTOGRAM — partial aggregation below the window's
@@ -209,25 +194,3 @@ def test_quantile_thresholds_window_on_histogram(spark, sf_dir):
     assert re.search(r"HashAggregate.*partial_count", plan) or "partial_count" in plan, (
         "histogram groupBy lost its map-side partial aggregation"
     )
-
-
-def test_staged_decontaminate_broadcasts_eval(spark, sf_dir):
-    """decontaminate_spans must broadcast the eval gram-hash set into
-    the semi-join (the corpus side never enters a wide dependency) and
-    must not plan any count window — the within-corpus cut's shuffle
-    shape is exactly what this operator avoids."""
-    from pyspark.sql import functions as F
-
-    from file_d_spark.functions import corpus
-    from file_d_spark.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    is_eval = F.col("doc_id") % 10 == 0
-    plan = executed_plan(
-        corpus.decontaminate_spans(
-            d.filter(~is_eval), d.filter(is_eval), "doc_id", "text", n=8
-        )
-    )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan

@@ -1,22 +1,16 @@
-"""Randomized differential for quantile_thresholds and vocab_coverage:
-seeded random corpora evaluated by INDEPENDENT pure-Python
-implementations (collections.Counter + sorted lists — no Spark
-expressions), compared against the Spark operators.  The staged oracle
-pairs already pin Spark == DuckDB; this pins both to the intended
-definitions (the ADVICE-r8 lesson: a shared wrong expression passes
-its own bit-check).
+"""Randomized differential for quantile_thresholds: seeded random
+corpora evaluated by an INDEPENDENT pure-Python implementation
+(collections.Counter + sorted lists — no Spark expressions), compared
+against the Spark operator.  The oracle pair already pins Spark ==
+DuckDB; this pins both to the intended definition (the ADVICE-r8
+lesson: a shared wrong expression passes its own bit-check).
 
 Mutation teeth (verified by hand when authoring; the random seeds
-flip them probabilistically, the deterministic boundary fixtures in
-each test flip them on EVERY run):
-  * quantile: replacing the ``>=`` admission with ``>`` moves the
-    threshold off every exact den·cum == num·tot boundary (the
-    [1,1,2,2] fixture pins the 1/2-quantile to 1, a ``>`` mutant
-    returns 2); reading the PREVIOUS distinct score flips every group;
-  * vocab: breaking the (count desc, word asc) tie order at the V
-    boundary swaps which tied word enters the vocab (the aa/bb
-    fixture: both count 2, V=1 must keep "aa"); counting distinct
-    words instead of occurrences flips n_tokens everywhere.
+flip them probabilistically, the deterministic boundary fixture flips
+them on EVERY run): replacing the ``>=`` admission with ``>`` moves
+the threshold off every exact den·cum == num·tot boundary (the
+[1,1,2,2] fixture pins the 1/2-quantile to 1, a ``>`` mutant returns
+2); reading the PREVIOUS distinct score flips every group.
 """
 
 from __future__ import annotations
@@ -48,20 +42,6 @@ def _py_quantile(rows, qs):
     return out
 
 
-def _py_vocab(docs, v_size):
-    cnt = Counter(w for _, ws in docs for w in ws)
-    ranked = sorted(cnt.items(), key=lambda t: (-t[1], t[0]))
-    vocab = {w for w, _ in ranked[:v_size]}
-    per: dict = {}
-    for lang, ws in docs:
-        st = per.setdefault(lang, [0, 0])
-        for w in ws:
-            st[0] += 1
-            if w in vocab:
-                st[1] += 1
-    return {g: (n, inv) for g, (n, inv) in per.items()}
-
-
 def test_quantile_thresholds_boundary_fixture(spark):
     """den·cum == num·tot exactly: scores [1,1,2,2], 1/2-quantile —
     cum(1)=2, 2·2 == 1·4, so the threshold is 1 (a ``>`` mutant says 2)."""
@@ -73,21 +53,6 @@ def test_quantile_thresholds_boundary_fixture(spark):
     assert _py_quantile([("g", 1), ("g", 1), ("g", 2), ("g", 2)], [(1, 2)])[
         ("g", 1, 2)
     ] == (4, 1)
-
-
-def test_vocab_coverage_tie_boundary_fixture(spark):
-    """Two words tied at the V boundary: vocab must keep the
-    lexicographically smaller one."""
-    df = spark.createDataFrame(
-        [("en", "aa bb"), ("de", "bb aa")], "lang string, text string"
-    )
-    rows = corpus.vocab_coverage(df, "lang", "text", vocab_size=1).collect()
-    got = {r.lang: (r.n_tokens, r.in_vocab) for r in rows}
-    assert got == {"en": (2, 1), "de": (2, 1)}  # only "aa" is in-vocab
-    assert _py_vocab([("en", ["aa", "bb"]), ("de", ["bb", "aa"])], 1) == {
-        "en": (2, 1),
-        "de": (2, 1),
-    }
 
 
 def test_quantile_thresholds_random_differential(spark):
@@ -109,28 +74,3 @@ def test_quantile_thresholds_random_differential(spark):
             .collect()
         }
         assert got == want, f"seed {seed:#x}"
-
-
-def test_vocab_coverage_random_differential(spark):
-    # letter-only words: the operator tokenizes on [^a-z]+, so a digit
-    # inside a word would split it and desync the Python evaluator
-    words = [f"w{chr(97 + i // 6)}{chr(97 + i % 6)}" for i in range(30)]
-    for seed in (0x44, 0x55, 0x66):
-        rng = random.Random(seed)
-        docs = []
-        for _ in range(60):
-            lang = rng.choice(["en", "de", "fr"])
-            ws = [rng.choice(words) for _ in range(rng.randrange(1, 12))]
-            docs.append((lang, ws))
-        v_size = 8  # well inside the 30-word alphabet: ties straddle it
-        want = _py_vocab(docs, v_size)
-        df = spark.createDataFrame(
-            [(lang, " ".join(ws)) for lang, ws in docs],
-            "lang string, text string",
-        )
-        rows = corpus.vocab_coverage(df, "lang", "text", vocab_size=v_size).collect()
-        got = {r.lang: (r.n_tokens, r.in_vocab) for r in rows}
-        assert got == want, f"seed {seed:#x}"
-        for r in rows:
-            w_n, w_inv = want[r.lang]
-            assert abs(r.oov_rate - (1 - w_inv / w_n)) < 1e-6, r.lang

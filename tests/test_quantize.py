@@ -229,162 +229,3 @@ def test_product_quantize_midrange_routes_to_broadcast(spark, emb):
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Broadcast" in plan, "mid-range shape did not take the HOF path"
-
-
-def test_embedding_stats_flags_dead_and_constant_dims(spark):
-    """Teeth for the r12 embedding_stats audit: a dimension that is
-    constant across the corpus must read std == 0 (dead dim), a
-    varying one must not; n/min/max/n_neg are exact."""
-    df = spark.createDataFrame(
-        [(i, [0.5, -0.25, i / 8.0]) for i in range(8)],
-        "vec_id long, embedding array<float>",
-    )
-    out = {r.dim: r for r in similarity.embedding_stats(df).collect()}
-    assert set(out) == {1, 2, 3} and all(out[d].n == 8 for d in out)
-    assert out[1].std == 0.0 and out[2].std == 0.0   # dead dims
-    assert out[3].std > 0.0                          # live dim
-    assert out[2].n_neg == 8 and out[1].n_neg == 0
-    # exact fixed point: 0.5 * 2^20 = 524288 exactly
-    assert out[1].min_fp == out[1].max_fp == 524288
-    assert out[2].min_fp == out[2].max_fp == -262144
-
-
-def test_embedding_stats_broken_encoder_inputs(spark, duck):
-    """The audit's whole purpose is broken encoders, so NaN/Inf/huge
-    cells must be HANDLED, not engine-divergent (a naive double→long
-    cast turns NaN into 0 on Spark and raises on DuckDB): non-finite
-    cells — NULL array elements included (the raw finite predicate
-    yields NULL for them, which would dilute the mean/std denominator
-    by counting them in n but in neither bucket) — count in
-    n_nonfinite and leave the moments; huge finite cells clamp to ±8
-    and count in n_clamped — and Spark and DuckDB agree on every
-    column over exactly this data."""
-    rows = [
-        (0, [float("nan"), 1.0e4, 0.5]),
-        (1, [float("inf"), -2.0e4, 0.5]),
-        (2, [float("-inf"), 2.0, 0.5]),
-        (3, [0.25, -2.0, 0.5]),
-        (4, [None, -1.0e9, None]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.dim: r for r in similarity.embedding_stats(df).collect()}
-    assert out[1].n_nonfinite == 4 and out[1].n == 5  # NULL counts too
-    assert out[1].mean == 0.25 and out[1].std == 0.0  # one finite cell
-    assert out[2].n_clamped == 3                      # ±2e4, -1e9 → ±8
-    assert out[2].min_fp == -8 * 1048576 and out[2].max_fp == 8 * 1048576
-    assert out[3].n_nonfinite == 1 and out[3].n_clamped == 0
-    # engine parity on the adversarial frame itself
-    duck.execute("DROP TABLE IF EXISTS bad_emb")
-    duck.execute(
-        "CREATE TABLE bad_emb AS SELECT * FROM (VALUES "
-        + ", ".join(
-            "({}, [{}])".format(
-                i,
-                ", ".join(
-                    "NULL::FLOAT" if v is None else f"'{v!r}'::FLOAT"
-                    for v in vec
-                ),
-            )
-            for i, vec in rows
-        )
-        + ") AS t(vec_id, embedding)"
-    )
-    want = duck.execute(
-        similarity.embedding_stats_oracle_sql(
-            "SELECT embedding FROM bad_emb", "embedding"
-        )
-    ).df()
-    from tests.util import assert_frames_match
-
-    assert_frames_match(similarity.embedding_stats(df), want)
-
-
-def test_embedding_stats_overflow_guard_and_shards(spark):
-    """r13 (VERDICT r12 watch item): the exact-BIGINT sumsq bound is
-    ENFORCED — a dim group past _max_exact_rows finite cells raises
-    instead of wrapping silently — and the shards>0 DECIMAL(38,0)
-    merge path is bit-identical to the unsharded algebra."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    n = 200  # clamp-max cells: each contributes exactly 2^46 to sumsq
-    df = spark.range(n).select(
-        F.array(F.lit(8.0).cast("float")).alias("embedding")
-    )
-    with pytest.raises(Exception, match="exact-BIGINT bound"):
-        similarity.embedding_stats(df, _max_exact_rows=150).collect()
-    base = similarity.embedding_stats(df).collect()[0]
-    got = similarity.embedding_stats(df, shards=4).collect()[0]
-    assert int(got.sumsq_fp) == int(base.sumsq_fp) == n * (8 * 1048576) ** 2
-    assert got.n == base.n == n
-    assert got.mean == base.mean == 8.0
-    assert got.std == base.std == 0.0
-
-
-def test_embedding_stats_sharded_exact_past_bigint(spark):
-    """Past the BIGINT bound the sharded path stays EXACT (the total
-    sumsq here exceeds 2^63-1, representable only in the decimal
-    merge) while the default path refuses loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    n = 131328  # > floor((2^63-1) / 2^46) = 131071
-    df = spark.range(n).select(
-        F.array(F.lit(8.0).cast("float")).alias("embedding")
-    )
-    row = similarity.embedding_stats(df, shards=8).collect()[0]
-    want = n * (8 * 1048576) ** 2
-    assert want > 2**63 - 1  # the test's whole point
-    assert int(row.sumsq_fp) == want
-    assert row.n == n and row.mean == 8.0 and row.std == 0.0
-    # the default path refuses loudly either way: under ANSI (the
-    # session default) the engine's own sum-overflow check fires
-    # mid-aggregation, before the post-agg guard can; under non-ANSI
-    # the guard catches the silent wrap after the fact
-    with pytest.raises(
-        Exception, match="exact-BIGINT bound|ARITHMETIC_OVERFLOW"
-    ):
-        similarity.embedding_stats(df).collect()
-
-
-def test_embedding_stats_shards_spread_wide_vectors(spark):
-    """Review r13: a raw `id % shards` shard key inherits posexplode's
-    stride — any shards value sharing a factor with the vector width
-    collapsed each dim group into ONE shard, silently defeating the
-    overflow escape.  The guard itself is the teeth: with 64-dim
-    vectors, shards=8 and a per-partial bound below the group size,
-    a collapsed shard would trip the bound; hashed spreading keeps
-    every partial under it."""
-    from pyspark.sql import functions as F
-
-    n = 2000
-    df = spark.range(n).select(
-        F.array(*[F.lit(0.5).cast("float")] * 64).alias("embedding")
-    )
-    # collapse ⇒ one partial holds all 2000 cells of a dim > 400 ⇒
-    # raise; hashed spread ⇒ ~250 per partial ⇒ passes
-    rows = similarity.embedding_stats(
-        df, shards=8, _max_exact_rows=400
-    ).collect()
-    assert len(rows) == 64
-    assert all(r.n == n and r.mean == 0.5 for r in rows)
-
-
-def test_embedding_stats_guard_survives_column_pruning(spark):
-    """Review r13: the guard previously lived on the bystander `n`
-    column — selecting only the wrap-risk columns pruned it away.
-    Now it wraps sum_fp/sumsq_fp themselves."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    df = spark.range(50).select(
-        F.array(F.lit(1.0).cast("float")).alias("embedding")
-    )
-    with pytest.raises(Exception, match="exact-BIGINT bound"):
-        similarity.embedding_stats(df, _max_exact_rows=10).select(
-            "sumsq_fp"
-        ).collect()
-    with pytest.raises(Exception, match="exact-BIGINT bound"):
-        similarity.embedding_stats(
-            df, shards=2, _max_exact_rows=5
-        ).select("sum_fp").collect()

@@ -96,7 +96,10 @@ def test_cms_estimate_never_underestimates(spark):
         (f"tail{i}",) for i in range(500)
     ]
     df = spark.createDataFrame(rows, "w string")
-    out = sketch.cms_topk(df, "w", depth=4, width=256, k=5).collect()
+    counts = df.groupBy(F.col("w").alias("v")).agg(
+        F.count(F.lit(1)).cast("long").alias("n")
+    )
+    out = sketch._cms_from_counts(counts, "w", depth=4, width=256, k=5).collect()
     by_v = {r.w: r for r in out}
     assert by_v["hot"].exact_count == 200
     assert by_v["warm"].exact_count == 50

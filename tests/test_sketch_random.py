@@ -23,6 +23,17 @@ from pyspark.sql import functions as F
 from file_d_spark.functions import sketch
 
 
+def _counts(df, count_col: str):
+    """The ``(v, <count_col>)`` value-count frame that ``sketch_suite``
+    feeds ``_cms_from_counts`` (``n``) and ``_f2_from_counts`` (``f``):
+    one row per non-null value of ``df.v``."""
+    return (
+        df.where(F.col("v").isNotNull())
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).cast("long").alias(count_col))
+    )
+
+
 def _h32(v: str) -> int:
     return int(hashlib.md5(v.encode()).hexdigest()[:8], 16)
 
@@ -105,8 +116,9 @@ def test_cms_matches_pure_python(spark):
     df = spark.createDataFrame(rows, "v string")
     got = {
         r.v: (r.exact_count, r.cms_estimate)
-        for r in sketch.cms_topk(df, "v", depth=depth, width=width, k=k)
-        .collect()
+        for r in sketch._cms_from_counts(
+            _counts(df, "n"), "v", depth=depth, width=width, k=k
+        ).collect()
     }
     counts: dict = {}
     for (v,) in rows:
@@ -177,7 +189,7 @@ def test_f2_matches_pure_python(spark):
         rows = [v for _, v in _rand_corpus(seed=seed)]
         df = spark.createDataFrame([(v,) for v in rows], "v string")
         for reps in (8, 16):
-            got = sketch.f2_moment(df, "v", reps=reps).first()
+            got = sketch._f2_from_counts(_counts(df, "f"), reps=reps).first()
             exact, est = _py_f2(rows, reps)
             assert got.reps == reps
             assert got.f2_exact == exact
@@ -192,5 +204,5 @@ def test_f2_null_and_empty(spark):
     df = spark.createDataFrame(
         [("a",), ("a",), (None,), ("b",)], "v string"
     )
-    got = sketch.f2_moment(df, "v", reps=8).first()
+    got = sketch._f2_from_counts(_counts(df, "f"), reps=8).first()
     assert got.f2_exact == 5  # 2² + 1² — the null row contributes 0
