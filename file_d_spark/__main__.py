@@ -5,10 +5,12 @@ The reference runs as ``file.d --config config.yaml [--http :9000]``
 start all pipelines, serve the HTTP control plane, stop gracefully on
 SIGTERM.  Same surface here: each pipeline becomes one Structured
 Streaming query (checkpointed under ``--checkpoint-root/<name>``), and
-the control plane serves the daemon subset of the introspection
-endpoints — /live, /ready (503 while stopping, file.d.go:388-398),
-/metrics (streaming progress counters), /log/level, /api/v1/play, and
-/pipelines (per-query streaming status).
+one HTTP mux serves the whole control plane — /live, /ready (503
+while stopping, file.d.go:388-398), /metrics (streaming progress
+counters), /log/level, /api/v1/play, /pipelines (per-query streaming
+status), POST /pipelines/<name>/0/reset for tail-file inputs, and the
+/debug/pprof analogues.  Per-action counters and samples are the
+Python API of :class:`file_d_spark.introspect.PipelineInspector`.
 
 ``--once`` drains every source with an availableNow trigger and exits
 when all queries finish — the batch-backfill mode; without it the
@@ -81,8 +83,11 @@ def serve_control_plane(
     The Go-specific mutex/block profile-rate knobs have no Python
     analogue and stay unexposed.  /metrics reads the running totals of
     ``ring``, the :class:`~file_d_spark.metrics.ProgressRing` listening
-    to ``queries``.  Returns the ThreadingHTTPServer (already
-    serving)."""
+    to ``queries``.  ``resetters`` (pipeline name -> TailResetter)
+    mounts ``POST /pipelines/<name>/0/reset``: body ``{}`` resets every
+    tracked file, ``{"inode": N}``, ``{"source_id": N}`` or ``{"file":
+    path}`` resets one, at the next micro-batch boundary.  Returns the
+    ThreadingHTTPServer (already serving)."""
     resetters = resetters or {}
 
     class Handler(BaseHTTPRequestHandler):
@@ -104,6 +109,12 @@ def serve_control_plane(
             self.wfile.write(data)
 
         def do_GET(self):
+            try:
+                return self._get()
+            except Exception as ex:  # answer, never drop the connection
+                return self._json({"error": str(ex)}, code=500)
+
+        def _get(self):
             from urllib.parse import parse_qs, urlparse
 
             url = urlparse(self.path)
@@ -145,7 +156,10 @@ def serve_control_plane(
                 import time as _time
 
                 q = parse_qs(url.query)
-                seconds = min(float(q.get("seconds", ["5"])[0]), 30.0)
+                try:
+                    seconds = min(float(q.get("seconds", ["5"])[0]), 30.0)
+                except ValueError as ex:
+                    return self._json({"error": str(ex)}, code=400)
                 hz = 100
                 counts: dict[str, int] = {}
                 me = threading.get_ident()

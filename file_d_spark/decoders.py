@@ -47,12 +47,6 @@ FieldMap = dict[str, Column]
 # --- helpers ---------------------------------------------------------------
 
 
-def _rx(col: Column, pattern: str, idx: int) -> Column:
-    """regexp_extract that yields NULL (not '') when unmatched."""
-    v = F.regexp_extract(col, pattern, idx)
-    return F.when(v == "", F.lit(None)).otherwise(v)
-
-
 def _sql_str(s: str) -> str:
     """``s`` as a Spark SQL single-quoted string literal (the parser
     processes backslash escapes, so both the backslash and the quote
@@ -75,7 +69,8 @@ def _rx_fields(
     line: Column, pattern: str, n: int
 ) -> tuple[list[Column], list[dict[str, Column]]]:
     """One regex pass for all ``n`` groups of an ANCHORED pattern —
-    bit-identical to ``[_rx(line, pattern, i) for i in 1..n]``.
+    bit-identical to ``regexp_extract(line, pattern, i)`` for each
+    group ``i`` in 1..n, with an empty group read as NULL.
 
     ``regexp_extract`` runs the full matcher once PER GROUP, so a
     7-field decoder pays 7 matches per line (measured: the per-line
@@ -90,9 +85,9 @@ def _rx_fields(
     check rejects the one remaining ambiguity (a field value that
     itself contains the separator byte misaligns the split) — any row
     failing either check falls back, PER ROW, to the exact per-group
-    ``_rx`` extracts, so pathological inputs produce byte-identical
-    results at the old cost while real traffic takes the single-pass
-    path.  Empty-group -> NULL semantics mirror ``_rx``.
+    ``regexp_extract`` calls, so pathological inputs produce
+    byte-identical results at the old cost while real traffic takes
+    the single-pass path.  An empty group reads NULL on both paths.
 
     Returns ``(field_columns, pre_layers)``: the ex/parts
     intermediates are NOT inlined into the field expressions but

@@ -149,16 +149,19 @@ class Pipeline:
             cfg["exceptions"] = exceptions
         return cfg
 
+    def actions(self) -> list[dict[str, Any]]:
+        """The effective action chain: the settings-level antispam, if
+        configured, then the configured actions (the reference
+        antispams in pipeline.In, BEFORE actions)."""
+        antispam_cfg = self._settings_antispam()
+        head = [antispam_cfg] if antispam_cfg is not None else []
+        return head + list(self.plan.actions)
+
     def apply(self, df: DataFrame, raw_field: str | None = None) -> DataFrame:
         """Run the action chain over an existing DataFrame (batch or
         streaming)."""
         df = apply_input_guards(df, self.plan, raw_field)
-        actions = list(self.plan.actions)
-        antispam_cfg = self._settings_antispam()
-        if antispam_cfg is not None:
-            # the reference antispams in pipeline.In, BEFORE actions
-            actions.insert(0, antispam_cfg)
-        return compile_actions(df, actions)
+        return compile_actions(df, self.actions())
 
     def read(self, spark: SparkSession) -> DataFrame:
         from file_d_spark.sources import build_source

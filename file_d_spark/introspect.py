@@ -1,28 +1,30 @@
-"""Pipeline introspection: the reference's per-action HTTP control
-plane re-expressed for a lazy engine.
+"""Pipeline introspection: the reference's per-action counters and
+samples re-expressed for a lazy engine, as a Python API.
 
 file.d serves, per pipeline action, ``/info`` (received / discarded /
 passed counters) and ``/sample`` (one event captured before and after
 the action), plus the antispam ``/ban_list``
 (/root/reference/pipeline/pipeline.go:959-1033).  file.d counts live
 traffic; a Spark pipeline is a lazy plan, so the inspector records the
-intermediate frame at every action boundary and answers each endpoint
-with a bounded job against it (counts and limit-1 samples).  Streaming
-counters come from :class:`file_d_spark.metrics.ProgressRing` instead
-— observed metrics ride along with each micro-batch.
+intermediate frame at every action boundary of the effective chain
+(:meth:`file_d_spark.Pipeline.actions`, settings-level antispam
+included) and answers each query with a bounded job against it
+(counts and limit-1 samples).  The playground (``playground.play``,
+also served as ``POST /api/v1/play`` by the daemon's control plane)
+runs through it.  Streaming counters come from
+:class:`file_d_spark.metrics.ProgressRing` instead — progress events
+of the running queries, read by the daemon's ``/metrics``.
 
     insp = PipelineInspector(pipeline, df)
     insp.result                # final frame, same as pipeline.apply(df)
     insp.info(0)               # [{'status': 'received', 'count': ...}, ...]
     insp.sample(0)             # {'before': {...}, 'after': {...}}
-    srv = insp.serve(port=0)   # HTTP surface mirroring the reference
+    insp.ban_list()            # [{'action': 0, 'source': ...}, ...]
+    insp.prometheus()          # file_d-namespaced scrape text
 """
 
 from __future__ import annotations
 
-import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -33,10 +35,11 @@ from file_d_spark.actions import build_action
 class PipelineInspector:
     def __init__(self, pipeline, df: DataFrame):
         self.plan = pipeline.plan
+        self.actions = pipeline.actions()
         self.frames: list[DataFrame] = [df]
         self.action_types: list[str] = []
         cur = df
-        for cfg in self.plan.actions:
+        for cfg in self.actions:
             cur = build_action(cfg).apply(cur)
             self.action_types.append(cfg.get("type", "?"))
             self.frames.append(cur)
@@ -80,7 +83,7 @@ class PipelineInspector:
         from file_d_spark.fields import get_col_safe, parse_selector
 
         out: list[dict[str, Any]] = []
-        for i, cfg in enumerate(self.plan.actions):
+        for i, cfg in enumerate(self.actions):
             if cfg.get("type") != "antispam" or int(cfg.get("threshold", 0)) <= 0:
                 continue
             df = self.frames[i]
@@ -104,29 +107,6 @@ class PipelineInspector:
             )
             out.extend({"action": i, "source": r.s} for r in banned)
         return out
-
-    # -- /pipelines/<name> ----------------------------------------------
-    def dump(self) -> str:
-        """Pipeline overview as the reference's HTML-pre dump
-        (pipeline.go:942-949 writes the streamer and event-pool state;
-        the lazy engine's live state is its action chain, per-boundary
-        counters and the output schema)."""
-        counts = [f.count() for f in self.frames]
-        lines = [f"pipeline {self.plan.name}", ""]
-        lines.append(f"input events: {counts[0]}")
-        for i, typ in enumerate(self.action_types):
-            lines.append(
-                f"  action {i} {typ}: received={counts[i]} "
-                f"passed={counts[i + 1]} "
-                f"discarded={max(counts[i] - counts[i + 1], 0)}"
-            )
-        lines.append(f"output events: {counts[-1]}")
-        lines.append("")
-        lines.append("output schema:")
-        for f in self.result.schema.fields:
-            lines.append(f"  {f.name}: {f.dataType.simpleString()}")
-        body = "\n".join(lines)
-        return f"<html><body><pre><p>{body}</p></pre></body></html>"
 
     # -- /metrics -------------------------------------------------------
     def prometheus(self) -> str:
@@ -186,7 +166,7 @@ class PipelineInspector:
 
         from file_d_spark.fields import get_col_safe, parse_selector
 
-        for i, cfg in enumerate(self.plan.actions):
+        for i, cfg in enumerate(self.actions):
             mname = cfg.get("metric_name")
             if not mname:
                 continue
@@ -249,7 +229,7 @@ class PipelineInspector:
         # evidence from the mask's applied_field in the recorded
         # OUTPUT frame, so the metric requires applied_field —
         # enforced at registration (a silent no-metric is worse).
-        for i, cfg in enumerate(self.plan.actions):
+        for i, cfg in enumerate(self.actions):
             if cfg.get("type") != "mask":
                 continue
             for m in cfg.get("masks", []):
@@ -289,173 +269,3 @@ class PipelineInspector:
                         l: r[f"__l{j}__"] for j, l in enumerate(alabels)
                     }
                     reg.inc(aname, r["__n__"], **lab)
-
-    # -- HTTP surface ---------------------------------------------------
-    def serve(self, port: int = 0, host: str = "127.0.0.1", resetter=None):
-        """Start a daemon thread serving the reference's URL shape:
-        /pipelines/<name>/action/<idx>/info | /sample,
-        /pipelines/<name>/ban_list, plus the operational surface
-        /metrics (prometheus text), /live (always 200) and /ready
-        (503 once ``stopping`` is set — fd/file.d.go:388-398).
-
-        ``resetter`` (a :class:`~file_d_spark.sources.tail_file.
-        TailResetter`) additionally mounts ``POST
-        /pipelines/<name>/0/reset`` — the reference file input's
-        runtime offset resetter (resetter.go:34-43, mounted at
-        input index 0 per pipeline.go:294-296).  Body: ``{}`` resets
-        every tracked file; ``{"inode": N}``, ``{"source_id": N}`` or
-        ``{"file": path}`` reset one.  The reset lands at the next
-        micro-batch boundary.
-
-        Returns the HTTPServer (bound port in ``server_address[1]``);
-        call ``shutdown()`` to stop."""
-        insp = self
-        name = self.plan.name
-        if not hasattr(self, "stopping"):
-            self.stopping = False
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # quiet
-                pass
-
-            def do_GET(self):
-                parts = [p for p in self.path.split("/") if p]
-                try:
-                    if parts == ["live"]:
-                        return self._text("")
-                    if parts == ["ready"]:
-                        if insp.stopping:
-                            return self.send_error(503)
-                        return self._text("")
-                    if parts == ["metrics"]:
-                        return self._text(
-                            insp.prometheus(),
-                            "text/plain; version=0.0.4; charset=utf-8",
-                        )
-                    if parts == ["log", "level"]:
-                        # zap's level handler shape (file.d.go:347:
-                        # mux.Handle("/log/level", logger.Level))
-                        import logging
-
-                        lvl = logging.getLogger("file_d_spark")
-                        return self._json(
-                            {"level": logging.getLevelName(
-                                lvl.getEffectiveLevel()).lower()}
-                        )
-                    if parts[:2] == ["pipelines", name]:
-                        if parts[2:] == []:
-                            # pipeline overview dump (pipeline.go:942-949
-                            # renders streamer/event-pool state; the lazy
-                            # engine's state is its action chain + frame
-                            # counters)
-                            return self._text(insp.dump(), "text/html")
-                        if parts[2:] == ["ban_list"]:
-                            return self._json(insp.ban_list())
-                        if len(parts) == 5 and parts[2] == "action":
-                            idx = int(parts[3])
-                            if parts[4] == "info":
-                                return self._json(insp.info(idx))
-                            if parts[4] == "sample":
-                                return self._json(insp.sample(idx))
-                    self.send_error(404)
-                except Exception as ex:  # surface errors as JSON
-                    self.send_response(500)
-                    self.send_header("Content-Type", "application/json")
-                    self.end_headers()
-                    self.wfile.write(json.dumps({"error": str(ex)}).encode())
-
-            def do_PUT(self):
-                parts = [p for p in self.path.split("/") if p]
-                if parts == ["log", "level"]:
-                    # zap level handler accepts PUT {"level": "..."}
-                    import logging
-
-                    try:
-                        length = int(self.headers.get("Content-Length", 0))
-                        req = json.loads(self.rfile.read(length) or b"{}")
-                        level = str(req["level"]).upper()
-                        if level not in (
-                            "DEBUG", "INFO", "WARNING", "WARN", "ERROR",
-                            "CRITICAL", "FATAL",
-                        ):
-                            raise ValueError(f"unrecognized level: {level}")
-                        logging.getLogger("file_d_spark").setLevel(
-                            {"WARN": "WARNING", "FATAL": "CRITICAL"}.get(
-                                level, level
-                            )
-                        )
-                        return self._json({"level": level.lower()})
-                    except Exception as ex:
-                        self.send_response(400)
-                        self.send_header("Content-Type", "application/json")
-                        self.end_headers()
-                        self.wfile.write(
-                            json.dumps({"error": str(ex)}).encode()
-                        )
-                        return
-                self.send_error(404)
-
-            def do_POST(self):
-                parts = [p for p in self.path.split("/") if p]
-                if parts == ["api", "v1", "play"]:
-                    # the reference's playground endpoint
-                    # (playground_handler.go:72-118): 1 MiB body cap,
-                    # validation errors -> 400
-                    from file_d_spark.playground import parse_request, play
-
-                    try:
-                        length = int(self.headers.get("Content-Length", 0))
-                        if length > 1 << 20:
-                            return self.send_error(400, "body too large")
-                        req = parse_request(self.rfile.read(length))
-                        spark = insp.frames[0].sparkSession
-                        return self._json(play(spark, req))
-                    except Exception as ex:
-                        self.send_response(400)
-                        self.send_header("Content-Type", "application/json")
-                        self.end_headers()
-                        self.wfile.write(
-                            json.dumps({"error": str(ex)}).encode()
-                        )
-                        return
-                if parts == ["pipelines", name, "0", "reset"]:
-                    if resetter is None:
-                        return self.send_error(
-                            404, "no resettable input on this pipeline"
-                        )
-                    try:
-                        length = int(self.headers.get("Content-Length", 0))
-                        req = json.loads(self.rfile.read(length) or b"{}")
-                        path = resetter.reset(
-                            file=req.get("file"),
-                            inode=req.get("inode"),
-                            source_id=req.get("source_id"),
-                        )
-                        return self._json({"status": "ok", "request": path})
-                    except Exception as ex:
-                        self.send_response(400)
-                        self.send_header("Content-Type", "application/json")
-                        self.end_headers()
-                        self.wfile.write(
-                            json.dumps({"error": str(ex)}).encode()
-                        )
-                        return
-                self.send_error(404)
-
-            def _json(self, payload):
-                body = json.dumps(payload, default=str).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.end_headers()
-                self.wfile.write(body)
-
-            def _text(self, body: str, ctype: str = "text/plain"):
-                data = body.encode()
-                self.send_response(200)
-                self.send_header("Content-Type", ctype)
-                self.end_headers()
-                self.wfile.write(data)
-
-        srv = ThreadingHTTPServer((host, port), Handler)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-        return srv

@@ -1,15 +1,18 @@
-"""Observability: per-pipeline row counters and streaming progress.
+"""Observability: streaming progress, Prometheus text and the debug
+action's sample log.
 
 The reference exposes /info action counters and /sample endpoints per
 pipeline (/root/reference/pipeline/pipeline.go:959-1033) plus
 Prometheus metrics.  Spark-side equivalents:
 
-  * ``observe()`` metrics on the compiled chain — in/out event counts
-    per completed action chain, visible in QueryExecutionListener /
-    StreamingQueryProgress without perturbing the plan;
-  * a StreamingQueryListener collecting per-batch progress (rows/s,
-    batch durations, state size) into an in-memory ring, the analogue
-    of the reference's info endpoints.
+  * :class:`ProgressRing`, a StreamingQueryListener collecting
+    per-batch progress (rows, batch durations, state size and any
+    ``observedMetrics`` a query defines) into an in-memory ring plus
+    running totals — the source of the daemon's /metrics counters;
+  * :class:`PromRegistry`, the text exposition the daemon's /metrics
+    and :meth:`~file_d_spark.introspect.PipelineInspector.prometheus`
+    render;
+  * ``DEBUG_LOG``, the ring the debug action writes its samples to.
 """
 
 from __future__ import annotations
@@ -19,8 +22,6 @@ import json
 import threading
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -34,19 +35,6 @@ _log = __import__("logging").getLogger("file_d_spark.debug")
 def debug_log(message: str, event: dict) -> None:
     DEBUG_LOG.append({"message": message, "event": event})
     _log.info("%s: %s", message, json.dumps(event, default=str))
-
-
-def observe_events(df: DataFrame, name: str = "fd_pipeline") -> DataFrame:
-    """Attach an event counter + byte-size accumulator to the chain."""
-    first_col = df.columns[0]
-    try:
-        return df.observe(
-            name,
-            F.count(F.lit(1)).alias("events"),
-            F.sum(F.octet_length(F.col(first_col).cast("string"))).alias("bytes_probe"),
-        )
-    except Exception:
-        return df  # duplicate observation name etc. — metrics are best effort
 
 
 class ProgressRing(StreamingQueryListener):
@@ -174,26 +162,3 @@ class PromRegistry:
                 v = int(value) if float(value).is_integer() else value
                 out.append(f"{name}{{{label_s}}} {v}" if label_s else f"{name} {v}")
         return "\n".join(out) + "\n"
-
-
-def parse_prometheus_text(text: str) -> dict[tuple[str, tuple], float]:
-    """Tiny scrape parser for tests: (metric, ((label, value), ...)) ->
-    sample value."""
-    import re
-
-    out: dict[tuple[str, tuple], float] = {}
-    for line in text.splitlines():
-        line = line.strip()
-        if not line or line.startswith("#"):
-            continue
-        m = re.fullmatch(r"([a-zA-Z_:][\w:]*)(?:\{(.*)\})?\s+(\S+)", line)
-        if not m:
-            continue
-        labels = tuple(
-            sorted(
-                (lm.group(1), lm.group(2))
-                for lm in re.finditer(r'(\w+)="((?:[^"\\]|\\.)*)"', m.group(2) or "")
-            )
-        )
-        out[(m.group(1), labels)] = float(m.group(3))
-    return out

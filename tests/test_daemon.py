@@ -7,8 +7,10 @@ the daemon control plane (live/ready/metrics/log-level/play/pipelines).
 """
 
 import json
+import logging
 import os
 import time
+import urllib.error
 import urllib.request
 
 import pytest
@@ -25,6 +27,15 @@ def _write(path, text):
     with open(path, "w") as fh:
         fh.write(text)
     return path
+
+
+def _status(req):
+    """HTTP status of a request (a URL or a Request), error codes too."""
+    try:
+        with urllib.request.urlopen(req, timeout=30) as r:
+            return r.status
+    except urllib.error.HTTPError as ex:
+        return ex.code
 
 
 def test_load_pipelines_merges_and_rejects_duplicates(tmp_path):
@@ -161,14 +172,34 @@ def test_control_plane_endpoints(spark):
             }).encode(),
         ), timeout=120).read())
         assert play["result"] == [{"a": "x", "b": "x!"}]
+        # an invalid play request is the client's error, like the
+        # reference's playground handler
+        assert _status(urllib.request.Request(
+            f"{base}/api/v1/play",
+            data=json.dumps({"events": [], "actions": []}).encode(),
+        )) == 400
+        # zap-style runtime log level (file.d.go:347)
+        lvl = json.loads(
+            urllib.request.urlopen(f"{base}/log/level", timeout=30).read())
+        assert "level" in lvl
+        logger = logging.getLogger("file_d_spark")
+        old_level = logger.level
+        try:
+            resp = json.loads(urllib.request.urlopen(urllib.request.Request(
+                f"{base}/log/level", data=b'{"level": "debug"}',
+                method="PUT"), timeout=30).read())
+            assert resp == {"level": "debug"}
+            assert logger.level == logging.DEBUG
+            assert _status(urllib.request.Request(
+                f"{base}/log/level", data=b'{"level": "nope"}',
+                method="PUT")) == 400
+        finally:
+            logger.setLevel(old_level)
         # stopping flips /ready to 503 (file.d.go:388-398)
         state["stopping"] = True
-        try:
-            urllib.request.urlopen(f"{base}/ready", timeout=30)
-            code = 200
-        except urllib.error.HTTPError as ex:
-            code = ex.code
-        assert code == 503
+        assert _status(f"{base}/ready") == 503
+        # live stays green during drain
+        assert _status(f"{base}/live") == 200
     finally:
         srv.shutdown()
 
@@ -256,6 +287,8 @@ def test_pprof_endpoints(spark):
         # every other thread was idle in C code, but format must hold)
         for line in prof.splitlines():
             assert line.rsplit(" ", 1)[1].isdigit()
+        # a malformed duration is answered, not dropped
+        assert _status(f"{base}/debug/pprof/profile?seconds=abc") == 400
         first = urllib.request.urlopen(
             f"{base}/debug/pprof/heap", timeout=30).read().decode()
         second = urllib.request.urlopen(
@@ -359,15 +392,18 @@ pipelines:
         reqs = os.listdir(tmp_path / "resets")
         assert len(reqs) == 1
         body = json.loads((tmp_path / "resets" / reqs[0]).read_text())
-        assert body.get("file") == "/var/log/app.log"
-        try:
-            urllib.request.urlopen(urllib.request.Request(
-                f"http://127.0.0.1:{port}/pipelines/plain/0/reset",
-                data=b"{}"), timeout=30)
-            code = 200
-        except urllib.error.HTTPError as ex:
-            code = ex.code
-        assert code == 404
+        assert body == {"file": "/var/log/app.log"}
+        # an empty body resets every tracked file (resetter.go:75)
+        resp = json.loads(urllib.request.urlopen(urllib.request.Request(
+            f"http://127.0.0.1:{port}/pipelines/tailed/0/reset",
+            data=b"{}",
+        ), timeout=30).read())
+        assert resp["status"] == "ok"
+        assert len(os.listdir(tmp_path / "resets")) == 2
+        assert json.loads(open(resp["request"]).read()) == {}
+        assert _status(urllib.request.Request(
+            f"http://127.0.0.1:{port}/pipelines/plain/0/reset",
+            data=b"{}")) == 404
     finally:
         srv.shutdown()
 

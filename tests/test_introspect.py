@@ -1,12 +1,12 @@
-"""PipelineInspector: /info /sample /ban_list surface
+"""PipelineInspector: the /info /sample /ban_list counters
 (/root/reference/pipeline/pipeline.go:959-1033) and the debug action's
 zap-sampler semantics (debug.go:46,83)."""
 
-import json
-import urllib.request
+import datetime as dt
 
 from file_d_spark import Pipeline
 from file_d_spark.introspect import PipelineInspector
+from tests.util import parse_prometheus_text
 
 
 def two_action_inspector(spark):
@@ -64,26 +64,31 @@ def test_ban_list(spark):
     assert insp.ban_list() == [{"action": 0, "source": "spammy"}]
 
 
-def test_http_surface(spark):
-    insp = two_action_inspector(spark)
-    srv = insp.serve(port=0)
-    try:
-        port = srv.server_address[1]
-        base = f"http://127.0.0.1:{port}/pipelines/pipeline"
-
-        def get(path):
-            with urllib.request.urlopen(base + path, timeout=30) as r:
-                return json.loads(r.read())
-
-        info = get("/action/0/info")
-        assert {e["status"]: e["count"] for e in info} == {
-            "received": 10, "discarded": 5, "passed": 5,
+def test_inspector_runs_settings_level_antispam(spark):
+    """The inspector walks the same effective chain as
+    ``Pipeline.apply``: the settings-level antispam runs first
+    (fd/util.go:96-127) and shows on /ban_list as action 0."""
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [("spammy" if i < 8 else "quiet", t0, f"m{i}") for i in range(10)],
+        "_source_name string, ts timestamp, msg string",
+    )
+    p = Pipeline.from_dict(
+        {
+            "settings": {
+                "antispam": {
+                    "threshold": 1,
+                    "maintenance_interval": "2s",
+                    "time_field": "ts",
+                }
+            },
+            "actions": [],
         }
-        sample = get("/action/1/sample")
-        assert sample["after"]["tag"].startswith("x")
-        assert get("/ban_list") == []
-    finally:
-        srv.shutdown()
+    )
+    insp = PipelineInspector(p, df)
+    assert {r.msg for r in insp.result.collect()} == {"m8", "m9"}
+    assert {r.msg for r in p.apply(df).collect()} == {"m8", "m9"}
+    assert insp.ban_list() == [{"action": 0, "source": "spammy"}]
 
 
 def test_debug_sampling_first_thereafter(spark):
@@ -113,62 +118,36 @@ def test_debug_sampling_first_thereafter(spark):
 
 
 def test_prometheus_scrape_and_health(spark):
-    """/metrics serves file_d-namespaced counters in prometheus text
-    format; /live is always 200; /ready flips to 503 when stopping
-    (fd/file.d.go:341-345,388-398)."""
-    from file_d_spark.metrics import parse_prometheus_text
-
+    """The scrape body carries file_d-namespaced input/output and
+    per-action counters in text exposition format
+    (fd/file.d.go:341-345, pipeline.go:263-266).  /live and /ready
+    live on the daemon mux (test_daemon::test_control_plane_endpoints)."""
     insp = two_action_inspector(spark)
-    srv = insp.serve(port=0)
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
-    try:
-        with urllib.request.urlopen(base + "/live", timeout=30) as r:
-            assert r.status == 200
-        with urllib.request.urlopen(base + "/ready", timeout=30) as r:
-            assert r.status == 200
-
-        with urllib.request.urlopen(base + "/metrics", timeout=120) as r:
-            assert r.status == 200
-            assert r.headers["Content-Type"].startswith("text/plain")
-            body = r.read().decode()
-        samples = parse_prometheus_text(body)
-        name = insp.plan.name
-        assert samples[(
-            "file_d_input_plugin_events_count_total",
-            (("pipeline", name),),
-        )] == 10
-        assert samples[(
-            "file_d_output_plugin_events_count_total",
-            (("pipeline", name),),
-        )] == 5
-        assert samples[(
-            "file_d_action_events_count_total",
-            (("action", "0_discard"), ("pipeline", name), ("status", "discarded")),
-        )] == 5
-        assert samples[(
-            "file_d_action_events_count_total",
-            (("action", "1_modify"), ("pipeline", name), ("status", "passed")),
-        )] == 5
-        # exposition hygiene: TYPE lines present exactly once per metric
-        assert body.count("# TYPE file_d_action_events_count_total counter") == 1
-
-        insp.stopping = True
-        from urllib.error import HTTPError
-
-        try:
-            urllib.request.urlopen(base + "/ready", timeout=30)
-            assert False, "expected 503 when stopping"
-        except HTTPError as e:
-            assert e.code == 503
-        # live stays green during drain
-        with urllib.request.urlopen(base + "/live", timeout=30) as r:
-            assert r.status == 200
-    finally:
-        srv.shutdown()
+    body = insp.prometheus()
+    samples = parse_prometheus_text(body)
+    name = insp.plan.name
+    assert samples[(
+        "file_d_input_plugin_events_count_total",
+        (("pipeline", name),),
+    )] == 10
+    assert samples[(
+        "file_d_output_plugin_events_count_total",
+        (("pipeline", name),),
+    )] == 5
+    assert samples[(
+        "file_d_action_events_count_total",
+        (("action", "0_discard"), ("pipeline", name), ("status", "discarded")),
+    )] == 5
+    assert samples[(
+        "file_d_action_events_count_total",
+        (("action", "1_modify"), ("pipeline", name), ("status", "passed")),
+    )] == 5
+    # exposition hygiene: TYPE lines present exactly once per metric
+    assert body.count("# TYPE file_d_action_events_count_total counter") == 1
 
 
 def test_prom_registry_escaping_and_gauge():
-    from file_d_spark.metrics import PromRegistry, parse_prometheus_text
+    from file_d_spark.metrics import PromRegistry
 
     reg = PromRegistry()
     reg.inc("c_total", 2, path='a"b\\c')
@@ -179,64 +158,6 @@ def test_prom_registry_escaping_and_gauge():
     assert samples[("file_d_c_total", (("path", 'a\\"b\\\\c'),))] == 5
     assert samples[("file_d_g", (("kind", "x"),))] == 1.5
     assert "# TYPE file_d_g gauge" in text
-
-
-def test_pipeline_dump_and_log_level(spark):
-    """GET /pipelines/<name> overview dump (pipeline.go:942-949) and
-    the zap-style /log/level handler (file.d.go:347)."""
-    import json as _json
-    import logging
-    import urllib.request
-
-    from file_d_spark import Pipeline
-    from file_d_spark.introspect import PipelineInspector
-
-    df = spark.createDataFrame([("a",), ("b",)], "f string")
-    insp = PipelineInspector(
-        Pipeline.from_dict(
-            {
-                "actions": [
-                    {"type": "discard", "do_if": {
-                        "op": "equal", "field": "f", "values": ["a"]}},
-                ],
-            },
-            name="dumpme",
-        ),
-        df,
-    )
-    srv = insp.serve(port=0)
-    try:
-        port = srv.server_address[1]
-        page = urllib.request.urlopen(
-            f"http://127.0.0.1:{port}/pipelines/dumpme", timeout=60
-        ).read().decode()
-        assert "<pre>" in page and "pipeline dumpme" in page
-        assert "action 0 discard: received=2 passed=1 discarded=1" in page
-        assert "f: string" in page
-
-        lvl = _json.loads(urllib.request.urlopen(
-            f"http://127.0.0.1:{port}/log/level", timeout=60).read())
-        assert "level" in lvl
-
-        req = urllib.request.Request(
-            f"http://127.0.0.1:{port}/log/level",
-            data=b'{"level": "debug"}', method="PUT")
-        resp = _json.loads(urllib.request.urlopen(req, timeout=60).read())
-        assert resp == {"level": "debug"}
-        assert logging.getLogger("file_d_spark").level == logging.DEBUG
-        # restore + bad level -> 400
-        logging.getLogger("file_d_spark").setLevel(logging.NOTSET)
-        bad = urllib.request.Request(
-            f"http://127.0.0.1:{port}/log/level",
-            data=b'{"level": "nope"}', method="PUT")
-        try:
-            urllib.request.urlopen(bad, timeout=60)
-            code = 200
-        except urllib.error.HTTPError as ex:
-            code = ex.code
-        assert code == 400
-    finally:
-        srv.shutdown()
 
 
 def test_custom_action_metrics(spark):

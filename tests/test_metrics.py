@@ -1,12 +1,14 @@
-"""observe() counters + streaming progress ring."""
+"""observe() counters folded by the streaming progress ring."""
 
 import json
 import time
 
 
 def test_observe_and_progress_ring(spark, tmp_path):
+    from pyspark.sql import functions as F
+
     from file_d_spark import Pipeline
-    from file_d_spark.metrics import ProgressRing, observe_events
+    from file_d_spark.metrics import ProgressRing
 
     # five one-file batches through a two-record ring: the totals must
     # cover every batch, not just the ones the ring still holds
@@ -34,7 +36,9 @@ def test_observe_and_progress_ring(spark, tmp_path):
                 ],
             }
         )
-        df = observe_events(p.apply(p.read_stream(spark)), "fd_out")
+        df = p.apply(p.read_stream(spark)).observe(
+            "fd_out", F.count(F.lit(1)).alias("events")
+        )
         q = (
             df.writeStream.format("noop")
             .option("checkpointLocation", str(tmp_path / "ck"))

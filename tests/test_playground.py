@@ -10,7 +10,6 @@ timestamps.  Also covers the yaml actions_type parse
 """
 
 import json
-import urllib.request
 
 import pytest
 
@@ -93,44 +92,3 @@ def test_parse_request_yaml_actions():
         "actions": "- type: modify\n  k: v\n",
     }))
     assert req["actions"] == [{"type": "modify", "k": "v"}]
-
-
-def test_play_http_endpoint(spark):
-    """POST /api/v1/play on the introspection server, end-to-end."""
-    from file_d_spark import Pipeline
-    from file_d_spark.introspect import PipelineInspector
-
-    df = spark.createDataFrame([("x",)], "f string")
-    insp = PipelineInspector(Pipeline.from_dict({"actions": []}), df)
-    srv = insp.serve(port=0)
-    try:
-        port = srv.server_address[1]
-        body = json.dumps(
-            {"events": [EVENT], "actions": ACTIONS}
-        ).encode()
-        r = urllib.request.urlopen(
-            urllib.request.Request(
-                f"http://127.0.0.1:{port}/api/v1/play",
-                data=body,
-                headers={"Content-Type": "application/json"},
-            ),
-            timeout=120,
-        )
-        resp = json.loads(r.read())
-        assert r.status == 200
-        assert resp["result"][0]["from"] == "2023-08-21T10:01:09Z"
-        # invalid request -> 400, like the reference
-        bad = json.dumps({"events": [], "actions": []}).encode()
-        try:
-            urllib.request.urlopen(
-                urllib.request.Request(
-                    f"http://127.0.0.1:{port}/api/v1/play", data=bad
-                ),
-                timeout=60,
-            )
-            raised = False
-        except urllib.error.HTTPError as ex:
-            raised = ex.code == 400
-        assert raised
-    finally:
-        srv.shutdown()

@@ -161,47 +161,6 @@ def test_runtime_offset_reset_all_and_inode(spark, tmp_path):
         q.stop()
 
 
-def test_reset_endpoint_on_introspection_server(spark, tmp_path):
-    """POST /pipelines/<name>/0/reset (file.go:204 endpoint mounting)
-    writes the request file the stream reader consumes."""
-    import json as _json
-    import urllib.request
-
-    from file_d_spark import Pipeline
-    from file_d_spark.introspect import PipelineInspector
-    from file_d_spark.sources.tail_file import TailResetter
-
-    reset_dir = str(tmp_path / "resets")
-    resetter = TailResetter(reset_dir)
-    events = spark.createDataFrame([("x",)], "value string")
-    p = Pipeline.from_dict({"settings": {"decoder": "raw"}, "input": {"type": "fake"}})
-    insp = PipelineInspector(p, events)
-    srv = insp.serve(resetter=resetter)
-    port = srv.server_address[1]
-    try:
-        req = urllib.request.Request(
-            f"http://127.0.0.1:{port}/pipelines/{p.plan.name}/0/reset",
-            data=_json.dumps({"file": "/var/log/app.log"}).encode(),
-            method="POST",
-        )
-        resp = _json.load(urllib.request.urlopen(req))
-        assert resp["status"] == "ok"
-        reqs = os.listdir(reset_dir)
-        assert len(reqs) == 1
-        with open(os.path.join(reset_dir, reqs[0])) as fh:
-            assert _json.load(fh) == {"file": "/var/log/app.log"}
-        # truncate-all body
-        req = urllib.request.Request(
-            f"http://127.0.0.1:{port}/pipelines/{p.plan.name}/0/reset",
-            data=b"{}",
-            method="POST",
-        )
-        assert _json.load(urllib.request.urlopen(req))["status"] == "ok"
-        assert len(os.listdir(reset_dir)) == 2
-    finally:
-        srv.shutdown()
-
-
 def test_tail_exclude_and_dir_pattern(spark, tmp_path):
     """paths.exclude full-path globs and dir_pattern directory filter
     (file.go:73-74,194): excluded files and non-matching subtrees

@@ -45,3 +45,26 @@ def assert_frames_match(spark_df, duck_df: pd.DataFrame, rtol: float = 1e-9):
                 f"column {c} differs at rows {list(got.index[mismatches])[:5]}: "
                 f"{list(ga[mismatches][:3])} vs {list(wa[mismatches][:3])}"
             )
+
+
+def parse_prometheus_text(text: str) -> dict[tuple[str, tuple], float]:
+    """Tiny scrape parser: (metric, ((label, value), ...)) -> sample
+    value."""
+    import re
+
+    out: dict[tuple[str, tuple], float] = {}
+    for line in text.splitlines():
+        line = line.strip()
+        if not line or line.startswith("#"):
+            continue
+        m = re.fullmatch(r"([a-zA-Z_:][\w:]*)(?:\{(.*)\})?\s+(\S+)", line)
+        if not m:
+            continue
+        labels = tuple(
+            sorted(
+                (lm.group(1), lm.group(2))
+                for lm in re.finditer(r'(\w+)="((?:[^"\\]|\\.)*)"', m.group(2) or "")
+            )
+        )
+        out[(m.group(1), labels)] = float(m.group(3))
+    return out
