@@ -23,7 +23,7 @@ The regex decoders additionally return a ``"__pre__"`` entry: a list
 of ``{helper_col_name: Column}`` layers the CONSUMER must project (in
 order, e.g. ``df.withColumns(layer)``) before evaluating the field
 columns, then drop.  The one-pass regexp_replace+split intermediates
-live there under unique ``__fd_rx*__`` names; staging them as real
+live there under fixed ``__fd_rx_*__`` names; staging them as real
 columns is what makes the regex run ONCE per row — inlined into each
 field's conditional, codegen's subexpression elimination cannot reach
 them and the matcher re-runs per field (measured 2x the whole decode
@@ -60,11 +60,6 @@ def _sql_str(s: str) -> str:
 _RX_SEP = "\x01"
 
 
-#: distinguishes the staged helper columns of stacked decode actions
-#: in one plan; per-process monotonic, resolved long before execution
-_RX_STAGE_SEQ = 0
-
-
 def _rx_fields(
     line: Column, pattern: str, n: int
 ) -> tuple[list[Column], list[dict[str, Column]]]:
@@ -96,12 +91,12 @@ def _rx_fields(
     conditional where codegen's subexpression elimination cannot
     deduplicate them, and the matcher re-runs for every field
     (measured r13: staging the two layers halves the whole decode)."""
-    global _RX_STAGE_SEQ
-    k = _RX_STAGE_SEQ = _RX_STAGE_SEQ + 1
-    line_name = f"__fd_rx{k}_line__"
-    ex_name = f"__fd_rx{k}_ex__"
-    parts_name = f"__fd_rx{k}_parts__"
-    ok_name = f"__fd_rx{k}_ok__"
+    # fixed stage names: each regex decoder calls this once, and every
+    # consumer drops (Decode.apply_impl) or selects away (_decode_lines)
+    # the stage before the next decoder runs, so plans repeat per build
+    line_name, ex_name, parts_name, ok_name = (
+        "__fd_rx_line__", "__fd_rx_ex__", "__fd_rx_parts__", "__fd_rx_ok__"
+    )
     repl = _RX_SEP.join(f"${i}" for i in range(1, n + 1))
     pre = [
         {line_name: line},

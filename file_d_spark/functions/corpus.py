@@ -83,7 +83,7 @@ def line_dedup(
     lines = lines_of(df)
     hot: list = []
     if hot_fraction > 0:
-        hot = skew.hot_keys_memo(
+        hot = skew.hot_keys(
             lines_of(skew.doc_sample(df, id_col, hot_fraction)),
             "__digest__",
             max(2, hot_threshold),
@@ -801,7 +801,7 @@ def dup_span_fraction(
     grams = grams_of(df)
     hot: list = []
     if hot_fraction > 0:
-        hot = skew.hot_keys_memo(
+        hot = skew.hot_keys(
             grams_of(skew.doc_sample(df, id_col, hot_fraction)),
             "__h__",
             max(2, hot_threshold),
@@ -927,7 +927,7 @@ def remove_dup_spans(
     grams = grams_of(df)
     hot: list = []
     if hot_fraction > 0:
-        hot = skew.hot_keys_memo(
+        hot = skew.hot_keys(
             grams_of(skew.doc_sample(df, id_col, hot_fraction)),
             "__h__",
             max(min_count, hot_threshold),

@@ -382,7 +382,7 @@ def jaccard_pairs(
     posting = sh.select("doc", "set_size", F.explode("shingles").alias("shingle"))
     hot: list = []
     if hot_fraction > 0:
-        hot = skew.hot_keys_memo(
+        hot = skew.hot_keys(
             skew.doc_sample(sh, "doc", hot_fraction).select(
                 "doc", F.explode("shingles").alias("shingle")
             ),
@@ -1022,11 +1022,6 @@ def connected_components(
     ).select("id", F.coalesce("root", F.col("id")).alias("cluster_id"))
 
 
-#: rounds the last _star_contraction ran — read by tests asserting the
-#: O(log n) bound on adversarial chain graphs
-LAST_CC_ROUNDS = 0
-
-
 def _star_contraction(edges0: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star rounds until the edge set is
     stable; returns star edges ``(u=member, v=component min)``.
@@ -1038,7 +1033,6 @@ def _star_contraction(edges0: DataFrame, max_iter: int) -> DataFrame:
     round, so rounds = O(log n) even on a path graph, while each round
     is two keyed aggregations — no broadcast, no driver state.
     """
-    global LAST_CC_ROUNDS
     edges = (
         edges0.filter(F.col("u") != F.col("v"))
         .select(
@@ -1048,9 +1042,7 @@ def _star_contraction(edges0: DataFrame, max_iter: int) -> DataFrame:
     )
     edges = _register_cache(edges.localCheckpoint(eager=True))
     prev_sig = None
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         # -- large-star
         adj = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1088,7 +1080,6 @@ def _star_contraction(edges0: DataFrame, max_iter: int) -> DataFrame:
         if sig == prev_sig:
             break
         prev_sig = sig
-    LAST_CC_ROUNDS = rounds
     return edges
 
 

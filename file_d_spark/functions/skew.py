@@ -79,7 +79,12 @@ def hot_keys(
     derived from a :func:`doc_sample` subsample), most frequent first,
     at most ``max_hot`` of them.  The groupBy condenses map-side, the
     filter keeps only heavy hitters, and the collect is bounded by
-    ``max_hot`` — driver state stays a bounded model, per SCALE.md."""
+    ``max_hot`` — driver state stays a bounded model, per SCALE.md.
+
+    Every build runs this pass; keep no hot set between builds.  The
+    sampling job also materializes a persisted input (the tokenized
+    survivors of ``corpus_build_end2end``), whose measured size picks
+    the later joins, so a build that skipped it would plan differently."""
     rows = (
         grams.groupBy(key_col)
         .agg(F.count(F.lit(1)).alias("__c__"))
@@ -89,48 +94,6 @@ def hot_keys(
         .collect()
     )
     return [r[0] for r in rows]
-
-
-# Discovery memo: (session id, analyzed-plan semanticHash of the grams
-# frame, key col, threshold, max_hot) -> hot-key list.  Discovery is
-# DETERMINISTIC (hash-based subsample, exact counts, total order), so
-# for an identical discovery subquery the list is identical — caching
-# it is semantics-preserving.  This is also the production shape: a
-# pipeline reuses one input across many guarded operators (span
-# fraction, span removal, jaccard ranking ...) and should pay the
-# 1%-sample pass ONCE per (input, tokenization), not once per operator.
-# The key includes the session id so a new session (or changed input
-# plan — new files, new filter, new gram size) re-discovers.
-_HOT_MEMO: dict = {}
-
-
-def hot_keys_memo(
-    grams: DataFrame,
-    key_col: str,
-    threshold: int,
-    max_hot: int = DEFAULT_MAX_HOT,
-) -> list:
-    """Memoized :func:`hot_keys` — see ``_HOT_MEMO``.  Falls back to a
-    plain call if the JVM plan handle refuses to hash (never observed;
-    belt for exotic plans)."""
-    try:
-        plan_hash = grams._jdf.queryExecution().analyzed().semanticHash()
-        key = (
-            grams.sparkSession.sparkContext.applicationId,
-            plan_hash,
-            key_col,
-            threshold,
-            max_hot,
-        )
-    except Exception:
-        return hot_keys(grams, key_col, threshold, max_hot)
-    if key not in _HOT_MEMO:
-        _HOT_MEMO[key] = hot_keys(grams, key_col, threshold, max_hot)
-    return _HOT_MEMO[key]
-
-
-def clear_hot_memo() -> None:
-    _HOT_MEMO.clear()
 
 
 def hot_marker(

@@ -74,37 +74,22 @@ class PipelineInspector:
 
     # -- /ban_list ------------------------------------------------------
     def ban_list(self) -> list[dict[str, Any]]:
-        """Sources currently over an antispam threshold, re-derived
-        from that action's input frame with its own counting rules
-        (antispammer.go:24-120 exposes the live ban map)."""
-        from pyspark.sql import functions as F
-
-        from file_d_spark.actions.throttle import _parse_duration_seconds
+        """Sources an antispam action banned: those with events in its
+        input frame that are missing from its output frame, so the
+        action's own exceptions and rules decide (antispammer.go:24-120
+        exposes the live ban map)."""
         from file_d_spark.fields import get_col_safe, parse_selector
 
         out: list[dict[str, Any]] = []
         for i, cfg in enumerate(self.actions):
-            if cfg.get("type") != "antispam" or int(cfg.get("threshold", 0)) <= 0:
+            if cfg.get("type") != "antispam":
                 continue
-            df = self.frames[i]
-            src_field = cfg.get("source_field", "source_name")
-            time_field = cfg.get("time_field", "ts")
-            interval_s = _parse_duration_seconds(
-                cfg.get("maintenance_interval"), 60.0
+            sel = parse_selector(cfg.get("source_field", "source_name"))
+            before, after = (
+                f.select(get_col_safe(sel, f.schema).cast("string").alias("s"))
+                for f in self.frames[i : i + 2]
             )
-            src = get_col_safe(parse_selector(src_field), df.schema).cast("string")
-            tcol = get_col_safe(parse_selector(time_field), df.schema)
-            ts = F.coalesce(tcol.cast("timestamp"), F.current_timestamp())
-            win = F.floor(F.unix_timestamp(ts) / F.lit(int(interval_s)))
-            banned = (
-                df.select(src.alias("s"), win.alias("w"))
-                .groupBy("s", "w")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > int(cfg["threshold"]))
-                .select("s")
-                .distinct()
-                .collect()
-            )
+            banned = before.exceptAll(after).distinct().orderBy("s").collect()
             out.extend({"action": i, "source": r.s} for r in banned)
         return out
 

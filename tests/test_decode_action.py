@@ -39,6 +39,41 @@ def test_decode_nginx_prefix(spark):
     assert "line" not in out.columns  # origin dropped by default
 
 
+def test_two_regex_decodes_in_one_chain(spark):
+    """Stacked regex decoders stage their one-pass helper columns under
+    the same names; each stage is dropped before the next decoder runs,
+    so a chain decodes each field exactly as decoding it alone does."""
+    df = spark.createDataFrame(
+        [
+            (0, "2024-01-01T00:00:00.0Z stderr P partial line",
+             "2022/08/17 10:49:27 [error] 1#2: *3 boom"),
+            (1, "2024-01-01T00:00:01.0Z stdout F full line",
+             "2022/08/17 10:49:28 [warn] 4#5: no client"),
+            (2, "not a cri line", "not an nginx line"),
+        ],
+        "id int, c string, n string",
+    )
+    cri = {"type": "decode", "decoder": "cri", "field": "c", "prefix": "c_"}
+    ngx = {"type": "decode", "decoder": "nginx_error", "field": "n", "prefix": "n_"}
+
+    def run(*actions):
+        out = Pipeline.from_dict({"actions": list(actions)}).apply(df)
+        assert not [c for c in out.columns if c.startswith("__fd_rx")]
+        return {r.id: r.asDict() for r in out.collect()}
+
+    def fields(rows, prefix):
+        return {
+            i: {k: v for k, v in r.items() if k.startswith(prefix)}
+            for i, r in rows.items()
+        }
+
+    both = run(cri, ngx)
+    assert fields(both, "c_") == fields(run(cri), "c_")
+    assert fields(both, "n_") == fields(run(ngx), "n_")
+    assert both[0]["c_log"] == "partial line" and both[0]["n_message"] == "boom"
+    assert both[1]["n_level"] == "warn"
+
+
 def test_json_decode_schemaless_map(spark):
     df = spark.createDataFrame([('{"a":"1","b":"x"}',)], "payload string")
     out = Pipeline.from_dict(

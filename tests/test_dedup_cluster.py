@@ -72,9 +72,8 @@ def test_cc_adversarial_chain_converges_logarithmically(spark):
     """A 200-node path graph has diameter 199 — plain label propagation
     needs ~199 rounds, far past max_iter.  The large-star/small-star
     alternation must converge to the correct single component within
-    O(log n) rounds (VERDICT r7 #6)."""
-    from file_d_spark.functions import dedup as dedup_mod
-
+    O(log n) rounds (VERDICT r7 #6): ``max_iter=12`` caps the rounds,
+    so the exact single component shows it converged within them."""
     n = 200
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "doc_a long, doc_b long"
@@ -86,8 +85,6 @@ def test_cc_adversarial_chain_converges_logarithmically(spark):
         ).collect()
     }
     assert got == {i: 1 for i in range(1, n + 1)}
-    # log2(200) ~ 7.6; allow headroom for the +1 convergence-detect round
-    assert dedup_mod.LAST_CC_ROUNDS <= 12, dedup_mod.LAST_CC_ROUNDS
 
 
 def test_cc_random_graphs_match_union_find(spark):

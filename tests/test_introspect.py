@@ -49,8 +49,8 @@ def test_sample_before_after(spark):
 
 def test_ban_list(spark):
     df = spark.createDataFrame(
-        [("spammy", f"2024-01-01T00:00:{i:02d}") for i in range(5)]
-        + [("quiet", "2024-01-01T00:00:00")],
+        [("spammy", f"2024-01-01T00:00:{i:02d}Z") for i in range(5)]
+        + [("quiet", "2024-01-01T00:00:00Z")],
         "source_name string, ts string",
     )
     p = Pipeline.from_dict(
@@ -61,7 +61,40 @@ def test_ban_list(spark):
         }
     )
     insp = PipelineInspector(p, df)
+    assert {r.source_name for r in insp.result.collect()} == {"quiet"}
     assert insp.ban_list() == [{"action": 0, "source": "spammy"}]
+
+
+def test_ban_list_honours_antispam_exceptions(spark):
+    """A source the antispam's own exception exempts is never banned,
+    so it is not on /ban_list even past the threshold."""
+    df = spark.createDataFrame(
+        [("my_source1", f"2024-01-01T00:00:{i:02d}Z") for i in range(4)],
+        "source_name string, ts string",
+    )
+    p = Pipeline.from_dict(
+        {
+            "actions": [
+                {
+                    "type": "antispam",
+                    "threshold": 1,
+                    "maintenance_interval": "1m",
+                    "exceptions": [
+                        {
+                            "name": "mine",
+                            "check_source_name": True,
+                            "rules": [
+                                {"mode": "contains", "values": ["my_source1"]}
+                            ],
+                        }
+                    ],
+                }
+            ]
+        }
+    )
+    insp = PipelineInspector(p, df)
+    assert insp.result.count() == 4
+    assert insp.ban_list() == []
 
 
 def test_inspector_runs_settings_level_antispam(spark):

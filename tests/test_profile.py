@@ -9,7 +9,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 ROW_FIELDS = {
     "row", "build_s", "exec_s", "py4j_calls", "build_jobs", "exec_jobs", "jobs", "plan",
-    "catalyst.analysis_s", "catalyst.optimization_s", "catalyst.planning_s",
+    "plan_varies", "catalyst.analysis_s", "catalyst.optimization_s", "catalyst.planning_s",
     "exec.jobs", "exec.stages", "exec.tasks", "exec.executor_run_s", "exec.executor_cpu_s",
     "exec.gc_s", "exec.shuffle_read_bytes", "exec.shuffle_write_bytes", "exec.spill_bytes",
     "exec.empty_task_share", "exec.task_skew",
@@ -32,6 +32,7 @@ def test_profile_rows_plans_and_call_sites(sf_dir, tmp_path):
         assert row["row"] == name
         assert ROW_FIELDS <= set(row), ROW_FIELDS - set(row)
         assert set(row["plan"]) == PLAN_FIELDS
+        assert row["plan_varies"] is False
         assert row["py4j_calls"] > 0
         assert row["build_jobs"] + row["exec_jobs"] == row["exec.jobs"] == len(row["jobs"]) > 0
         for jid, phase, dur_s, stages, tasks in row["jobs"]:

@@ -17,7 +17,6 @@ EXEMPT = {
     "banded_cosine_pairs": "dbscan pairs_fn that SCALE.md's 100 TB argument rests on",
     "rh_signature": "the signature step of banded_cosine_pairs",
     "_apply_merge": "reference merge of the BPE differential test",
-    "clear_hot_memo": "test reset for skew._HOT_MEMO, whose fate is open",
     "join_selector": "inverse of parse_selector, the round-trip property's other half",
     "render_offsets": "inverse of parse_offsets, writes the reference's offsets-file format",
     "register_views": "user entry point: every testdata table as a spark.sql temp view",

@@ -202,26 +202,57 @@ def test_default_guard_never_fires_at_test_scale(spark, sf_dir):
     assert norm(guarded) == norm(plain)
 
 
-def test_discovery_memoized_per_plan(spark, skewed, monkeypatch):
-    """Identical discovery subqueries pay the sampled count pass ONCE
-    per session (the production shape: one input, many guarded ops);
-    a different gram size is a different plan and re-discovers."""
-    calls = []
-    real = skew.hot_keys
+def _plan_counts(df) -> dict:
+    """Exchanges and join strategies of the physical plan, counted as
+    tools/profile.py counts them."""
+    import re
 
-    def counting(grams, key_col, threshold, max_hot=skew.DEFAULT_MAX_HOT):
-        calls.append(1)
-        return real(grams, key_col, threshold, max_hot)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pats = {"exchange": r"\bExchange\b", "bhj": "BroadcastHashJoin", "smj": "SortMergeJoin"}
+    return {k: len(re.findall(p, plan)) for k, p in pats.items()}
 
-    monkeypatch.setattr(skew, "hot_keys", counting)
-    skew.clear_hot_memo()
-    a = corpus.dup_span_fraction(skewed, "doc_id", "text", n=8, **GUARD)
-    a.collect()
-    assert len(calls) == 1
-    b = corpus.dup_span_fraction(skewed, "doc_id", "text", n=8, **GUARD)
-    b.collect()
-    assert len(calls) == 1  # second identical call hits the memo
-    c = corpus.dup_span_fraction(skewed, "doc_id", "text", n=5, **GUARD)
-    c.collect()
-    assert len(calls) == 2  # different tokenization -> re-discover
-    skew.clear_hot_memo()
+
+def _build_in_group(spark, group, build):
+    """Build a frame under job group ``group``; return it with the
+    number of Spark jobs its build ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+        df.schema
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_every_build_discovers_and_plans_the_same(spark, skewed):
+    """No process-wide state carries over from one build to the next:
+    a second identical build runs the same discovery jobs and plans the
+    same as the first."""
+    built = [
+        _build_in_group(
+            spark,
+            f"skew-guard-build-{i}",
+            lambda: corpus.dup_span_fraction(skewed, "doc_id", "text", n=8, **GUARD),
+        )
+        for i in range(2)
+    ]
+    (a, jobs_a), (b, jobs_b) = built
+    assert jobs_a == jobs_b > 0
+    assert _plan_counts(a) == _plan_counts(b)
+    assert _rowmap(a) == _rowmap(b)
+
+
+def test_corpus_build_end2end_plans_the_same_twice(spark, sf_dir):
+    """The flagship corpus build plans the same on every build in a
+    session, so a min-over-reps timing compares one plan."""
+    from file_d_spark.queries import QUERIES, release_caches
+
+    counts = []
+    for _ in range(2):
+        df = QUERIES["corpus_build_end2end"](spark, sf_dir)
+        counts.append(_plan_counts(df))
+        df.write.format("noop").mode("overwrite").save()
+        release_caches()
+    assert counts[0] == counts[1]

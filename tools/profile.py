@@ -19,9 +19,12 @@ with Spark's event log on, and prints one JSON line per row:
 - ``jobs``: ``[id, phase, dur_s, stages, tasks]`` per job of the last
   rep, counting the stages and tasks that ran (a row that checkpoints,
   counts or collects while building shows each as its own job);
-- ``plan``: physical-plan property counts from one
+- ``plan``: physical-plan property counts from the last rep's
   ``explain("formatted")`` string (exchanges, join strategies, codegen
-  stages, Python nodes, pushed filters, columns read).
+  stages, Python nodes, pushed filters, columns read);
+- ``plan_varies``: true when any two reps' plan counts differ (every
+  rep is explained), so ``--reps 2`` shows whether a row plans the
+  same on every build.
 
 One untimed extra build per row then attributes py4j trips to the
 innermost repo frame that is not this script; the last JSON line lists
@@ -135,13 +138,15 @@ def explain_string(df) -> str:
 
 
 def profile_row(spark, trips: Py4jTrips, name: str, sf: str, reps: int, plans: str | None) -> dict:
-    """Time ``reps`` build + exec passes of one row; the last rep also
-    gives the py4j count, Catalyst phases and plan string."""
+    """Time ``reps`` build + exec passes of one row and count each rep's
+    plan; the last rep also gives the py4j count, Catalyst phases and
+    plan string."""
     from file_d_spark.queries import QUERIES, release_caches
 
     fn = QUERIES[name]
     sc = spark.sparkContext
     build_s = exec_s = float("inf")
+    counts = []
     for rep in range(reps):
         sc.setJobGroup(f"{name}:build:{rep}", name)
         calls = trips.count
@@ -150,11 +155,12 @@ def profile_row(spark, trips: Py4jTrips, name: str, sf: str, reps: int, plans: s
         df.schema  # force analysis
         build_s = min(build_s, time.time() - t0)
         calls = trips.count - calls
+        # before the noop write: once it has run, the row's cached
+        # relations are materialized and the plan string changes
         if rep == reps - 1:
-            # before the noop write: once it has run, the row's cached
-            # relations are materialized and the plan string changes
             phases = catalyst_phases(df)
-            plan = explain_string(df)
+        plan = explain_string(df)
+        counts.append(plan_counts(plan))
         sc.setJobGroup(f"{name}:exec:{rep}", name)
         t0 = time.time()
         df.write.format("noop").mode("overwrite").save()
@@ -177,7 +183,8 @@ def profile_row(spark, trips: Py4jTrips, name: str, sf: str, reps: int, plans: s
         "exec_s": round(exec_s, 3),
         "py4j_calls": calls,
         **{f"catalyst.{k}_s": round(v, 3) for k, v in phases.items()},
-        "plan": plan_counts(plan),
+        "plan": counts[-1],
+        "plan_varies": any(c != counts[0] for c in counts),
     }
 
 
