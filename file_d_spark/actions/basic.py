@@ -115,9 +115,8 @@ class Debug(Action):
 
     Spark-side the sampled subset is written to the driver log via
     :func:`file_d_spark.metrics.debug_log` when ``collect: true``
-    (batch only — an extra bounded job); otherwise only an ``observe``
-    counter of would-log events is attached, keeping the plan free of
-    driver round-trips."""
+    (batch only — an extra bounded job); otherwise the action is a
+    plain passthrough, keeping the plan free of driver round-trips."""
 
     def sample_predicate(self, df: DataFrame) -> Column:
         """would-log decision per row: rank events in arrival order
@@ -130,14 +129,9 @@ class Debug(Action):
             return F.lit(True)  # no sampler configured: log everything
         interval_s = None
         if self.params.get("interval"):
-            import re
+            from file_d_spark.xtime import parse_duration_s
 
-            m = re.fullmatch(
-                r"([\d.]+)\s*([a-z]*)", str(self.params["interval"]).strip()
-            )
-            units = {"ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0}
-            if m:
-                interval_s = float(m.group(1)) * units.get(m.group(2) or "s", 1.0)
+            interval_s = parse_duration_s(self.params["interval"])
         time_field = self.params.get("time_field", "")
         if interval_s and time_field and time_field in df.columns:
             bucket = F.floor(
@@ -159,20 +153,15 @@ class Debug(Action):
         return keep_first | every_mth
 
     def apply_impl(self, df: DataFrame, pred: Column | None) -> DataFrame:
+        if not self.params.get("collect") or df.isStreaming:
+            return df
+        from file_d_spark.metrics import debug_log
+
         name = self.params.get("message", "event sample")
         cond = pred if pred is not None else F.lit(True)
-        if self.params.get("collect") and not df.isStreaming:
-            from file_d_spark.metrics import debug_log
-
-            would = self.sample_predicate(df) & cond
-            cap = int(self.params.get("max_samples", 100))
-            sampled = df.withColumn("__fd_log__", would).filter("__fd_log__")
-            for row in sampled.drop("__fd_log__").limit(cap).collect():
-                debug_log(name, row.asDict(recursive=True))
-            return df
-        try:
-            return df.observe(
-                f"fd_debug_{name}", F.sum(F.when(cond, 1).otherwise(0)).alias("events")
-            )
-        except Exception:
-            return df  # observe unavailable (e.g. repeated name) — passthrough
+        would = self.sample_predicate(df) & cond
+        cap = int(self.params.get("max_samples", 100))
+        sampled = df.withColumn("__fd_log__", would).filter("__fd_log__")
+        for row in sampled.drop("__fd_log__").limit(cap).collect():
+            debug_log(name, row.asDict(recursive=True))
+        return df

@@ -43,22 +43,6 @@ from file_d_spark.actions.base import Action, register
 from file_d_spark.fields import get_col_safe, parse_selector
 
 
-def _parse_duration_seconds(v, default: float) -> float:
-    if v is None:
-        return default
-    if isinstance(v, (int, float)):
-        return float(v)
-    s = str(v).strip()
-    units = {"ns": 1e-9, "us": 1e-6, "ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0}
-    import re
-
-    m = re.fullmatch(r"([\d.]+)\s*([a-z]*)", s)
-    if not m:
-        return default
-    num, unit = float(m.group(1)), m.group(2) or "s"
-    return num * units.get(unit, 1.0)
-
-
 def _validate_distribution(dist: dict) -> None:
     """parseLimitDistribution validation (distribution.go:33-90):
     ratios in [0,1], non-empty values, no duplicates, sum <= 1."""
@@ -290,7 +274,7 @@ class Throttle(Action):
         if df.isStreaming:
             return self._apply_stream(df, pred, specs, rule_idx, ts)
         key_field = self.params.get("throttle_field", "")
-        bucket_s = _parse_duration_seconds(self.params.get("bucket_interval"), 60.0)
+        bucket_s = xtime.parse_duration_s(self.params.get("bucket_interval", 60))
         buckets_count = int(self.params.get("buckets_count", 60))
 
         key = (
@@ -468,12 +452,12 @@ class Throttle(Action):
             key_col=self.params.get("throttle_field", ""),
             ts_col="__fd_ts__",
             bucket_interval_s=int(
-                _parse_duration_seconds(self.params.get("bucket_interval"), 60.0)
+                xtime.parse_duration_s(self.params.get("bucket_interval", 60))
             ),
             buckets_count=int(self.params.get("buckets_count", 60)),
             limit=limit,
             limiter_expiration_ms=int(
-                _parse_duration_seconds(self.params.get("limiter_expiration"), 1800.0)
+                xtime.parse_duration_s(self.params.get("limiter_expiration", 1800))
                 * 1000
             ),
             rule_cfgs=[
@@ -572,7 +556,7 @@ class Cardinality(Action):
             # runs have no time axis inside one frame, so ttl is a
             # streaming-only knob
             ttl_ms = int(
-                _parse_duration_seconds(self.params.get("ttl"), 60.0) * 1000
+                xtime.parse_duration_s(self.params.get("ttl", 60)) * 1000
             )
             # multi-key / multi-field parity with batch: composite
             # helper columns (concat_ws over every configured key /
@@ -741,9 +725,7 @@ class Antispam(Action):
         time_field = self.params.get("time_field", "ts")
         threshold = int(self.params.get("threshold", 0))
         rules = self.params.get("rules") or []
-        interval_s = _parse_duration_seconds(
-            self.params.get("maintenance_interval"), 60.0
-        )
+        interval_s = xtime.parse_duration_s(self.params.get("maintenance_interval", 60))
         if threshold <= 0 and not rules:
             return df
         if df.isStreaming:
@@ -764,7 +746,12 @@ class Antispam(Action):
 
         t = df.schema[time_field].dataType if time_field in df.columns else None
         ts = xtime.ensure_timestamp(tcol, t, None, context="antispam time_field")
-        win = F.floor(F.unix_timestamp(ts) / F.lit(int(interval_s)))
+        # a NULL time counts in one window of its source: a NULL join
+        # key never meets its own count
+        win = F.coalesce(
+            F.floor(F.unix_timestamp(ts) / F.lit(int(interval_s))),
+            F.lit(-(2**63)),
+        )
 
         # serialized-event stand-in for the reference's raw event bytes
         event_json = F.to_json(F.struct(*[F.col(c) for c in df.columns]))

@@ -538,10 +538,6 @@ def decode_protobuf(line: Column, params: dict[str, Any] | None = None) -> Field
 
     import json as _json
 
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(protowire)
-
     @F.pandas_udf("string")
     def pb_to_json(s: pd.Series) -> pd.Series:
         def one(v):

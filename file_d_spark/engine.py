@@ -19,33 +19,29 @@ from file_d_spark.actions import build_action
 from file_d_spark.config import PipelinePlan, load_config
 
 
-def apply_input_guards(df: DataFrame, plan: PipelinePlan, raw_field: str | None) -> DataFrame:
-    """Engine-level guards applied before actions: max_event_size
-    drop/cutoff (/root/reference/pipeline/pipeline.go:553-580)."""
+def apply_input_guards(df: DataFrame, plan: PipelinePlan, line_col: str) -> DataFrame:
+    """Engine-level guards on the raw input line, before decoding:
+    max_event_size drop/cutoff (reference pipeline/pipeline.go:553-580)."""
     s = plan.settings
-    if s.max_event_size and raw_field and raw_field in df.columns:
-        size = F.octet_length(F.col(raw_field).cast("string"))
-        if s.cut_off_event_by_limit:
-            # byte-based trim to match the reference's octet limit:
-            # F.substring counts characters, so multi-byte UTF-8 events
-            # would exceed max_event_size bytes. Trim the encoded bytes
-            # and decode back (a split multi-byte sequence at the cut
-            # point yields U+FFFD, matching a hard byte truncation).
-            cut = F.make_valid_utf8(
-                F.substring(
-                    F.encode(F.col(raw_field).cast("string"), "UTF-8"),
-                    1,
-                    s.max_event_size,
-                ).cast("string")
-            )
-            df = df.withColumn(raw_field, cut)
-            if s.cut_off_event_by_limit_field:
-                df = df.withColumn(
-                    s.cut_off_event_by_limit_field, size > s.max_event_size
-                )
-        else:
-            df = df.filter(size <= s.max_event_size)
-    return df
+    if not s.max_event_size:
+        return df
+    raw = F.col(line_col).cast("string")
+    too_big = F.octet_length(raw) > s.max_event_size
+    if not s.cut_off_event_by_limit:
+        return df.filter(~too_big)
+    # byte-based trim to match the reference's octet limit:
+    # F.substring counts characters, so multi-byte UTF-8 events
+    # would exceed max_event_size bytes. Trim the encoded bytes
+    # and decode back (a split multi-byte sequence at the cut
+    # point yields U+FFFD, matching a hard byte truncation).
+    cut = F.make_valid_utf8(
+        F.substring(F.encode(raw, "UTF-8"), 1, s.max_event_size).cast("string")
+    )
+    # one projection: the flag reads the line before the cut
+    guarded = {line_col: cut}
+    if s.cut_off_event_by_limit_field:
+        guarded[s.cut_off_event_by_limit_field] = too_big
+    return df.withColumns(guarded)
 
 
 def compile_actions(df: DataFrame, actions: list[dict[str, Any]]) -> DataFrame:
@@ -157,10 +153,9 @@ class Pipeline:
         head = [antispam_cfg] if antispam_cfg is not None else []
         return head + list(self.plan.actions)
 
-    def apply(self, df: DataFrame, raw_field: str | None = None) -> DataFrame:
+    def apply(self, df: DataFrame) -> DataFrame:
         """Run the action chain over an existing DataFrame (batch or
         streaming)."""
-        df = apply_input_guards(df, self.plan, raw_field)
         return compile_actions(df, self.actions())
 
     def read(self, spark: SparkSession) -> DataFrame:

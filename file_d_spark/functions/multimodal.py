@@ -27,17 +27,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-# mapInPandas closures reference module-level helpers; executors may
-# not have the repo on sys.path — pickle this module by value
-try:  # pragma: no cover
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:
-    pass
-
 MEDIA_META_SCHEMA = (
     "media_id long, kind string, byte_len int, "
     "width int, height int, n_frames int, sample_rate int"

@@ -299,11 +299,6 @@ def normalize_tokens(
 
 
 def _tokenizer_udf(active: frozenset):
-    from pyspark import cloudpickle
-    import file_d_spark.functions.normalize as _mod
-
-    cloudpickle.register_pickle_by_value(_mod)
-
     @F.pandas_udf("string")
     def tok(s: pd.Series) -> pd.Series:
         return s.map(
@@ -314,11 +309,6 @@ def _tokenizer_udf(active: frozenset):
 
 
 def _scanner_udf(pats: list[tuple[str, str]]):
-    from pyspark import cloudpickle
-    import file_d_spark.functions.normalize as _mod
-
-    cloudpickle.register_pickle_by_value(_mod)
-
     @F.pandas_udf("string")
     def scan(s: pd.Series) -> pd.Series:
         return s.map(lambda x: None if x is None else scan_longest_match(x, pats))

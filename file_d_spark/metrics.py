@@ -12,7 +12,8 @@ Prometheus metrics.  Spark-side equivalents:
   * :class:`PromRegistry`, the text exposition the daemon's /metrics
     and :meth:`~file_d_spark.introspect.PipelineInspector.prometheus`
     render;
-  * ``DEBUG_LOG``, the ring the debug action writes its samples to.
+  * :func:`debug_log`, the logger the debug action writes its samples
+    to.
 """
 
 from __future__ import annotations
@@ -25,15 +26,12 @@ from typing import Any
 from pyspark.sql.streaming import StreamingQueryListener
 
 
-#: ring of (message, event) samples written by the debug action —
-#: the analogue of the reference's zap-sampled stderr log
-DEBUG_LOG: collections.deque = collections.deque(maxlen=1000)
-
 _log = __import__("logging").getLogger("file_d_spark.debug")
 
 
 def debug_log(message: str, event: dict) -> None:
-    DEBUG_LOG.append({"message": message, "event": event})
+    """One sampled event of the debug action, logged like the
+    reference's zap-sampled stderr line."""
     _log.info("%s: %s", message, json.dumps(event, default=str))
 
 

@@ -815,7 +815,7 @@ def q_cardinality(spark, sf_dir):
       GROUP BY b.user_id, floor(epoch(b.ts))::BIGINT // 86400
       HAVING count(*) > 5
          AND floor(epoch(e.ts))::BIGINT // 86400
-             = floor(epoch(b.ts))::BIGINT // 86400)
+             IS NOT DISTINCT FROM floor(epoch(b.ts))::BIGINT // 86400)
     """,
 )
 def q_antispam(spark, sf_dir):

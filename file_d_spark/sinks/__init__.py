@@ -1,17 +1,20 @@
 """Sink builders (SURVEY.md §2.6).
 
-Batch writers return immediately; streaming writers return a
-StreamingQuery.  Typed sinks (clickhouse/postgres) declare a target
-StructType and coerce with cast/try_cast mirroring the reference's
-strict/non-strict modes
-(/root/reference/plugin/output/clickhouse/clickhouse.go:240-252).
-Network sinks (ES/Loki/GELF/Splunk/HTTP) are foreachBatch writers; the
-HTTP transport itself is stubbed behind a callable so tests inject a
-collector — the container has no live endpoints.
+There is one output path: :func:`build_sink` writes a batch with the
+output's coercion, ``retry`` and nested ``deadqueue`` output.  A
+stream writes file/kafka/stdout/devnull with Spark's own streaming
+sinks and every other output through ``foreachBatch``, which hands
+each micro-batch to :func:`build_sink`.  Typed sinks
+(clickhouse/postgres) declare a target StructType and coerce with
+cast/try_cast mirroring the reference's strict/non-strict modes
+(reference plugin/output/clickhouse/clickhouse.go:240-252).  The
+network sinks' HTTP transport is a callable, so tests inject a
+collector in place of a live endpoint.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 from typing import Any, Callable
@@ -1082,6 +1085,10 @@ def sink_s3(df: DataFrame, cfg: dict[str, Any]):
         df.unpersist()
 
 
+#: outputs a stream writes with Spark's own streaming sink
+_NATIVE_STREAM_SINKS = ("file", "kafka", "stdout", "devnull")
+
+
 SINKS: dict[str, Callable[[DataFrame, dict[str, Any]], Any]] = {
     "file": sink_file,
     "s3": sink_s3,
@@ -1104,15 +1111,18 @@ def build_stream_sink(
     checkpoint_dir: str | None = None,
     trigger_available_now: bool = True,
 ):
-    """Streaming sink: built-in writers for file/kafka/console/noop;
-    everything else through foreachBatch reusing the batch writers.
-    Returns the started StreamingQuery."""
-    cfg = dict(plan.output)
-    typ = cfg.pop("type", "devnull")
-    schema_ddl = cfg.get("schema")
-    if schema_ddl:
-        schema = T.StructType.fromDDL(schema_ddl)
-        df = coerce_to_schema(df, schema, strict=bool(cfg.get("strict_fields", False) or cfg.get("strict", False)))
+    """Streaming sink: Spark's own writers for file/kafka/stdout/devnull;
+    every other output writes each micro-batch through :func:`build_sink`,
+    so a stream gets the batch path's coercion, retries and nested
+    ``deadqueue`` output.  Returns the started StreamingQuery."""
+    cfg = plan.output
+    typ = cfg.get("type", "devnull")
+    if typ in _NATIVE_STREAM_SINKS:
+        df = _coerce(df, typ, cfg)
+        if typ == "kafka":
+            df = kafka_sink_frame(df, cfg)
+    elif typ not in SINKS:
+        raise ValueError(f"unsupported streaming output type: {typ!r}")
 
     writer = df.writeStream.outputMode(cfg.get("output_mode", "append"))
     if checkpoint_dir:
@@ -1123,57 +1133,30 @@ def build_stream_sink(
         writer = writer.trigger(processingTime=cfg["processing_time"])
 
     if typ == "file":
-        fmt = cfg.get("format", "json")
-        return writer.format(fmt).option("path", cfg.get("path") or cfg.get("target_file")).start()
-    if typ == "kafka":
-        framed = kafka_sink_frame(df, cfg)
-        w = framed.writeStream.outputMode(cfg.get("output_mode", "append"))
-        if checkpoint_dir:
-            w = w.option("checkpointLocation", checkpoint_dir)
-        if trigger_available_now:
-            w = w.trigger(availableNow=True)
-        w = w.format("kafka")
-        for k, v in kafka_sink_options(cfg).items():
-            w = w.option(k, v)
-        return w.start()
-    if typ == "stdout":
-        return writer.format("console").start()
-    if typ == "devnull":
-        return writer.format("noop").start()
-    if typ in SINKS:
-        # reuse the batch writer per micro-batch (ES/Loki/... sinks);
-        # a failing batch lands in the dead queue instead of poisoning
-        # the stream (reference: router dead queue + retries —
-        # /root/reference/pipeline/router.go:29-33, fd/file.d.go:260-290)
-        batch_writer = SINKS[typ]
-        dead_queue_dir = cfg.get("dead_queue")
-        retries = int(cfg.get("retry", 1))
-
-        def for_each(batch_df: DataFrame, epoch_id: int):
-            batch_df = batch_df.persist()
-            try:
-                last_err = None
-                for _ in range(max(retries, 1)):
-                    try:
-                        batch_writer(batch_df, cfg)
-                        return
-                    except Exception as e:  # noqa: BLE001
-                        last_err = e
-                if dead_queue_dir:
-                    (
-                        batch_df.write.mode("append")
-                        .json(f"{dead_queue_dir}/epoch={epoch_id}")
-                    )
-                else:
-                    raise last_err
-            finally:
-                batch_df.unpersist()
-
-        return writer.foreachBatch(for_each).start()
-    raise ValueError(f"unsupported streaming output type: {typ!r}")
+        writer = writer.format(cfg.get("format", "json")).option(
+            "path", cfg.get("path") or cfg.get("target_file")
+        )
+    elif typ == "kafka":
+        writer = writer.format("kafka").options(**kafka_sink_options(cfg))
+    elif typ == "stdout":
+        writer = writer.format("console")
+    elif typ == "devnull":
+        writer = writer.format("noop")
+    else:
+        deadqueue = cfg.get("deadqueue")
+        if deadqueue and deadqueue.get("type") == "file":
+            # every failing micro-batch adds to a file deadqueue
+            # instead of overwriting the previous one
+            cfg = {**cfg, "deadqueue": {"mode": "append", **deadqueue}}
+        batch_plan = dataclasses.replace(plan, output=cfg)
+        writer = writer.foreachBatch(
+            lambda batch_df, _epoch_id: build_sink(batch_df, batch_plan)
+        )
+    return writer.start()
 
 
-def _write_one(df: DataFrame, typ: str, cfg: dict[str, Any]) -> Any:
+def _coerce(df: DataFrame, typ: str, cfg: dict[str, Any]) -> DataFrame:
+    """Cast the events to the output's declared column types."""
     if typ == "clickhouse" and cfg.get("columns"):
         # native CH column types (Enum/IPv4-6/DateTime64/...) —
         # clickhouse.go:213-252 strict_types semantics
@@ -1186,7 +1169,11 @@ def _write_one(df: DataFrame, typ: str, cfg: dict[str, Any]) -> Any:
     if schema_ddl:
         schema = T.StructType.fromDDL(schema_ddl)
         df = coerce_to_schema(df, schema, strict=bool(cfg.get("strict_fields", False) or cfg.get("strict", False)))
-    return SINKS[typ](df, cfg)
+    return df
+
+
+def _write_one(df: DataFrame, typ: str, cfg: dict[str, Any]) -> Any:
+    return SINKS[typ](_coerce(df, typ, cfg), cfg)
 
 
 def build_sink(df: DataFrame, plan) -> Any:

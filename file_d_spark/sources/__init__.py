@@ -41,7 +41,11 @@ def _decode_lines(
 ) -> DataFrame:
     """Apply the pipeline's decoder to raw text lines, producing the
     event columns + source metadata (reference: pipeline.In,
-    /root/reference/pipeline/pipeline.go:488-543)."""
+    pipeline/pipeline.go:488-543).  The
+    ``max_event_size`` guard drops or cuts each raw line first."""
+    from file_d_spark.engine import apply_input_guards
+
+    df = apply_input_guards(df, plan, line_col)
     decoder = get_decoder(plan.settings.decoder)
     params = dict(plan.settings.decoder_params or {})
     params.setdefault("schema", plan.settings.extra.get("schema"))
@@ -62,19 +66,10 @@ def _decode_lines(
             out_cols.append(col.alias("event"))
         else:
             out_cols.append(col.alias(name))
+    cut_flag = plan.settings.cut_off_event_by_limit_field
+    if cut_flag in df.columns:
+        out_cols.append(F.col(cut_flag))
     return df.select(*out_cols)
-
-
-def _duration_ms(v, default_ms: int) -> int:
-    if v is None:
-        return default_ms
-    import re as _re
-
-    m = _re.fullmatch(r"([\d.]+)\s*([a-z]*)", str(v).strip())
-    if not m:
-        return default_ms
-    units = {"ms": 1, "s": 1000, "m": 60000, "h": 3600000}
-    return int(float(m.group(1)) * units.get(m.group(2) or "s", 1000))
 
 
 def kafka_source_options(
@@ -92,6 +87,11 @@ def kafka_source_options(
     pipeline/event.go:246-290) maps onto maxOffsetsPerTrigger when
     streaming — per-trigger admission is Spark's backpressure; an
     explicit ``max_offsets_per_trigger`` in cfg wins."""
+    from file_d_spark.xtime import parse_duration_s
+
+    def _ms(duration) -> str:
+        return str(round(parse_duration_s(duration) * 1000))
+
     brokers = cfg.get("brokers", "localhost:9092")
     if isinstance(brokers, (list, tuple)):
         brokers = ",".join(brokers)
@@ -107,15 +107,9 @@ def kafka_source_options(
         "includeHeaders": "true",
         "kafka.fetch.max.bytes": str(int(cfg.get("fetch_max_bytes", 52428800))),
         "kafka.fetch.min.bytes": str(int(cfg.get("fetch_min_bytes", 1))),
-        "kafka.fetch.max.wait.ms": str(
-            _duration_ms(cfg.get("consumer_max_wait_time"), 250)
-        ),
-        "kafka.session.timeout.ms": str(
-            _duration_ms(cfg.get("session_timeout"), 10000)
-        ),
-        "kafka.heartbeat.interval.ms": str(
-            _duration_ms(cfg.get("heartbeat_interval"), 3000)
-        ),
+        "kafka.fetch.max.wait.ms": _ms(cfg.get("consumer_max_wait_time", "250ms")),
+        "kafka.session.timeout.ms": _ms(cfg.get("session_timeout", "10s")),
+        "kafka.heartbeat.interval.ms": _ms(cfg.get("heartbeat_interval", "3s")),
     }
     from file_d_spark.kafka_security import kafka_security_options
 
@@ -338,7 +332,7 @@ def _build_source_inner(
                 )
         decoder_name = plan.settings.decoder
         schema = (plan.settings.decoder_params or {}).get("schema") or plan.settings.extra.get("schema")
-        if decoder_name == "json" and schema:
+        if decoder_name == "json" and schema and not plan.settings.max_event_size:
             # native JSON datasource: decodes in the scan itself —
             # measurably faster than text + from_json (no intermediate
             # row), and Catalyst prunes unreferenced fields

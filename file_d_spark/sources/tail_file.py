@@ -33,15 +33,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-try:  # executors may not have the repo on sys.path
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
-
 
 class _TailPartition(InputPartition):
     def __init__(self, path: str, start: int, end: int):

@@ -50,18 +50,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# The stateful fns run in executor Python workers, which may not have
-# this repo on sys.path (the driver may run from any cwd).  Pickling
-# this module by value makes the closures self-contained.
-try:  # pragma: no cover
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:
-    pass
-
 
 def _concat_frames(frames: Iterator[pd.DataFrame]) -> pd.DataFrame:
     parts = [p for p in frames if len(p)]

@@ -239,3 +239,18 @@ def test_settings_level_antispam(spark):
     # disabled default: everything passes
     p3 = Pipeline.from_dict({"settings": {}, "actions": []})
     assert p3.apply(df).count() == 10
+
+
+def test_antispam_bans_null_time_events(spark):
+    """Events whose time parses to NULL (zone-less strings under the
+    default rfc3339 format) count in one window of their source, so a
+    source over the threshold is banned like any other."""
+    df = spark.createDataFrame(
+        [("spammy", f"2024-01-01T00:00:0{i}") for i in range(5)]
+        + [("quiet", "2024-01-01T00:00:00")],
+        "source_name string, ts string",
+    )
+    p = Pipeline.from_dict(
+        {"actions": [{"type": "antispam", "threshold": 3, "maintenance_interval": "1m"}]}
+    )
+    assert [r.source_name for r in p.apply(df).collect()] == ["quiet"]

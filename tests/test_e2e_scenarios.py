@@ -4,6 +4,8 @@ one pipeline, golden counts."""
 
 import json
 
+import pytest
+
 from file_d_spark import Pipeline
 
 
@@ -794,12 +796,15 @@ def _ch_backend(base_dir, tables):
     return transport
 
 
-def test_file_clickhouse_deadqueue(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["batch", "stream"])
+def test_file_clickhouse_deadqueue(spark, tmp_path, mode):
     """Replays e2e/file_clickhouse: samples flow file -> 4 set_time
     actions -> clickhouse output whose table DOESN'T exist (retry: 0);
     the nested deadqueue clickhouse output (existing table, full
     native type column set) must receive every sample, typed
-    (clickhouse_file.go:36-180 Validate)."""
+    (clickhouse_file.go:36-180 Validate).  A stream writes each
+    micro-batch through the same output path as ``run_batch`` +
+    ``write``."""
     import glob as _glob
 
     from file_d_spark import Pipeline
@@ -917,8 +922,12 @@ def test_file_clickhouse_deadqueue(spark, tmp_path):
             },
         }
     )
-    df = p.run_batch(spark).coalesce(1)
-    p.write(df)
+    if mode == "batch":
+        p.write(p.run_batch(spark).coalesce(1))
+    else:
+        q = p.run_stream(spark, checkpoint_dir=str(tmp_path / "ck"))
+        q.awaitTermination(120)
+        assert q.exception() is None
 
     # nothing landed in the missing table, everything in the deadqueue
     assert not _glob.glob(f"{ch_dir}/test_table_insert_not_exists/*")

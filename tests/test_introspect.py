@@ -3,6 +3,8 @@
 zap-sampler semantics (debug.go:46,83)."""
 
 import datetime as dt
+import json
+import logging
 
 from file_d_spark import Pipeline
 from file_d_spark.introspect import PipelineInspector
@@ -124,10 +126,8 @@ def test_inspector_runs_settings_level_antispam(spark):
     assert insp.ban_list() == [{"action": 0, "source": "spammy"}]
 
 
-def test_debug_sampling_first_thereafter(spark):
-    from file_d_spark.metrics import DEBUG_LOG
-
-    DEBUG_LOG.clear()
+def test_debug_sampling_first_thereafter(spark, caplog):
+    caplog.set_level(logging.INFO, logger="file_d_spark.debug")
     df = spark.createDataFrame([(i,) for i in range(20)], "n int")
     p = Pipeline.from_dict(
         {
@@ -145,7 +145,11 @@ def test_debug_sampling_first_thereafter(spark):
     )
     out = p.apply(df)
     assert out.count() == 20  # passthrough
-    logged = sorted(e["event"]["n"] for e in DEBUG_LOG if e["message"] == "probe")
+    logged = sorted(
+        json.loads(r.getMessage().split(": ", 1)[1])["n"]
+        for r in caplog.records
+        if r.name == "file_d_spark.debug" and r.getMessage().startswith("probe: ")
+    )
     # first 3 (n=0,1,2 -> rn 1..3), then every 5th after: rn 8, 13, 18
     assert logged == [0, 1, 2, 7, 12, 17]
 

@@ -65,14 +65,17 @@ def test_template_mixed_chunks(chunks):
 
 
 def test_duration_parsing():
-    from file_d_spark.actions.throttle import _parse_duration_seconds
+    import pytest
 
-    assert _parse_duration_seconds("1m", 0) == 60
-    assert _parse_duration_seconds("1.5h", 0) == 5400
-    assert _parse_duration_seconds("250ms", 0) == 0.25
-    assert _parse_duration_seconds(30, 0) == 30
-    assert _parse_duration_seconds(None, 42) == 42
-    assert _parse_duration_seconds("junk-", 7) == 7
+    from file_d_spark.xtime import parse_duration_s
+
+    assert parse_duration_s("1m") == 60
+    assert parse_duration_s("1.5h") == 5400
+    assert parse_duration_s("250ms") == 0.25
+    assert parse_duration_s("1m30s") == 90
+    assert parse_duration_s(30) == 30
+    with pytest.raises(ValueError):
+        parse_duration_s("junk-")
 
 
 @given(

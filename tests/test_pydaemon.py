@@ -98,13 +98,19 @@ def test_daemon_import_loads_no_engine():
 
 def test_workers_run_the_daemon_from_any_cwd(tmp_path):
     """The driver puts the repo on sys.path itself; workers find the
-    daemon only through spark.executorEnv.PYTHONPATH."""
+    daemon, and every library module a Python UDF, mapInPandas or state
+    function calls, only through spark.executorEnv.PYTHONPATH (no
+    module is pickled by value)."""
     script = textwrap.dedent(
         f"""
-        import sys
+        import json, os, sys, time
         sys.path.insert(0, {REPO!r})
         import pandas as pd
-        from file_d_spark import get_spark
+        from pyspark.sql import functions as F
+        from file_d_spark import Pipeline, get_spark
+        from file_d_spark.functions import multimodal
+        from file_d_spark.functions.normalize import normalize_tokens
+        from tests.test_protobuf_golden import INPUT, PROTO
 
         def which_main(frames):
             main = sys.modules["__main__"].__spec__.name
@@ -119,6 +125,56 @@ def test_workers_run_the_daemon_from_any_cwd(tmp_path):
         )
         assert sum(r.n for r in rows) == 40, rows
         assert {{r.main for r in rows}} == {{"file_d_spark.pydaemon"}}, rows
+
+        # pandas UDFs of functions/normalize.py: byte tokenizer + scanner
+        msg = spark.createDataFrame([("GET 'x' id=42",)], "msg string")
+        got = msg.select(normalize_tokens(
+            F.col("msg"), "all", [{{"placeholder": "<id>", "re": "id=[0-9]+"}}]
+        ).alias("n")).first().n
+        assert got == "GET <single_quoted> <id>", got
+
+        # mapInPandas of functions/multimodal.py
+        media = spark.createDataFrame(
+            [(1, "image", bytearray(multimodal.build_png(10, 20)))],
+            "media_id long, kind string, blob binary",
+        )
+        got = multimodal.extract_media_metadata(media).first()
+        assert (got.kind, got.width, got.height) == ("png", 10, 20), got
+
+        # the pure-Python protobuf decoder (protowire.py)
+        pb = spark.createDataFrame([(INPUT,)], "log binary")
+        got = Pipeline.from_dict({{"actions": [{{
+            "type": "decode", "field": "log", "decoder": "protobuf",
+            "params": {{"proto_file": PROTO, "proto_message": "MyMessage"}},
+        }}]}}).apply(pb).first()
+        assert got.data.string_data == "my_string", got
+
+        # the join state function (streaming/stateful.py), over a file
+        # stream and over a tail stream (sources/tail_file.py); the
+        # state timeout keeps the stream busy, so poll for the output
+        os.makedirs("logs")
+        with open("logs/app.log", "w") as fh:
+            for seq, line in enumerate(["start a", " more", "start b"]):
+                fh.write(json.dumps({{"sid": "s", "seq": seq, "log": line}}) + "\\n")
+        for tail in (False, True):
+            p = Pipeline.from_dict({{
+                "settings": {{"decoder": "json", "decoder_params":
+                             {{"schema": "sid string, seq long, log string"}}}},
+                "input": {{"type": "file", "path": "logs", "tail": tail}},
+                "actions": [{{"type": "join", "field": "log", "start": "^start",
+                             "continue": "^ ", "source_field": "sid",
+                             "seq_field": "seq"}}],
+            }})
+            name = f"joined_{{int(tail)}}"
+            q = (p.apply(p.read_stream(spark)).writeStream.format("memory")
+                 .queryName(name).start())
+            deadline = time.time() + 120
+            while not spark.table(name).count() and time.time() < deadline:
+                assert q.exception() is None, q.exception()
+                time.sleep(0.5)
+            q.stop()
+            got = [r.log for r in spark.table(name).collect()]
+            assert got == ["start a more"], (tail, got)
         spark.stop()
         print("OK")
         """

@@ -277,8 +277,9 @@ def test_parse_duration_s():
     assert parse_duration_s("2.5") == 2.5
     import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        parse_duration_s("soon")
+    for typo in ("soon", "junk-", "5 min"):
+        with _pytest.raises(ValueError):
+            parse_duration_s(typo)
 
 
 def test_sink_file_retention_prunes_old_partitions(spark, tmp_path):

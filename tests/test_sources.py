@@ -189,3 +189,31 @@ def test_k8s_label_filtering(spark, tmp_path):
     assert "k8s_node_label_zone" in c2
     c3 = cols({"allowed_node_labels": []})
     assert "k8s_node_label_zone" not in c3
+
+
+def test_max_event_size_guards_the_raw_line(spark, tmp_path):
+    """settings.max_event_size applies to each raw input line before
+    decoding (pipeline.go:553-580): an oversized line is dropped, or
+    with cut_off_event_by_limit cut to the limit and flagged."""
+    from file_d_spark import Pipeline
+
+    logdir = tmp_path / "logs"
+    logdir.mkdir()
+    short, long = json.dumps({"m": "ok"}), json.dumps({"m": "x" * 40})
+    (logdir / "a.log").write_text(f"{short}\n{long}\n")
+
+    def run(settings):
+        return Pipeline.from_dict({
+            "settings": settings,
+            "input": {"type": "file", "path": str(logdir)},
+        }).run_batch(spark).collect()
+
+    dropped = run({"decoder": "json", "decoder_params": {"schema": "m string"},
+                   "max_event_size": 20})
+    assert [r.m for r in dropped] == ["ok"]
+
+    cut = run({"decoder": "raw", "max_event_size": 20,
+               "cut_off_event_by_limit": True,
+               "cut_off_event_by_limit_field": "was_cut"})
+    got = sorted((r.message, r.was_cut) for r in cut)
+    assert got == sorted([(short, False), (long[:20], True)])

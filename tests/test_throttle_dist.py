@@ -500,3 +500,22 @@ def test_type_unorderable_is_a_whitelist():
             ]
         )
     )
+
+
+def test_throttle_compound_bucket_interval(spark):
+    """``bucket_interval`` is a Go duration: ``1m30s`` is one 90 s
+    bucket (4 events over a limit of 2), not the 60 s default (two
+    buckets of 2)."""
+    rows = [("svc", f"2024-01-01T00:{s // 60:02d}:{s % 60:02d}Z", s) for s in (0, 30, 60, 89)]
+    df = spark.createDataFrame(rows, "k string, time string, n long")
+
+    def kept(interval):
+        p = Pipeline.from_dict({"actions": [{
+            "type": "throttle", "throttle_field": "k", "time_field": "time",
+            "time_field_format": "rfc3339", "bucket_interval": interval,
+            "buckets_count": 100000, "default_limit": 2, "order_fields": ["n"],
+        }]})
+        return sorted(r.n for r in p.apply(df).collect())
+
+    assert kept("1m30s") == kept("90s") == [0, 30]
+    assert kept("1m") == [0, 30, 60, 89]
