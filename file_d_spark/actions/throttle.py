@@ -1,12 +1,18 @@
-"""Batch-mode analogues of the stateful shedding operators: throttle,
-cardinality, antispam.  (Streaming versions with true cross-batch
-state live in file_d_spark/streaming/stateful.py.)
+"""The stateful shedding actions: throttle, cardinality, antispam.
 
 Reference cites:
   throttle     /root/reference/plugin/action/throttle/throttle.go:60-140,512
                buckets ring /root/reference/plugin/action/throttle/buckets.go:7-33
   cardinality  /root/reference/plugin/action/cardinality/cardinality.go:126-169,259
   antispam     /root/reference/pipeline/antispam/antispammer.go:24-120
+
+Each action builds its helper columns (``__fd_*``: key, gate, rule,
+per-event count, threshold, ...) in ONE ``withColumns`` over the input,
+then branches on ``df.isStreaming``: a batch frame runs the plans
+below, a stream hands the same columns to its keyed state function in
+file_d_spark/streaming/stateful.py.  Both modes read one definition of
+the gate, the key and the per-event rule, so a do_if gate, throttle
+rules and antispam rules and exceptions run the same way in both.
 
 Batch semantics:
   throttle     events are bucketed into tumbling windows of
@@ -15,7 +21,8 @@ Batch semantics:
                dropped.  Events outside the ``buckets_count`` ring
                (vs the newest timestamp, the batch analogue of the
                wall clock) are CLAMPED into the latest bucket and
-               counted there (buckets.go:231-235 rebuildBuckets).
+               counted there (buckets.go:231-235 rebuildBuckets);
+               events without a parseable time share one NULL bucket.
                Implemented with a single window — one shuffle on
                (key, bucket), which AQE splits if a key is skewed;
                limit_distribution configs switch to an exact
@@ -31,6 +38,7 @@ Batch semantics:
   antispam     per-(source, maintenance-window) counts; sources over
                ``threshold`` have their events dropped (exceptions by
                prefix/contains/suffix rules pass).
+The streams count event by event; stateful.py names where that differs.
 """
 
 from __future__ import annotations
@@ -105,11 +113,10 @@ def _type_unorderable(dt) -> bool:
     return not isinstance(dt, (T.AtomicType, T.NullType))
 
 
-def _didx_expr(specs: list[dict], schema) -> Column:
+def _didx_expr(specs: list[dict], schema, rule: Column) -> Column:
     """Per-row distribution index: 0 = the matched rule's default
     group, j+1 = its ratios[j] (idxByKey semantics), -1 for rules
-    without a distribution — ONE definition shared by the batch fold
-    and the streaming state path so the two cannot desynchronize."""
+    without a distribution."""
     didx = F.lit(-1)
     for i, s in enumerate(specs):
         d = s["dist"]
@@ -123,23 +130,26 @@ def _didx_expr(specs: list[dict], schema) -> Column:
             idx_expr = F.when(
                 field_val.isin([str(v) for v in r["values"]]), F.lit(j + 1)
             ).otherwise(idx_expr)
-        didx = F.when(F.col("__fd_rule__") == i, idx_expr).otherwise(didx)
+        didx = F.when(rule == i, idx_expr).otherwise(didx)
     return didx
 
 
-def _counted_expr(specs: list[dict], schema) -> Column:
+def _counted_expr(specs: list[dict], schema, rule: Column) -> Column:
     """Per-row counted value: 1 for count-kind rules (and size-kind ones
     with no size field), the byte length of the rule's size field for
-    size-kind ones — shared by every admission path."""
+    size-kind ones — 0 where that field is NULL or absent."""
     counted = F.lit(1)
     for i, s in enumerate(specs):
         if s["kind"] == "size" and s["size_field"]:
-            size_col = F.octet_length(
-                get_col_safe(parse_selector(s["size_field"]), schema).cast("string")
+            size_col = F.coalesce(
+                F.octet_length(
+                    get_col_safe(parse_selector(s["size_field"]), schema).cast(
+                        "string"
+                    )
+                ),
+                F.lit(0),
             )
-            counted = F.when(
-                F.col("__fd_rule__") == i, size_col
-            ).otherwise(counted)
+            counted = F.when(rule == i, size_col).otherwise(counted)
     return counted
 
 
@@ -252,27 +262,13 @@ def _check_limiter_backend(backend) -> None:
         )
 
 
-def _require_ungated_stream(pred: Column | None, name: str) -> None:
-    """Streaming statefuls run through applyInPandasWithState keyed on
-    the op's own key — a do_if gate would need a second keyed state
-    path.  Match the shape-changing actions' behavior: refuse loudly
-    rather than silently treating the gate as unconditional
-    (/root/reference/pipeline/processor.go:190-243 gates every plugin)."""
-    if pred is not None:
-        raise ValueError(
-            f"action {name!r}: do_if/match_fields gating is not supported "
-            "in streaming mode; gate the stream with a discard action or "
-            "split the pipeline instead"
-        )
-
-
 @register("throttle")
 class Throttle(Action):
     def apply_impl(self, df: DataFrame, pred: Column | None) -> DataFrame:
         _check_limiter_backend(self.params.get("limiter_backend"))
         specs, rule_idx, ts = self._rules(df)
-        if df.isStreaming:
-            return self._apply_stream(df, pred, specs, rule_idx, ts)
+        if df.isStreaming and all(s["limit"] < 0 for s in specs):
+            return df  # negative limit = unlimited (throttle_test.go:153-181)
         key_field = self.params.get("throttle_field", "")
         bucket_s = xtime.parse_duration_s(self.params.get("bucket_interval", 60))
         buckets_count = int(self.params.get("buckets_count", 60))
@@ -285,23 +281,37 @@ class Throttle(Action):
         # micros-based buckets so sub-second intervals (100ms in the
         # reference tests) don't truncate to a zero-width bucket
         bucket_us = max(1, int(bucket_s * 1e6))
-        bucket = F.floor(F.unix_micros(ts) / F.lit(bucket_us))
         # rows failing the gate bypass the action entirely: always kept,
         # never counted against any limit (processor.go:190-243 semantics)
         match = F.lit(True) if pred is None else pred
-        # one projection hop for all five helper columns: the helpers
-        # derive only from pre-existing event columns, so the batched
-        # withColumns is equivalent to the chained form (r13 — each
-        # chained withColumn was a fresh DataFrame + py4j round trips)
-        df = df.withColumns(
-            {
-                "__fd_key__": key,
-                "__fd_bucket__": bucket,
-                "__fd_ts__": ts,
-                "__fd_m__": match,
-                "__fd_rule__": rule_idx,
-            }
-        )
+        # one projection hop for every helper column, read by the batch
+        # plan below and by the stream's state function alike
+        helpers = {
+            "__fd_key__": key,
+            "__fd_bucket__": F.floor(F.unix_micros(ts) / F.lit(bucket_us)),
+            "__fd_ts__": ts,
+            "__fd_m__": match,
+            "__fd_rule__": rule_idx,
+            "__fd_cnt__": _counted_expr(specs, df.schema, rule_idx),
+            "__fd_didx__": _didx_expr(specs, df.schema, rule_idx),
+        }
+        df = df.withColumns(helpers)
+        if df.isStreaming:
+            from file_d_spark.streaming import throttle_stream
+
+            return throttle_stream(
+                df,
+                buckets_count=buckets_count,
+                limiter_expiration_ms=int(
+                    xtime.parse_duration_s(
+                        self.params.get("limiter_expiration", 1800)
+                    )
+                    * 1000
+                ),
+                rule_cfgs=[
+                    {"limit": s["limit"], "dlims": _rule_dlims(s)} for s in specs
+                ],
+            )
         # bucket-ring clamp (buckets.go:231-235 rebuildBuckets: "events
         # from past or future goes to the latest bucket" — they are
         # counted there, NOT dropped).  The batch analogue of the wall
@@ -322,10 +332,6 @@ class Throttle(Action):
             ).otherwise(F.col("__fd_bucket__")),
         )
 
-        helper_cols = [
-            "__fd_key__", "__fd_bucket__", "__fd_ts__",
-            "__fd_m__", "__fd_hmax__", "__fd_rule__",
-        ]
         order_fields = list(self.params.get("order_fields", []))
         if any(_rule_dlims(s) is not None for s in specs):
             # distributions have sequential semantics — a default-group
@@ -334,12 +340,9 @@ class Throttle(Action):
             # getDistrData) — which no window expression can replay.
             # Exact replay per (key, bucket, rule) group; parallelism
             # across groups, faithful sequential replay within one.
-            return self._admit_exact(df, specs, order_fields, helper_cols)
+            return self._admit_exact(df, specs, order_fields)
 
-        # per-row (counted value, limit) from the matched rule — the
-        # counted value through the SAME shared projection the
-        # dist/stream paths use (one definition, no drift)
-        counted = _counted_expr(specs, df.schema)
+        # per-row limit from the matched rule
         limit_col = F.lit(specs[-1]["limit"])
         for i, spec in enumerate(specs):
             limit_col = F.when(
@@ -352,7 +355,7 @@ class Throttle(Action):
             "__fd_key__", "__fd_bucket__", "__fd_rule__"
         ).orderBy(F.col("__fd_ts__"), *[F.col(c) for c in order_fields])
         running = F.sum(
-            F.when(F.col("__fd_m__"), counted).otherwise(F.lit(0))
+            F.when(F.col("__fd_m__"), F.col("__fd_cnt__")).otherwise(F.lit(0))
         ).over(w.rowsBetween(Window.unboundedPreceding, 0))
         # a negative limit means unlimited (in_memory_limiter.go:66-69
         # returns true before touching the bucket ring)
@@ -362,7 +365,7 @@ class Throttle(Action):
             df.withColumn("__fd_keep__", ~F.col("__fd_m__") | admitted)
             .filter(F.col("__fd_keep__"))
         )
-        return out.drop("__fd_keep__", *helper_cols)
+        return out.drop("__fd_keep__", "__fd_hmax__", *helpers)
 
     def _rules(self, df: DataFrame):
         """What the batch and streaming paths share: the rule specs,
@@ -429,47 +432,7 @@ class Throttle(Action):
         )
         return specs, rule_idx, ts
 
-    def _apply_stream(self, df, pred, specs, rule_idx, ts):
-        """Streaming throttle with full rule parity: the same specs /
-        rule-index / counted-value / distribution-index columns as the
-        batch path feed the keyed state function, which owns one bucket
-        ring per (key, rule) and replays distribution stealing
-        sequentially (the reference's limiter lock scope)."""
-        _require_ungated_stream(pred, "throttle")
-        from file_d_spark.streaming import throttle_stream
-
-        limit = specs[-1]["limit"]
-        if len(specs) == 1 and limit < 0:
-            return df  # negative limit = unlimited (throttle_test.go:153-181)
-        staged = (
-            df.withColumn("__fd_rule__", rule_idx)
-            .withColumn("__fd_cnt__", _counted_expr(specs, df.schema))
-            .withColumn("__fd_didx__", _didx_expr(specs, df.schema))
-            .withColumn("__fd_ts__", ts)
-        )
-        return throttle_stream(
-            staged,
-            key_col=self.params.get("throttle_field", ""),
-            ts_col="__fd_ts__",
-            bucket_interval_s=int(
-                xtime.parse_duration_s(self.params.get("bucket_interval", 60))
-            ),
-            buckets_count=int(self.params.get("buckets_count", 60)),
-            limit=limit,
-            limiter_expiration_ms=int(
-                xtime.parse_duration_s(self.params.get("limiter_expiration", 1800))
-                * 1000
-            ),
-            rule_cfgs=[
-                {"limit": int(s["limit"]), "dlims": _rule_dlims(s)}
-                for s in specs
-            ],
-            rule_col="__fd_rule__",
-            cnt_col="__fd_cnt__",
-            didx_col="__fd_didx__",
-        )
-
-    def _admit_exact(self, df, specs, order_fields, helper_cols):
+    def _admit_exact(self, df, specs, order_fields):
         """Exact distribution replay: the sequential admission of
         in_memory_limiter.isAllowed per (key, bucket, rule) group,
         default-distribution stealing included (getDistrData),
@@ -486,15 +449,15 @@ class Throttle(Action):
         is (ts, *order_fields, didx, cnt) and then the payload, or
         collected order where the payload has no ordering
         (``_event_sort_sql``)."""
-        payload_cols = list(df.columns)
+        payload_cols = [c for c in df.columns if not c.startswith("__fd_")]
         ev = F.struct(
             F.col("__fd_ts__").alias("t"),
             *[
                 get_col_safe(parse_selector(str(c)), df.schema).alias(f"o{i}")
                 for i, c in enumerate(order_fields)
             ],
-            _didx_expr(specs, df.schema).cast("int").alias("d"),
-            _counted_expr(specs, df.schema).cast("bigint").alias("c"),
+            F.col("__fd_didx__").cast("int").alias("d"),
+            F.col("__fd_cnt__").cast("bigint").alias("c"),
             F.struct(*[F.col(c) for c in payload_cols]).alias("p"),
         )
         gated = df.filter(~F.col("__fd_m__")).select(*payload_cols)
@@ -522,7 +485,7 @@ class Throttle(Action):
             .select("__e__.p.*")
             .unionByName(gated)
         )
-        return out.drop(*helper_cols)
+        return out
 
 
 @register("cardinality")
@@ -547,48 +510,12 @@ class Cardinality(Action):
         limit = int(self.params.get("limit", 10000))
         mode = self.params.get("action", "nothing")
         order_fields = list(self.params.get("order_fields", []))
-        if df.isStreaming:
-            _require_ungated_stream(pred, "cardinality")
-            from file_d_spark.streaming import cardinality_stream
-
-            # config ttl (cardinality.go:29, default 1m) -> the state
-            # timeout that forgets an idle key's distinct set; batch
-            # runs have no time axis inside one frame, so ttl is a
-            # streaming-only knob
-            ttl_ms = int(
-                xtime.parse_duration_s(self.params.get("ttl", 60)) * 1000
-            )
-            # multi-key / multi-field parity with batch: composite
-            # helper columns (concat_ws over every configured key /
-            # field), dropped from the output by the state fn's
-            # helper-column exclusion
-            skey = F.concat_ws(
-                "\x01",
-                *[
-                    F.coalesce(
-                        get_col_safe(parse_selector(k), df.schema).cast(
-                            "string"
-                        ),
-                        F.lit(""),
-                    )
-                    for k in key_fields
-                ],
-            )
-            sval = F.concat_ws(
-                "\x01",
-                *[
-                    get_col_safe(parse_selector(f), df.schema).cast("string")
-                    for f in fields
-                ],
-            )
-            staged = df.withColumn("__fd_ck__", skey).withColumn(
-                "__fd_cv__", sval
-            )
-            return cardinality_stream(
-                staged, "__fd_ck__", "__fd_cv__", limit, mode,
-                ttl_ms=ttl_ms, strip_cols=list(fields),
-            )
-
+        if mode == "nothing":
+            return df
+        # one projection hop for the composite key and value and the
+        # gate, read by the batch plans below and by the stream's state
+        # function alike; gated rows bypass — excluded from the
+        # distinct count and never dropped / field-stripped
         key = F.concat_ws(
             "\x01",
             *[
@@ -606,17 +533,27 @@ class Cardinality(Action):
                 for f in fields
             ],
         )
-        if mode == "nothing":
-            return df
-        if order_fields:
-            return self._sequential(df, key, probe, limit, mode, order_fields, fields, pred)
-        # gate: non-matching rows bypass — excluded from the distinct
-        # count and never dropped / field-stripped
         match = F.lit(True) if pred is None else pred
-        tagged = df.withColumn("__fd_k__", key).withColumn("__fd_m__", match)
+        tagged = df.withColumns(
+            {"__fd_k__": key, "__fd_v__": probe, "__fd_m__": match}
+        )
+        if df.isStreaming:
+            from file_d_spark.streaming import cardinality_stream
+
+            # config ttl (cardinality.go:29, default 1m) -> the state
+            # timeout that forgets an idle key's distinct set; batch
+            # runs have no time axis inside one frame, so ttl is a
+            # streaming-only knob
+            ttl_ms = int(
+                xtime.parse_duration_s(self.params.get("ttl", 60)) * 1000
+            )
+            return cardinality_stream(
+                tagged, limit, mode, ttl_ms=ttl_ms, strip_cols=list(fields)
+            )
+        if order_fields:
+            return self._sequential(tagged, limit, mode, order_fields, fields, pred)
         per_key = (
             tagged.filter(F.col("__fd_m__"))
-            .withColumn("__fd_v__", probe)
             .groupBy("__fd_k__")
             .agg(F.countDistinct("__fd_v__").alias("__fd_card__"))
             # reference trigger is >= limit (cardinality.go:272)
@@ -624,10 +561,11 @@ class Cardinality(Action):
             .select("__fd_k__")
         )
         over_limit = F.broadcast(per_key.withColumn("__fd_over__", F.lit(True)))
+        helpers = ["__fd_k__", "__fd_v__", "__fd_m__", "__fd_over__"]
         if mode == "discard":
             flagged = tagged.join(over_limit, "__fd_k__", "left")
             out = flagged.filter(~F.col("__fd_m__") | F.col("__fd_over__").isNull())
-            return out.drop("__fd_k__", "__fd_m__", "__fd_over__")
+            return out.drop(*helpers)
         if mode == "remove_fields":
             flagged = tagged.join(over_limit, "__fd_k__", "left")
             for f in fields:
@@ -640,23 +578,17 @@ class Cardinality(Action):
                     parts,
                     F.when(~F.col("__fd_m__") | F.col("__fd_over__").isNull(), old),
                 )
-            return flagged.drop("__fd_k__", "__fd_m__", "__fd_over__")
-        return tagged.drop("__fd_k__", "__fd_m__")
+            return flagged.drop(*helpers)
+        return df
 
-    def _sequential(self, df, key, probe, limit, mode, order_fields, fields, pred):
+    def _sequential(self, tagged, limit, mode, order_fields, fields, pred):
         """Exact replay of cardinality.go Do in event order: an event
         is acted on iff its key accumulated ``limit`` distinct values
         strictly before it.  Two windows — first-occurrence flag per
         (key, value), then a cumulative distinct count per key — both
         shuffle on the key, which is the same partitioning the
         reference's per-key cache implies."""
-        match = F.lit(True) if pred is None else pred
         seq = [F.col(c) for c in order_fields]
-        tagged = (
-            df.withColumn("__fd_k__", key)
-            .withColumn("__fd_v__", probe)
-            .withColumn("__fd_m__", match)
-        )
         w_first = Window.partitionBy("__fd_k__", "__fd_v__").orderBy(*seq)
         # only gate-matching rows populate the cache
         first_seen = F.when(
@@ -728,64 +660,58 @@ class Antispam(Action):
         interval_s = xtime.parse_duration_s(self.params.get("maintenance_interval", 60))
         if threshold <= 0 and not rules:
             return df
-        if df.isStreaming:
-            _require_ungated_stream(pred, "antispam")
-            if rules or self.params.get("exceptions"):
-                raise NotImplementedError(
-                    "antispam rules/exceptions are batch-only; pre-filter "
-                    "the stream with discard+do_if for the same effect"
-                )
-            from file_d_spark.streaming import antispam_stream
-
-            return antispam_stream(
-                df, source_field, threshold, int(interval_s * 1000)
-            )
-
         src = get_col_safe(parse_selector(source_field), df.schema).cast("string")
-        tcol = get_col_safe(parse_selector(time_field), df.schema)
-
-        t = df.schema[time_field].dataType if time_field in df.columns else None
-        ts = xtime.ensure_timestamp(tcol, t, None, context="antispam time_field")
-        # a NULL time counts in one window of its source: a NULL join
-        # key never meets its own count
-        win = F.coalesce(
-            F.floor(F.unix_timestamp(ts) / F.lit(int(interval_s))),
-            F.lit(-(2**63)),
+        # pseudo-fields the reference's rule/exception checkers see
+        # (rules.go antispamData.Get): the serialized event stands in
+        # for the reference's raw event bytes; pruned by Catalyst when
+        # no rule references them
+        staged = df.withColumns(
+            {
+                "__as_event__": F.to_json(F.struct(*[F.col(c) for c in df.columns])),
+                "__as_src__": src,
+            }
         )
-
-        # serialized-event stand-in for the reference's raw event bytes
-        event_json = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-
-        # gate: non-matching rows bypass — not counted, never banned
-        match = F.lit(True) if pred is None else pred
-        tagged = (
-            df.withColumn("__fd_src__", src)
-            .withColumn("__fd_win__", win)
-            .withColumn("__fd_m__", match)
-            # pseudo-fields the reference's rule/exception checkers see
-            # (rules.go antispamData.Get); pruned by Catalyst when no
-            # rule references them
-            .withColumn("__as_event__", event_json)
-            .withColumn("__as_src__", src)
-        )
-
         if rules:
             # per-event threshold: first matching rule wins
             thr: Column = F.lit(int(threshold))
             for rule in reversed(rules):
-                p = self._rule_pred(rule.get("do_if"), tagged.schema)
+                p = self._rule_pred(rule.get("do_if"), staged.schema)
                 thr = F.when(p, F.lit(int(rule.get("threshold", 0)))).otherwise(thr)
             exc_pred = thr == F.lit(-1)  # unlimited: never counted or banned
             blocked = thr == F.lit(0)
         else:
-            exc_pred = self._exceptions_pred(tagged.schema)
+            exc_pred = self._exceptions_pred(staged.schema)
             blocked = F.lit(False)
             thr = F.lit(int(threshold))
-        tagged = (
-            tagged.withColumn("__fd_exc__", exc_pred)
-            .withColumn("__fd_blk__", blocked)
-            .withColumn("__fd_thr__", thr)
-            .drop("__as_event__", "__as_src__")
+        # one projection hop for the source key, the gate and the
+        # per-event exception, block and threshold, read by the batch
+        # plan below and by the stream's state function alike; gated
+        # rows bypass — not counted, never banned
+        tagged = staged.withColumns(
+            {
+                "__fd_src__": src,
+                "__fd_m__": F.lit(True) if pred is None else pred,
+                "__fd_exc__": exc_pred,
+                "__fd_blk__": blocked,
+                "__fd_thr__": thr,
+            }
+        ).drop("__as_event__", "__as_src__")
+        if df.isStreaming:
+            from file_d_spark.streaming import antispam_stream
+
+            return antispam_stream(tagged, threshold, int(interval_s * 1000))
+
+        tcol = get_col_safe(parse_selector(time_field), df.schema)
+        t = df.schema[time_field].dataType if time_field in df.columns else None
+        ts = xtime.ensure_timestamp(tcol, t, None, context="antispam time_field")
+        # a NULL time counts in one window of its source: a NULL join
+        # key never meets its own count
+        tagged = tagged.withColumn(
+            "__fd_win__",
+            F.coalesce(
+                F.floor(F.unix_timestamp(ts) / F.lit(int(interval_s))),
+                F.lit(-(2**63)),
+            ),
         )
 
         counts = (

@@ -5316,40 +5316,11 @@ def q_quantile_thresholds(spark, sf_dir):
 # drop test without losing the no-stale-pin property: once
 # CORRECTNESS_r14 lands, greens >= 14 release the slots exactly as
 # before.)
-_SWEEP_CHANGED_ROUND = 14
+_SWEEP_CHANGED_ROUND = 15
 _SWEEP_CHANGED = [
-    # r14 optimization round: plan-build rewrites shipping the SAME
-    # expression trees as SQL text (one py4j parse trip instead of one
-    # trip per Column/array element) — oracle hashes re-verified at
-    # sf0.01 (and sf0.1 for the restructured ones) this session.
-    "jl_project",  # whole projection as two selectExpr strings
-    "dedup_minhash_lsh",  # minhash a/b literal arrays in one trip
-    "dedup_incremental_fuzzy",  # shares minhash_signature
-    "fuzzy_decontaminate",  # shares minhash_signature
-    "token_stats_suite",  # leg padding as one selectExpr per leg
-    "sketch_suite",  # _suite_df padding as one selectExpr per leg
-    "bm25_suite",  # bm25_topk per-term expressions as SQL text
-    "convert_suite",  # _suite_df padding (shared helper)
-    "filter_suite",  # _suite_df padding (shared helper)
-    "ann_methods",  # lsh_topk signature + band fan-out as SQL text
-    "ann_index_build",  # shares the converted helpers
-    "hard_negatives",  # brute_force_topk projections as SQL text
-    "mmr_diversify",  # candidate pool comes from brute_force_topk
-    # r13-changed rows CORRECTNESS_r13 did not reach (its 50-row window
-    # landed elsewhere) — their r13 rewrites are still awaiting a
-    # driver row, so they keep head slots.  The r13 entries the driver
-    # DID re-green at r13 (throttle_modes, decoders, dedup_simhash,
-    # kmeans_clusters, bpe pair, budget_select, embedding_quantize,
-    # text_langid, quality_gopher, ann pair, bm25/token/sketch suites,
-    # jl_project, quantile_thresholds) are released.
-    "embedding_pq",  # r13: batched selectExpr plan build (same trees)
-    "dedup_cluster",  # r13: fused fast-path probe, checkpoint-free
-    "dedup_ngram_jaccard",  # r13: prefix frame materialized once
-    "dsir_importance",  # r13: union-tagged single-job feature fit
-    "dup_span_fraction",  # r13: gram projection ships as SQL text
-    "bucketed_enrich",  # r13: the two bucketed writes overlap
-    "text_quality",  # r13: stopword list literal
-    "corpus_build_end2end",  # r13: gopher_keep join-back + leg literals
+    "antispam_ban",  # r15: NULL-time events share one window per source
+    "throttle_modes",  # r15: one helper-column prelude for batch and stream
+    "cardinality_limit",  # r15: one helper-column prelude for batch and stream
 ]
 
 _SWEEP_WINDOW = 50  # rows the driver records per round (observed r2-r4)

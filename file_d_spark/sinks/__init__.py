@@ -4,7 +4,8 @@ There is one output path: :func:`build_sink` writes a batch with the
 output's coercion, ``retry`` and nested ``deadqueue`` output.  A
 stream writes file/kafka/stdout/devnull with Spark's own streaming
 sinks and every other output through ``foreachBatch``, which hands
-each micro-batch to :func:`build_sink`.  Typed sinks
+each micro-batch to :func:`build_sink`; a stream's ``s3`` output writes
+each micro-batch to a directory named after its batch id.  Typed sinks
 (clickhouse/postgres) declare a target StructType and coerce with
 cast/try_cast mirroring the reference's strict/non-strict modes
 (reference plugin/output/clickhouse/clickhouse.go:240-252).  The
@@ -1010,6 +1011,9 @@ def kafka_sink_frame(df: DataFrame, cfg: dict[str, Any]) -> DataFrame:
     return df.select(*out)
 
 
+_S3_PATH_TEMPLATE = "s3a://{bucket}/{prefix}"
+
+
 def sink_s3(df: DataFrame, cfg: dict[str, Any]):
     """S3 output with multi-bucket fan-out
     (/root/reference/plugin/output/s3/s3.go:28-90): events carrying
@@ -1033,7 +1037,7 @@ def sink_s3(df: DataFrame, cfg: dict[str, Any]):
         # plain s3a:// path config — same writer as the file sink
         sink_file(df, cfg)
         return
-    template = cfg.get("path_template", "s3a://{bucket}/{prefix}")
+    template = cfg.get("path_template", _S3_PATH_TEMPLATE)
     prefix = cfg.get("file_name", "logs")
     field = cfg.get("bucket_field_event")
     multi = [m["bucket"] if isinstance(m, dict) else m
@@ -1133,9 +1137,18 @@ def build_stream_sink(
         writer = writer.trigger(processingTime=cfg["processing_time"])
 
     if typ == "file":
+        for key in ("retention_interval", "compression_type"):
+            # Spark's file sink names its own part files and lists each
+            # one in _spark_metadata, which readers trust
+            if key in cfg:
+                raise ValueError(f"stream file output: {key!r} is batch-only")
         writer = writer.format(cfg.get("format", "json")).option(
             "path", cfg.get("path") or cfg.get("target_file")
         )
+        if cfg.get("compression"):
+            writer = writer.option("compression", cfg["compression"])
+        if cfg.get("partition_by"):
+            writer = writer.partitionBy(*cfg["partition_by"])
     elif typ == "kafka":
         writer = writer.format("kafka").options(**kafka_sink_options(cfg))
     elif typ == "stdout":
@@ -1148,11 +1161,28 @@ def build_stream_sink(
             # every failing micro-batch adds to a file deadqueue
             # instead of overwriting the previous one
             cfg = {**cfg, "deadqueue": {"mode": "append", **deadqueue}}
-        batch_plan = dataclasses.replace(plan, output=cfg)
-        writer = writer.foreachBatch(
-            lambda batch_df, _epoch_id: build_sink(batch_df, batch_plan)
-        )
+
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            out = _batch_dir(cfg, batch_id) if typ == "s3" else cfg
+            build_sink(batch_df, dataclasses.replace(plan, output=out))
+
+        writer = writer.foreachBatch(write_batch)
     return writer.start()
+
+
+def _batch_dir(cfg: dict[str, Any], batch_id: int) -> dict[str, Any]:
+    """A file-writing output's config for one micro-batch: its files
+    go to a directory named after the batch id, in overwrite mode, so
+    a micro-batch that runs again after a crash replaces only its own
+    files (Structured Streaming's idempotent-sink pattern)."""
+    out = {**cfg, "mode": "overwrite"}
+    if cfg.get("bucket"):
+        template = cfg.get("path_template", _S3_PATH_TEMPLATE)
+        out["path_template"] = f"{template}/{batch_id}"
+    else:
+        key = "target_file" if "target_file" in cfg else "path"
+        out[key] = f"{cfg[key]}/{batch_id}"
+    return out
 
 
 def _coerce(df: DataFrame, typ: str, cfg: dict[str, Any]) -> DataFrame:

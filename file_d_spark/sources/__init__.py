@@ -152,6 +152,17 @@ def decode_kafka_frame(df: DataFrame, plan: PipelinePlan) -> DataFrame:
     )
 
 
+def _reads_source_name(plan: PipelinePlan) -> bool:
+    """A file input's ``_source_name`` column is read by its meta
+    templates and by any action keyed on it — the settings-level
+    antispam keys on it unless ``source_name_meta_field`` is set."""
+    from file_d_spark.engine import Pipeline
+
+    return bool(plan.input.get("meta")) or any(
+        a.get("source_field") == "_source_name" for a in Pipeline(plan).actions()
+    )
+
+
 def build_source(spark: SparkSession, plan: PipelinePlan, streaming: bool = False) -> DataFrame:
     cfg = dict(plan.input)
     typ = cfg.pop("type", "fake")
@@ -347,11 +358,11 @@ def _build_source_inner(
                 .option("enablePartialResults", "false")
                 .load(paths)
             )
-            # materialize _source_name only when meta templates will
-            # read it: an always-on filename string costs ~25% of the
-            # decode throughput, and add_file_name falls back to
+            # materialize _source_name only when something reads it:
+            # an always-on filename string costs ~25% of the decode
+            # throughput, and add_file_name falls back to
             # input_file_name() on its own
-            if plan.input.get("meta"):
+            if _reads_source_name(plan):
                 df = df.withColumn("_source_name", F.input_file_name())
             return df
         df = (
@@ -361,8 +372,8 @@ def _build_source_inner(
             .load(paths)
         )
         # same throughput consideration as the json fast path: only
-        # carry the filename column when meta templates consume it
-        meta_cols = None if plan.input.get("meta") else []
+        # carry the filename column when something reads it
+        meta_cols = None if _reads_source_name(plan) else []
         return _decode_lines(df, plan, meta_cols=meta_cols)
     if typ == "kafka":
         view = cfg.get("frame_view")

@@ -9,13 +9,22 @@ across micro-batches, and per-key arrival order within a batch is
 restored by sorting on the sequence column (cross-batch order is the
 source's: file offsets / kafka offsets are monotone per key).
 
+Throttle, cardinality and antispam share one column prelude with their
+batch plans: the action (actions/throttle.py) builds its key, gate and
+per-event columns (``__fd_*``) in one projection, then either runs the
+batch plan over them or hands them to the state function here.  The
+state functions read those fixed column names, let a gated row pass
+uncounted as batch does, and drop every ``__fd_*`` column from their
+output (``_data_schema``).  Each function's docstring names where its
+rule differs from batch.
+
 Per-trigger cost: an operator with a processing-time timeout (join,
 antispam, and throttle / cardinality given an expiration) runs state
 partitions x 2 Python runner passes per micro-batch — the data pass,
 then the timeout pass, which runs even when no key timed out — and
 keeps running no-data batches to fire its timers; a NoTimeout operator
-runs the data pass only.  Each pass pays a fixed Python worker set-up on top of the state
-function (~0.04 s per task for the multiline join).  The worker daemon
+runs the data pass only.  Each pass pays a fixed Python worker set-up
+on top of the state function (~0.04 s per task for the multiline join).  The worker daemon
 ``file_d_spark.pydaemon``, wired by ``get_spark``, removes the largest
 part of that set-up: a 0.2-0.45 s re-read of pyspark.zip and the
 spark-core jar in every task.
@@ -231,6 +240,13 @@ def multiline_join_stream(
     )
 
 
+def _data_schema(df: DataFrame):
+    """The output columns and schema of a state function: the event
+    columns without the action's ``__fd_*`` helper columns."""
+    cols = [c for c in df.columns if not c.startswith("__fd_")]
+    return cols, df.select(*cols).schema
+
+
 # ---------------------------------------------------------------------------
 # throttle
 # ---------------------------------------------------------------------------
@@ -238,65 +254,49 @@ def multiline_join_stream(
 
 def throttle_stream(
     df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    bucket_interval_s: int,
     buckets_count: int,
-    limit: int,
-    limiter_expiration_ms: int = 30 * 60_000,
-    rule_cfgs: list[dict] | None = None,
-    rule_col: str | None = None,
-    cnt_col: str | None = None,
-    didx_col: str | None = None,
+    limiter_expiration_ms: int,
+    rule_cfgs: list[dict],
 ) -> DataFrame:
-    """Streaming throttle: per-(key, rule) sliding ring of
-    ``buckets_count`` buckets of ``bucket_interval_s``; admits events
-    while the bucket's counted total stays within the rule's limit;
-    events outside the ring are CLAMPED into the newest bucket and
-    counted there (buckets.go:231-235 rebuildBuckets — "events from
-    past or future goes to the latest bucket").  Idle keys drop their
-    rings after ``limiter_expiration_ms`` (throttle.go:129
-    LimiterExpiration default 30m + maintenance goroutine) — without
-    this the per-key state store grows unboundedly at 100 TB key
-    cardinalities.
+    """Streaming throttle over the throttle action's helper columns:
+    ``__fd_key__`` (the limiter key, ``''`` for a keyless throttle),
+    ``__fd_bucket__`` (the event's ``bucket_interval`` bucket),
+    ``__fd_ts__`` (arrival order), ``__fd_m__`` (the gate),
+    ``__fd_rule__`` (the first matching rule), ``__fd_cnt__`` (1 for
+    count kind, the byte size for size kind) and ``__fd_didx__`` (the
+    distribution index, 0 = default).
 
-    Full rule parity with the batch path: ``rule_cfgs`` is a list of
-    ``{"limit": int, "dlims": list|None}`` — one per throttle rule,
-    indexed by the precomputed ``rule_col`` (the reference's limiter
-    key embeds the rule index, so each rule owns its own ring).
-    ``cnt_col`` carries the counted value (1 for count kind, byte size
-    for size kind).  ``dlims`` enables limit_distribution with
-    default-reserve STEALING (in_memory_limiter.go getDistrData):
-    ``didx_col`` maps each event to its distribution index (0 =
-    default), and state tracks per-(rule, bucket, didx) usage across
-    micro-batches — the sequential semantics replay inside the keyed
-    state function exactly as they do in the reference's limiter lock.
-    """
-    out_schema = df.schema
-    if rule_cfgs is None:
-        rule_cfgs = [{"limit": int(limit), "dlims": None}]
-    # keyless throttle (no throttle_field): one shared limiter for the
-    # whole stream — batch builds key = lit('') for this
-    # (actions/throttle.py); synthesize the same constant key here
-    # instead of letting groupBy('') fail to resolve
-    if not key_col:
-        key_col = "__fd_nokey__"
-        df = df.withColumn(key_col, F.lit(""))
+    Each (key, rule) owns a sliding ring of ``buckets_count`` buckets
+    (the reference's limiter key embeds the rule index); an event is
+    admitted while its bucket's counted total stays within the rule's
+    limit, and events behind the ring are CLAMPED into the newest
+    bucket and counted there (buckets.go:231-235 rebuildBuckets).
+    ``rule_cfgs`` holds one ``{"limit": int, "dlims": list|None}`` per
+    rule; ``dlims`` enables limit_distribution with default-reserve
+    STEALING (in_memory_limiter.go getDistrData), replayed sequentially
+    per (rule, bucket, distribution) as in the reference's limiter
+    lock.  Idle keys drop their rings after ``limiter_expiration_ms``
+    (throttle.go:129, default 30m) so state stays bounded.
+
+    As in batch, a gated row passes uncounted, and an event without a
+    parseable time counts in one NULL bucket per (key, rule) that is
+    outside the ring: never clamped, never evicted (until the key
+    expires).  One difference from batch: the ring's horizon is the
+    newest bucket seen per (key, rule) so far, where batch clamps
+    against the newest event time of the whole frame.
+
+    Checkpoint compatibility: the grouping key is the string column
+    ``__fd_key__``; it was the ``throttle_field`` column itself (or
+    ``__fd_nokey__``).  A checkpoint written before the rename resumes
+    when the key was a string (the key's column name is not validated);
+    one keyed on a non-string field changes the key type — use a NEW
+    checkpoint dir.  ``bucket_ids`` may now hold NULL (the NULL bucket)."""
+    data_cols, out_schema = _data_schema(df)
     # rings serialized as parallel arrays (rule, bucket, didx) -> used
     state_schema = (
         "rules array<long>, bucket_ids array<long>, "
         "didx array<long>, used array<long>"
     )
-    # helper columns (__fd_*: staged rule/count/distribution indexes,
-    # the synthetic keyless key, the caller's pre-parsed timestamp)
-    # never appear in the output
-    data_cols = [
-        f.name
-        for f in df.schema.fields
-        if f.name not in (rule_col, cnt_col, didx_col)
-        and not f.name.startswith("__fd_")
-    ]
-    out_schema = df.select(*data_cols).schema
 
     def fn(
         key: tuple, frames: Iterator[pd.DataFrame], state: GroupState
@@ -307,44 +307,35 @@ def throttle_stream(
         pdf = _concat_frames(frames)
         if not len(pdf):
             return
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
-        if state.exists:
-            rules, bucket_ids, didx, used = state.get
-            ring: dict[tuple, int] = dict(
-                zip(zip(rules, bucket_ids, didx), used)
-            )
-        else:
-            ring = {}
+        pdf = pdf.sort_values("__fd_ts__", kind="mergesort")
+        ring: dict[tuple, int] = (
+            dict(zip(zip(*state.get[:3]), state.get[3])) if state.exists else {}
+        )
         # per-rule newest bucket (each rule owns its own ring horizon)
         max_bucket: dict[int, int] = {}
         for r, b, _ in ring:
-            max_bucket[r] = max(max_bucket.get(r, -1), b)
-        rule_series = (
-            pdf[rule_col].astype(int) if rule_col else pd.Series(0, index=pdf.index)
-        )
-        cnt_series = (
-            pdf[cnt_col].astype(int) if cnt_col else pd.Series(1, index=pdf.index)
-        )
-        didx_series = (
-            pdf[didx_col].astype(int) if didx_col else pd.Series(-1, index=pdf.index)
-        )
-        keep_mask = []
-        for ts, r, cnt, di in zip(
-            pd.to_datetime(pdf[ts_col]), rule_series, cnt_series, didx_series
+            if b is not None:
+                max_bucket[r] = max(max_bucket.get(r, b), b)
+        keep = []
+        for m, b, r, cnt, di in zip(
+            pdf["__fd_m__"], pdf["__fd_bucket__"], pdf["__fd_rule__"],
+            pdf["__fd_cnt__"], pdf["__fd_didx__"],
         ):
-            cfg = rule_cfgs[r]
-            lim, dlims = cfg["limit"], cfg.get("dlims")
-            if lim < 0:
-                keep_mask.append(True)  # negative limit = unlimited
+            lim, dlims = rule_cfgs[r]["limit"], rule_cfgs[r]["dlims"]
+            if not m or lim < 0:
+                keep.append(True)  # gated, or a negative limit = unlimited
                 continue
-            b = int(ts.timestamp()) // bucket_interval_s
-            max_bucket[r] = max(max_bucket.get(r, -1), b)
-            if b <= max_bucket[r] - buckets_count:
-                b = max_bucket[r]  # ring clamp: count in the latest bucket
+            if pd.isna(b):
+                b = None  # no parseable time: the NULL bucket
+            else:
+                b = int(b)
+                max_bucket[r] = max(max_bucket.get(r, b), b)
+                if b <= max_bucket[r] - buckets_count:
+                    b = max_bucket[r]  # ring clamp: count in the latest bucket
             if dlims is None:
                 n = ring.get((r, b, 0), 0) + cnt
                 ring[(r, b, 0)] = n
-                keep_mask.append(n <= lim)
+                keep.append(n <= lim)
                 continue
             idx, dlim = int(di), dlims[max(int(di), 0)]
             if idx == 0 and ring.get((r, b, 0), 0) + cnt > dlim:
@@ -357,15 +348,14 @@ def throttle_stream(
                         maxdiff, idx, dlim = diff, i, dlims[i]
             n = ring.get((r, b, idx), 0) + cnt
             ring[(r, b, idx)] = n
-            keep_mask.append(n <= dlim)
+            keep.append(n <= dlim)
         # evict buckets that fell out of their rule's ring
-        for k in [
-            (r, b, i)
-            for (r, b, i) in ring
-            if b <= max_bucket.get(r, -1) - buckets_count
-        ]:
-            del ring[k]
-        keys = list(ring.keys())
+        ring = {
+            (r, b, i): n
+            for (r, b, i), n in ring.items()
+            if b is None or b > max_bucket[r] - buckets_count
+        }
+        keys = list(ring)
         state.update(
             (
                 [k[0] for k in keys],
@@ -376,7 +366,7 @@ def throttle_stream(
         )
         if limiter_expiration_ms:
             state.setTimeoutDuration(limiter_expiration_ms)
-        out = pdf[pd.Series(keep_mask, index=pdf.index)]
+        out = pdf[pd.Series(keep, index=pdf.index)]
         if len(out):
             yield out[data_cols]
 
@@ -385,7 +375,7 @@ def throttle_stream(
         if limiter_expiration_ms
         else GroupStateTimeout.NoTimeout
     )
-    return df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy("__fd_key__").applyInPandasWithState(
         fn, out_schema, state_schema, "append", timeout
     )
 
@@ -397,48 +387,41 @@ def throttle_stream(
 
 def cardinality_stream(
     df: DataFrame,
-    key_col: str,
-    value_col: str,
     limit: int,
-    mode: str = "discard",
-    ttl_ms: int = 0,
-    strip_cols: list[str] | None = None,
+    mode: str,
+    ttl_ms: int,
+    strip_cols: list[str],
 ) -> DataFrame:
-    """Streaming cardinality guard: tracks distinct ``value_col`` per
-    key; an event whose key has already accumulated ``limit`` distinct
-    values BEFORE it is discarded / field-stripped / passed — the
-    check runs before the insert and an acted-on event's value is
-    never cached, exactly cardinality.go Do (:259-295; the same
+    """Streaming cardinality guard over the cardinality action's helper
+    columns ``__fd_k__`` (the composite key), ``__fd_v__`` (the
+    composite value) and ``__fd_m__`` (the gate): tracks the distinct
+    values per key; an event whose key has already accumulated
+    ``limit`` distinct values BEFORE it is discarded or field-stripped
+    — the check runs before the insert and an acted-on event's value
+    is never cached, exactly cardinality.go Do (:259-295; the same
     ``distinct_before >= limit`` rule the batch sequential path
-    replays).  With ``ttl_ms`` the per-key set expires after
-    inactivity (the reference's TTL cache — cardinality.go:126-169).
+    replays).  A gated row passes uncounted and unchanged, as in batch.
+    With ``ttl_ms`` the per-key set expires after inactivity (the
+    reference's TTL cache — cardinality.go:126-169).
 
-    ``strip_cols``: the REAL field selectors to null in remove_fields
-    mode (``value_col`` may be a composite helper the caller built
-    from several fields); defaults to ``[value_col]``.  Selectors are
-    dot-paths with the batch path's ``\\.`` escaping — a nested
-    selector (``meta.trace``) nulls the LEAF inside the struct dict,
-    matching batch set_field, instead of planting a bogus top-level
-    key that the output projection would silently drop (the field
-    would survive unstripped).  A selector whose path doesn't resolve
-    in the record is a no-op, like batch's when-over-null on an
-    absent column.  Caller-built ``__fd_*`` helper columns (composite
-    key/value) never appear in the output.
+    ``strip_cols``: the field selectors to null in remove_fields mode.
+    Selectors are dot-paths with the batch path's ``\\.`` escaping — a
+    nested selector (``meta.trace``) nulls the LEAF inside the struct
+    dict, matching batch set_field.  A selector whose path doesn't
+    resolve in the record is a no-op, like batch's when-over-null on
+    an absent column.
 
     Checkpoint compatibility: the state schema narrowed from
     (values, over) to (values) when admission moved to
-    check-before-insert (r10); restarting over a checkpoint written
+    check-before-insert (r10), and the string key column was renamed
+    ``__fd_ck__`` -> ``__fd_k__``; restarting over a checkpoint written
     by the two-field version fails Spark's state-schema validation —
     use a NEW checkpoint dir when upgrading across that boundary."""
     from file_d_spark.fields import parse_selector
 
     state_schema = "values array<string>"
-    data_cols = [
-        f.name for f in df.schema.fields if not f.name.startswith("__fd_")
-    ]
-    out_schema = df.select(*data_cols).schema
-    strip = list(strip_cols) if strip_cols else [value_col]
-    strip_parts = [parse_selector(s) for s in strip]
+    data_cols, out_schema = _data_schema(df)
+    strip_parts = [parse_selector(s) for s in strip_cols]
 
     def _null_leaf(rec: dict, parts: list[str]) -> None:
         node = rec
@@ -462,18 +445,19 @@ def cardinality_stream(
         seen = set(state.get[0]) if state.exists else set()
         out_rows = []
         for rec in pdf.to_dict("records"):
-            v = str(rec.get(value_col))
+            if not rec["__fd_m__"]:
+                pass  # gated: passes uncounted
             # reference order: check the count BEFORE inserting — an
             # event at the limit is acted on even if its own value is
             # already cached, and its value is never inserted
-            if len(seen) >= limit:
+            elif len(seen) >= limit:
                 if mode == "discard":
                     continue
                 if mode == "remove_fields":
                     for parts in strip_parts:
                         _null_leaf(rec, parts)
             else:
-                seen.add(v)
+                seen.add(str(rec["__fd_v__"]))
             out_rows.append(rec)
         # the set can never exceed `limit` (inserts stop at the cap)
         state.update((sorted(seen),))
@@ -485,7 +469,7 @@ def cardinality_stream(
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout if ttl_ms else GroupStateTimeout.NoTimeout
     )
-    return df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy("__fd_k__").applyInPandasWithState(
         fn, out_schema, state_schema, "append", timeout
     )
 
@@ -494,48 +478,62 @@ def cardinality_stream(
 # antispam
 # ---------------------------------------------------------------------------
 
+_UNBAN_ITERATIONS = 4
+
 
 def antispam_stream(
     df: DataFrame,
-    source_col: str,
     threshold: int,
-    maintenance_interval_ms: int = 60_000,
-    unban_iterations: int = 4,
-    seq_col: str | None = None,
+    maintenance_interval_ms: int,
 ) -> DataFrame:
-    """Streaming antispam with the reference's EXACT per-event counter
-    machine (antispammer.go IsSpam :94-190 / Maintenance :192-235):
+    """Streaming antispam over the antispam action's helper columns
+    ``__fd_src__`` (the source), ``__fd_m__`` (the gate),
+    ``__fd_exc__`` (an exception, or a rule with threshold -1),
+    ``__fd_blk__`` (a rule with threshold 0) and ``__fd_thr__`` (the
+    event's threshold: the first matching rule's, else ``threshold``),
+    with the reference's EXACT per-event counter machine (antispammer.go
+    IsSpam :94-190 / Maintenance :192-235):
 
-      * each event increments the source's counter and is dropped iff
-        the post-increment value ``x >= threshold`` — so the first
-        ``threshold - 1`` events of a burst PASS and only the overflow
-        is dropped, even inside one micro-batch;
-      * at ``x == threshold`` the counter jumps to
-        ``unban_iterations * threshold`` (the ban charge);
+      * a gated or excepted event passes uncounted; a blocked event is
+        dropped uncounted;
+      * every other event increments its source's counter and is
+        dropped iff the post-increment value ``x >= __fd_thr__`` — so
+        the first ``threshold - 1`` events of a burst PASS and only the
+        overflow is dropped, even inside one micro-batch;
+      * at ``x == __fd_thr__`` the counter jumps to
+        ``4 * __fd_thr__`` (the ban charge, unban_iterations = 4);
       * every maintenance tick (processing-time timeout) decays the
-        counter by ``threshold`` (floored at 0, capped at the ban
-        charge) — a banned source therefore unbans after
-        ``unban_iterations`` quiet ticks;
+        counter by ``threshold``, capped at ``4 * threshold`` and
+        floored at 0 — a banned source therefore unbans after 4 quiet
+        ticks; a rules-only config (``threshold`` <= 0) has no decay
+        step, so each tick clears the counter;
       * a source whose counter decayed to 0 is DELETED from the state
         store on the next tick (Maintenance's ``x == 0 -> delete``),
         so idle sources cannot accumulate state at high cardinality.
 
-    ``seq_col`` orders events inside a micro-batch (arrival order);
-    without it the pandas frame order is used.  One documented
-    simplification: the reference gates each increment on the
-    inter-event gap being under the maintenance interval (IsSpam's
-    ``diff < maintenanceInterval``); here every event increments —
-    for sources slower than one event per tick the per-tick decay of
-    ``threshold`` dominates either way, so ban outcomes agree.
+    Events are counted in micro-batch order.  Differences from the
+    batch rule, which counts each source's events per
+    ``maintenance_interval`` window of their event time and drops the
+    window's counted events when the count exceeds the threshold: the
+    stream passes the first ``threshold - 1`` events of a burst where
+    batch drops every event of an over-threshold window, and its ticks
+    run on processing time.  A NULL source passes uncounted, as its
+    batch window never meets its own count.  One simplification from
+    the reference: it gates each increment on the inter-event gap being
+    under the maintenance interval (IsSpam's ``diff <
+    maintenanceInterval``); here every event increments — for sources
+    slower than one event per tick the per-tick decay dominates either
+    way, so ban outcomes agree.
 
     Checkpoint compatibility: the state schema changed from
     (count, banned, idle) to a single ``counter`` when the machine
-    was aligned to the reference — use a NEW checkpoint dir when
-    upgrading across that boundary."""
-    out_schema = df.schema
+    was aligned to the reference, and the grouping key is the string
+    column ``__fd_src__`` (it was the ``source_field`` column itself):
+    a checkpoint keyed on a string source resumes, any other needs a
+    NEW checkpoint dir."""
     state_schema = "counter long"
-    data_cols = [f.name for f in df.schema.fields]
-    ban_charge = unban_iterations * threshold
+    data_cols, out_schema = _data_schema(df)
+    ban_charge = _UNBAN_ITERATIONS * threshold
 
     def fn(
         key: tuple, frames: Iterator[pd.DataFrame], state: GroupState
@@ -545,10 +543,9 @@ def antispam_stream(
             if counter == 0:
                 state.remove()  # Maintenance: idle source forgotten
                 return
-            # Maintenance order matters: subtract THEN cap
-            # (antispammer.go:206-224 — x -= threshold; floor 0; cap
-            # at the ban charge)
-            counter = min(max(0, counter - threshold), ban_charge)
+            # antispammer.go:206-224 — x -= threshold; cap at the ban
+            # charge; floor 0
+            counter = max(0, min(counter - threshold, ban_charge))
             state.update((counter,))
             state.setTimeoutDuration(maintenance_interval_ms)
             return
@@ -556,22 +553,30 @@ def antispam_stream(
         pdf = _concat_frames(frames)
         if not len(pdf):
             return
-        if seq_col is not None and seq_col in pdf.columns:
-            pdf = pdf.sort_values(seq_col, kind="mergesort")
         (counter,) = state.get if state.exists else (0,)
         keep = []
-        for _ in range(len(pdf)):
-            counter += 1
-            x = counter
-            if x == threshold:
-                counter = ban_charge  # the ban: pre-charge the decay
-            keep.append(x < threshold)
+        for m, exc, blk, thr in zip(
+            pdf["__fd_m__"], pdf["__fd_exc__"], pdf["__fd_blk__"],
+            pdf["__fd_thr__"],
+        ):
+            if not m or exc:
+                keep.append(True)  # gated or excepted: passes uncounted
+            elif blk:
+                keep.append(False)  # blocked: dropped uncounted
+            elif key[0] is None:
+                keep.append(True)  # a NULL source is never banned
+            else:
+                counter += 1
+                x = counter
+                if x == thr:
+                    counter = _UNBAN_ITERATIONS * int(thr)  # the ban
+                keep.append(x < thr)
         state.update((counter,))
         state.setTimeoutDuration(maintenance_interval_ms)
         out = pdf[pd.Series(keep, index=pdf.index)]
         if len(out):
             yield out[data_cols]
 
-    return df.groupBy(source_col).applyInPandasWithState(
+    return df.groupBy("__fd_src__").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.ProcessingTimeTimeout
     )

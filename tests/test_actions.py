@@ -352,6 +352,23 @@ def test_throttle_size_kind(spark):
     assert out.count() == 3
 
 
+def test_throttle_size_kind_null_field_counts_zero(spark):
+    # a NULL or absent size field weighs 0 bytes: every event fits
+    rows = [("k", f"2024-01-01T00:00:{i:02d}Z", None) for i in range(4)]
+    for size_field in ("payload", "absent"):
+        out = run_actions(
+            spark,
+            rows,
+            "key string, time string, payload string",
+            [{
+                "type": "throttle", "throttle_field": "key",
+                "default_limit": 10, "limit_kind": "size",
+                "limit_size_field": size_field,
+            }],
+        )
+        assert out.count() == 4, size_field
+
+
 def test_throttle_gated_bypass(spark):
     # rows failing the do_if gate bypass the throttle: kept, not counted
     rows = [("k", f"2024-01-01T00:00:{i:02d}Z", "keep" if i % 2 else "skip")

@@ -110,3 +110,96 @@ pipelines:
     assert len(rows(str(tmp_path / "out_alpha"))) == 10
     beta = rows(str(tmp_path / "out_beta"))
     assert len(beta) == 5 and all(r["n"] < 5 for r in beta)
+
+
+def _two_file_input(indir):
+    indir.mkdir()
+    for f in range(2):
+        with open(indir / f"events-{f}.jsonl", "w") as fh:
+            for i in range(5):
+                fh.write(json.dumps({"n": f * 5 + i, "f": f}) + "\n")
+    return {
+        "type": "file", "path": str(indir), "filename_pattern": "*.jsonl",
+        "max_files_per_trigger": 1,
+    }
+
+
+_SETTINGS = {"decoder": "json", "decoder_params": {"schema": "n long, f long"}}
+
+
+def _json_rows(root):
+    rows = []
+    for dirpath, _, names in os.walk(root):
+        for name in names:
+            if name.startswith("part-"):
+                with open(os.path.join(dirpath, name)) as fh:
+                    rows += [json.loads(line) for line in fh if line.strip()]
+    return rows
+
+
+def test_stream_s3_keeps_every_micro_batch(spark, tmp_path):
+    """A stream's s3 output writes each micro-batch to a directory
+    named after its batch id: both micro-batches are kept, and a batch
+    that runs again after a lost commit replaces only its own files."""
+    from file_d_spark import Pipeline
+
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    p = Pipeline.from_dict({
+        "settings": _SETTINGS,
+        "input": _two_file_input(tmp_path / "in"),
+        "output": {"type": "s3", "path": str(out)},
+    })
+    p.run_stream(spark, checkpoint_dir=str(ckpt)).awaitTermination(120)
+    assert sorted(r["n"] for r in _json_rows(out)) == list(range(10))
+    assert sorted(os.listdir(out)) == ["0", "1"]
+
+    # lose the last commit: the restart runs batch 1 again
+    os.remove(ckpt / "commits" / "1")
+    q = p.run_stream(spark, checkpoint_dir=str(ckpt))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert (ckpt / "commits" / "1").exists()
+    assert sorted(r["n"] for r in _json_rows(out)) == list(range(10))
+
+
+def test_stream_file_sink_partitioned_compressed(spark, tmp_path):
+    """The native stream file sink honours ``partition_by`` and
+    ``compression`` like the batch file output, and refuses the
+    batch-only ``retention_interval`` and ``compression_type``."""
+    import pytest
+
+    from file_d_spark import Pipeline
+
+    source = _two_file_input(tmp_path / "in")
+
+    def pipeline(**output):
+        return Pipeline.from_dict({
+            "settings": _SETTINGS,
+            "input": source,
+            "output": {
+                "type": "file", "format": "json", "partition_by": ["f"],
+                "compression": "gzip", **output,
+            },
+        })
+
+    stream_out, batch_out = tmp_path / "stream", tmp_path / "batch"
+    p = pipeline(path=str(stream_out))
+    p.run_stream(spark, checkpoint_dir=str(tmp_path / "ckpt")).awaitTermination(120)
+    b = pipeline(path=str(batch_out))
+    b.write(b.run_batch(spark))
+
+    def read(path):
+        return sorted(tuple(r) for r in spark.read.json(str(path)).select("n", "f").collect())
+
+    assert read(stream_out) == read(batch_out) == [(n, n // 5) for n in range(10)]
+    parts = [
+        name for d in ("f=0", "f=1") for name in os.listdir(stream_out / d)
+        if name.startswith("part-")
+    ]
+    assert parts and all(name.endswith(".json.gz") for name in parts)
+
+    for key, value in (("retention_interval", "1h"), ("compression_type", "zip")):
+        with pytest.raises(ValueError, match=key):
+            pipeline(path=str(tmp_path / key), **{key: value}).run_stream(
+                spark, checkpoint_dir=str(tmp_path / f"ckpt_{key}")
+            )

@@ -118,30 +118,39 @@ def test_multiline_join_stream(spark, stream_reader):
     assert got[("b", 1)] == " orphan-cont"
 
 
-def test_throttle_stream(spark, stream_reader):
-    from file_d_spark.streaming import throttle_stream
+def _apply(df, *actions):
+    from file_d_spark import Pipeline
 
+    return Pipeline.from_dict({"actions": list(actions)}).apply(df)
+
+
+def test_throttle_stream(spark, stream_reader):
     rows = [
         {"k": "x", "ts": f"2024-01-01T00:00:{i:02d}.000Z", "n": i} for i in range(10)
     ] + [{"k": "y", "ts": "2024-01-01T00:00:30.000Z", "n": 100}]
     df = stream_reader(rows, "k string, ts timestamp, n long")
-    out = throttle_stream(
-        df, key_col="k", ts_col="ts", bucket_interval_s=60, buckets_count=10, limit=3
-    )
+    out = _apply(df, {
+        "type": "throttle", "throttle_field": "k", "time_field": "ts",
+        "bucket_interval": "1m", "buckets_count": 10, "default_limit": 3,
+    })
     _run_stream(out, "thr", want_rows=4, quiesce=True)
     got = spark.sql("SELECT k, count(*) c FROM thr GROUP BY k").collect()
     counts = {r.k: r.c for r in got}
     assert counts == {"x": 3, "y": 1}
 
 
-def test_cardinality_stream(spark, stream_reader):
-    from file_d_spark.streaming import cardinality_stream
+_CARDINALITY = {
+    "type": "cardinality", "key": "tenant", "fields": ["trace"],
+    "action": "discard",
+}
 
+
+def test_cardinality_stream(spark, stream_reader):
     rows = [{"tenant": "t1", "trace": f"tr{i}", "i": i} for i in range(6)] + [
         {"tenant": "t2", "trace": "tr0", "i": 99}
     ]
     df = stream_reader(rows, "tenant string, trace string, i long")
-    out = cardinality_stream(df, "tenant", "trace", limit=3, mode="discard")
+    out = _apply(df, {**_CARDINALITY, "limit": 3})
     _run_stream(out, "card", want_rows=4)
     got = spark.sql("SELECT tenant, count(*) c FROM card GROUP BY tenant").collect()
     counts = {r.tenant: r.c for r in got}
@@ -187,16 +196,14 @@ def test_windowed_agg_with_watermark(spark, stream_reader):
 
 
 def test_antispam_stream(spark, stream_reader):
-    from file_d_spark.streaming import antispam_stream
-
     rows = [{"source": "spammy", "i": i} for i in range(20)] + [
         {"source": "quiet", "i": 1}
     ]
     df = stream_reader(rows, "source string, i long")
-    out = antispam_stream(
-        df, "source", threshold=10, maintenance_interval_ms=60_000,
-        seq_col="i",
-    )
+    out = _apply(df, {
+        "type": "antispam", "source_field": "source", "threshold": 10,
+        "maintenance_interval": "1m",
+    })
     _run_stream(out, "anti", want_rows=10)
     got = {
         (r.source, r.i)
@@ -210,13 +217,11 @@ def test_antispam_stream(spark, stream_reader):
 
 
 def test_antispam_stream_idle_unban(spark, tmp_path):
-    """A banned source that goes quiet for ``unban_idle_ticks``
-    maintenance ticks is unbanned (reference antispammer.go:24-120:
-    counter decays each maintenance cycle; 4 idle cycles -> unban)."""
+    """A banned source that goes quiet for 4 maintenance ticks is
+    unbanned (reference antispammer.go:24-120: counter decays each
+    maintenance cycle; 4 idle cycles -> unban)."""
     import json
     import time
-
-    from file_d_spark.streaming import antispam_stream
 
     src = tmp_path / "in"
     src.mkdir()
@@ -227,10 +232,10 @@ def test_antispam_stream_idle_unban(spark, tmp_path):
         tmp.rename(src / name)  # atomic: the reader never sees partials
 
     sdf = spark.readStream.schema("source string, i long").json(str(src))
-    out = antispam_stream(
-        sdf, "source", threshold=3,
-        maintenance_interval_ms=1500, unban_iterations=2, seq_col="i",
-    )
+    out = _apply(sdf, {
+        "type": "antispam", "source_field": "source", "threshold": 3,
+        "maintenance_interval": "1s",
+    })
     q = (
         out.writeStream.format("memory")
         .queryName("unban")
@@ -246,7 +251,7 @@ def test_antispam_stream_idle_unban(spark, tmp_path):
         # probe in rounds: heartbeats from another source keep
         # micro-batches (and thus state-timeout processing) running
         # while spammy stays idle, then spammy returns.  A probe that
-        # lands BEFORE 2 idle ticks were processed is suppressed AND
+        # lands BEFORE 4 idle ticks were processed is suppressed AND
         # resets the idle counter (activity resets decay, like the
         # reference), so on a lagging host we idle again and re-probe
         # with a fresh i rather than flaking on one-shot timing.
@@ -483,15 +488,13 @@ def test_cardinality_stream_at_limit_cached_value(spark, stream_reader):
     BEFORE the insert, so once `limit` distinct values accumulated, an
     event is acted on EVEN IF its own value is already cached — the
     batch sequential path's exact rule."""
-    from file_d_spark.streaming import cardinality_stream
-
     rows = [
         {"tenant": "t", "trace": "A", "i": 0},
         {"tenant": "t", "trace": "B", "i": 1},
         {"tenant": "t", "trace": "A", "i": 2},  # cached value, at limit
     ]
     df = stream_reader(rows, "tenant string, trace string, i long")
-    out = cardinality_stream(df, "tenant", "trace", limit=2, mode="discard")
+    out = _apply(df, {**_CARDINALITY, "limit": 2})
     _run_stream(out, "card_at_limit", want_rows=2)
     got = sorted(r.i for r in spark.sql("SELECT i FROM card_at_limit").collect())
     assert got == [0, 1], f"cached-value event at the limit admitted: {got}"
@@ -538,7 +541,7 @@ def test_cardinality_stream_multi_key_multi_field(spark, stream_reader):
     assert set(got) == {0, 1, 2, 3}
     assert got[0].f1 == "1" and got[1].f2 == "2" and got[2].f1 == "9"
     assert got[3].f1 is None and got[3].f2 is None  # BOTH fields stripped
-    assert "__fd_ck__" not in got[0].asDict()  # helpers dropped
+    assert not [c for c in got[0].asDict() if c.startswith("__fd_")]
 
 
 def test_cardinality_stream_strips_nested_selector(spark, stream_reader):
@@ -643,43 +646,162 @@ def test_multiline_stream_max_event_size_and_missing_source(spark, stream_reader
     assert "source_id" not in cols  # synthetic key dropped from output
 
 
-def test_cardinality_batch_stream_parity(spark, stream_reader):
-    """With the r10 check-before-insert fix the streaming cardinality
-    admission equals the batch SEQUENTIAL path (order_fields) over the
-    same rows — one rule, two execution modes."""
+_PARITY_SCHEMA = "src string, time string, lvl string, msg string, i long"
+_NOT_DEBUG = {
+    "op": "not",
+    "operands": [{"op": "equal", "field": "lvl", "values": ["debug"]}],
+}
+
+
+def _ev(i, src="a", lvl="info", msg="req", time="auto"):
+    ev = {"src": src, "lvl": lvl, "msg": msg, "i": i}
+    if time is not None:
+        ev["time"] = f"2024-01-01T00:00:{i:02d}Z" if time == "auto" else time
+    return ev
+
+
+_ANTISPAM = {
+    "type": "antispam", "source_field": "src", "time_field": "time",
+    "maintenance_interval": "10m",
+}
+
+# case -> (pipeline keys, input files (one per trigger), antispam
+# relation or None).  None: the stream keeps exactly what batch keeps.
+# An antispam relation lists each source's counted events in arrival
+# order with their threshold, and the blocked events.
+_PARITY = {
+    "cardinality": (
+        {"actions": [{
+            "type": "cardinality", "key": ["src"], "fields": ["msg"],
+            "limit": 3, "action": "discard", "order_fields": ["i"],
+        }]},
+        [[_ev(i, msg=f"tr{i % 4}") for i in range(6)],
+         [_ev(i, msg=f"tr{i % 4}") for i in range(6, 12)]],
+        None,
+    ),
+    "gated_throttle": (
+        {"actions": [{
+            "type": "throttle", "throttle_field": "src",
+            "bucket_interval": "1m", "default_limit": 2, "do_if": _NOT_DEBUG,
+        }]},
+        [[_ev(0), _ev(1), _ev(2, lvl="debug"), _ev(3)],
+         [_ev(4), _ev(5, lvl="debug"), _ev(6, src="b")]],
+        None,
+    ),
+    "gated_cardinality": (
+        {"actions": [{
+            "type": "cardinality", "key": "src", "fields": ["msg"],
+            "limit": 2, "action": "discard", "order_fields": ["i"],
+            "do_if": _NOT_DEBUG,
+        }]},
+        [[_ev(0, msg="t0"), _ev(1, lvl="debug", msg="t9"), _ev(2, msg="t1")],
+         [_ev(3, msg="t2"), _ev(4, lvl="debug", msg="t8"), _ev(5, msg="t0"),
+          _ev(6, src="b", msg="t0")]],
+        None,
+    ),
+    "gated_antispam": (
+        {"actions": [{**_ANTISPAM, "threshold": 3, "do_if": _NOT_DEBUG}]},
+        [[_ev(0), _ev(1), _ev(2), _ev(3, lvl="debug")],
+         [_ev(4), _ev(5), _ev(6, lvl="debug"), _ev(7, src="b"), _ev(8, src="b")]],
+        {"counted": [([0, 1, 2, 4, 5], 3), ([7, 8], 3)], "blocked": []},
+    ),
+    "antispam_rules": (
+        {"actions": [{**_ANTISPAM, "threshold": 5, "rules": [
+            {"name": "strict", "threshold": 2,
+             "do_if": {"op": "equal", "field": "src", "values": ["a"]}},
+            {"name": "free", "threshold": -1,
+             "do_if": {"op": "equal", "field": "lvl", "values": ["audit"]}},
+            {"name": "block", "threshold": 0,
+             "do_if": {"op": "equal", "field": "lvl", "values": ["spam"]}},
+        ]}]},
+        [[_ev(0), _ev(1), _ev(2, src="c", lvl="audit"),
+          _ev(3, src="c", lvl="spam"), _ev(4, src="b")],
+         [_ev(5), _ev(6, src="b"), _ev(7, src="c", lvl="audit"),
+          _ev(8, src="c", lvl="spam"), _ev(9, src="b")]],
+        {"counted": [([0, 1, 5], 2), ([4, 6, 9], 5)], "blocked": [3, 8]},
+    ),
+    "antispam_exceptions": (
+        {"actions": [{**_ANTISPAM, "threshold": 2, "exceptions": [
+            {"name": "hc", "cond": "or",
+             "rules": [{"mode": "contains", "values": ["healthcheck"]}]},
+        ]}]},
+        [[_ev(0), _ev(1, msg="healthcheck"), _ev(2)],
+         [_ev(3), _ev(4, msg="healthcheck"), _ev(5, src="b")]],
+        {"counted": [([0, 2, 3], 2), ([5], 2)], "blocked": []},
+    ),
+    # keyed on the input's _source_name (one source per file) without
+    # meta; threshold 1/s x the default 5 s interval = 5 per window
+    "settings_antispam_no_meta": (
+        {"settings": {"antispam_threshold": 1}},
+        [[_ev(i) for i in range(8)], [_ev(8), _ev(9)]],
+        {"counted": [(list(range(8)), 5), ([8, 9], 5)], "blocked": []},
+    ),
+    # an event without a time and one with an unparseable time share
+    # the NULL bucket, which the second trigger reads back from state
+    "throttle_no_time": (
+        {"actions": [{
+            "type": "throttle", "throttle_field": "src", "default_limit": 1,
+            "order_fields": ["i"],
+        }]},
+        [[_ev(0), _ev(1, time=None)], [_ev(2, time="garbage"), _ev(3)]],
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_PARITY))
+def test_batch_stream_parity(spark, tmp_path, case):
+    """Prefix consistency (Structured Streaming, SIGMOD 2018): one
+    pipeline over the same files, read as a batch and as a stream with
+    one file per trigger, keeps the same events.  Gated, excepted and
+    blocked events are identical in both.  Antispam differs by design:
+    batch drops every counted event of a source whose window count
+    exceeds its threshold, while the stream's per-event counter passes
+    the first threshold - 1 events of each source and drops the rest —
+    the test checks that relation.  The streams ignore
+    ``order_fields`` and count in arrival order, which is ``i`` order
+    here."""
     from file_d_spark import Pipeline
 
-    rows = [
-        {"tenant": "t", "trace": f"tr{i % 4}", "i": i} for i in range(12)
-    ]
-    cfg = {
-        "type": "cardinality",
-        "key": ["tenant"],
-        "fields": ["trace"],
-        "limit": 3,
-        "action": "discard",
-    }
-    # batch: sequential replay ordered by i
-    bdf = spark.createDataFrame(
-        [(r["tenant"], r["trace"], r["i"]) for r in rows],
-        "tenant string, trace string, i long",
-    )
-    batch_out = sorted(
-        r.i
-        for r in Pipeline.from_dict(
-            {"actions": [{**cfg, "order_fields": ["i"]}]}
-        ).apply(bdf).collect()
-    )
-    # streaming: same rows in arrival order
-    sdf = stream_reader(rows, "tenant string, trace string, i long")
+    keys, files, antispam = _PARITY[case]
+    for n, rows in enumerate(files):
+        _write_jsonl(str(tmp_path), f"part-{n}.jsonl", rows)
+    p = Pipeline.from_dict({
+        "settings": {
+            "decoder": "json",
+            "decoder_params": {"schema": _PARITY_SCHEMA},
+            **keys.get("settings", {}),
+        },
+        "input": {
+            "type": "file", "path": str(tmp_path),
+            "filename_pattern": "*.jsonl", "max_files_per_trigger": 1,
+        },
+        "actions": keys.get("actions", []),
+    })
+    batch = sorted(r.i for r in p.apply(p.read(spark)).collect())
+    if antispam is None:
+        want_batch = want_stream = batch
+    else:
+        counted = [i for ids, _ in antispam["counted"] for i in ids]
+        passed = [
+            r["i"] for rows in files for r in rows
+            if r["i"] not in counted and r["i"] not in antispam["blocked"]
+        ]
+        want_batch = sorted(passed + [
+            i for ids, thr in antispam["counted"] if len(ids) <= thr
+            for i in ids
+        ])
+        want_stream = sorted(passed + [
+            i for ids, thr in antispam["counted"] for i in ids[: thr - 1]
+        ])
+    assert batch == want_batch
+    name = f"parity_{case}"
     _run_stream(
-        Pipeline.from_dict({"actions": [cfg]}).apply(sdf), "card_parity",
-        want_rows=len(batch_out),
+        p.apply(p.read_stream(spark)), name, want_rows=len(want_stream),
+        quiesce=True,
     )
-    stream_out = sorted(
-        r.i for r in spark.sql("SELECT i FROM card_parity").collect()
-    )
-    assert stream_out == batch_out, (stream_out, batch_out)
+    stream = sorted(r.i for r in spark.sql(f"SELECT i FROM {name}").collect())
+    assert stream == want_stream
 
 
 def test_streaming_exports_only_what_actions_import():

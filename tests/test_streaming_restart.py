@@ -7,7 +7,8 @@ covered in test_pipeline_stream; this file covers the state stores.
 Pattern per test: batch 1 -> run until its effect is visible -> stop
 -> drop batch 2 into the source dir -> NEW query, SAME checkpoint +
 sink -> assert the continued-state outcome (which differs observably
-from the state-reset outcome).
+from the state-reset outcome).  Throttle, cardinality and antispam
+run through ``Pipeline.apply``, as a config runs them.
 
 Timer-driven state ops never self-terminate under availableNow (the
 processing-time timeout keeps the query alive), so each drive polls an
@@ -61,6 +62,12 @@ def _drive(out_df, out_dir, ckpt, done, settle_s=1.5, timeout_s=90):
         q.stop()
 
 
+def _apply(df, action):
+    from file_d_spark import Pipeline
+
+    return Pipeline.from_dict({"actions": [action]}).apply(df)
+
+
 def _inputs_processed(q, n):
     return sum(p["numInputRows"] for p in q.recentProgress) >= n
 
@@ -78,17 +85,15 @@ def test_throttle_state_survives_restart(spark, tmp_path, first_manager):
     """from_filecontext: the first leg writes its checkpoint through
     Spark's FileContext-based manager (Spark's own default), the
     restart resumes it under the session's manager — no migration."""
-    from file_d_spark.streaming import throttle_stream
-
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     schema = "k string, ts timestamp, i long"
 
     def make_query():
         df = spark.readStream.schema(schema).json(str(in_dir))
-        return throttle_stream(
-            df, key_col="k", ts_col="ts", bucket_interval_s=60,
-            buckets_count=10, limit=3,
-        )
+        return _apply(df, {
+            "type": "throttle", "throttle_field": "k", "time_field": "ts",
+            "bucket_interval": "1m", "buckets_count": 10, "default_limit": 3,
+        })
 
     # batch 1: exactly the limit — ring for x's bucket is now full
     _write_jsonl(str(in_dir), "b1.jsonl", [
@@ -184,14 +189,15 @@ def test_checkpoint_manager_atomic_contract(spark, tmp_path):
 
 
 def test_cardinality_state_survives_restart(spark, tmp_path):
-    from file_d_spark.streaming import cardinality_stream
-
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     schema = "tenant string, trace string, i long"
 
     def make_query():
         df = spark.readStream.schema(schema).json(str(in_dir))
-        return cardinality_stream(df, "tenant", "trace", limit=3, mode="discard")
+        return _apply(df, {
+            "type": "cardinality", "key": "tenant", "fields": ["trace"],
+            "limit": 3, "action": "discard",
+        })
 
     # batch 1: exactly limit distinct traces — all admitted
     _write_jsonl(str(in_dir), "b1.jsonl", [
@@ -222,8 +228,6 @@ def test_cardinality_state_survives_restart(spark, tmp_path):
 
 
 def test_antispam_ban_survives_restart(spark, tmp_path):
-    from file_d_spark.streaming import antispam_stream
-
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     schema = "src string, i long"
 
@@ -231,10 +235,10 @@ def test_antispam_ban_survives_restart(spark, tmp_path):
         df = spark.readStream.schema(schema).json(str(in_dir))
         # long maintenance interval: no tick fires inside the test, so
         # the ban can only disappear via state loss
-        return antispam_stream(
-            df, "src", threshold=5, maintenance_interval_ms=600_000,
-            seq_col="i",
-        )
+        return _apply(df, {
+            "type": "antispam", "source_field": "src", "threshold": 5,
+            "maintenance_interval": "10m",
+        })
 
     # batch 1: s1 bursts past the threshold -> the first threshold-1
     # events pass (reference per-event admission), the ban suppresses
